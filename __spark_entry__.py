@@ -26,7 +26,13 @@ from datasketch_spark.functions.text import (
 from datasketch_spark.operators.ann import brute_force_topk, cosine_pairs
 from datasketch_spark.operators.dedup import dedup_pipeline
 from datasketch_spark.operators.exact import exact_dup_groups
-from datasketch_spark.operators.lsh import bands_table, candidate_pairs, with_signature
+from datasketch_spark.operators.lsh import (
+    bands_table,
+    candidate_pairs,
+    signature_table,
+    with_signature,
+)
+from datasketch_spark.sources.io import spread
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -35,20 +41,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Spread a tiny single-file scan across the cluster before expensive
-    per-row work (optimization guide 2.5, input skew): the driver tables
-    are single small parquet files, so every scan is ONE task and every
-    narrow stage downstream (signature UDF, token-array prep, per-pair
-    scoring) serializes on one core. Round-robin repartition to
-    defaultParallelism — cluster-adaptive, not a local[32] constant; the
-    exchanged bytes are bounded by the (small) input. At 100 TB inputs
-    arrive in thousands of scan partitions and this helper is simply not
-    applied (production operators never repartition unconditionally)."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism)
 
 
 # ---------------------------------------------------------------------------
@@ -109,7 +101,7 @@ def q_word_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q_ngram_jaccard_pairs).
     from datasketch_spark.functions.text import words_col
 
-    d = _spread(_docs(spark, sf_dir)).select(
+    d = spread(_docs(spark, sf_dir)).select(
         "doc_id", "lang", "source", words_col("text").alias("words")
     )
     return prefix_filtered_jaccard_pairs(
@@ -131,7 +123,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Raw (non-distinct) grams: prefix_filtered_jaccard_pairs applies
     # array_distinct itself; the previous outer distinct ran the O(n)
     # hash-dedup twice per doc for the same array.
-    d = _spread(_docs(spark, sf_dir)).select(
+    d = spread(_docs(spark, sf_dir)).select(
         "doc_id",
         "lang",
         "source",
@@ -143,14 +135,14 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _spread(_emb(spark, sf_dir))
+    emb = spread(_emb(spark, sf_dir))
     return brute_force_topk(emb, emb.where("vec_id < 20"), k=5)
 
 
 def q_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Blocked by label (same quadratic-taming pattern as the jaccard pair
     # queries); the unblocked approximate path is simhash_bucketed_pairs.
-    return cosine_pairs(_spread(_emb(spark, sf_dir)), min_sim=0.4, block_col="label")
+    return cosine_pairs(spread(_emb(spark, sf_dir)), min_sim=0.4, block_col="label")
 
 
 # ---------------------------------------------------------------------------
@@ -158,18 +150,20 @@ def q_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _spread(_docs(spark, sf_dir)).select(
+def _url_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents as dedup_pipeline input: the original doc_id as url."""
+    return _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("url"), "text"
     )
-    cfg = DedupConfig(threshold=0.5)
-    clusters = dedup_pipeline(docs, cfg)["clusters"]
-    # Internal ids are content-addressed (xxhash64(url)); relabel each
-    # cluster by its min ORIGINAL doc_id so the output is a pure function of
-    # the deterministic sketch math — which makes the full pipeline
-    # (shingle -> splitmix64 -> 128 permutations -> 25x5 banding -> bucket
-    # pairs -> est-Jaccard verify -> connected components) exactly
-    # reproducible by the DuckDB oracle. Same partition, canonical labels.
+
+
+def _min_rep_labels(clusters: DataFrame) -> DataFrame:
+    """(orig_doc_id, cluster_rep): internal ids are content-addressed
+    (xxhash64(url)); relabel each cluster by its min ORIGINAL doc_id so the
+    output is a pure function of the deterministic sketch math — which makes
+    the full pipeline (shingle -> splitmix64 -> 128 permutations -> banding
+    -> bucket pairs -> est-Jaccard verify -> connected components) exactly
+    reproducible by the DuckDB oracle. Same partition, canonical labels."""
     out = clusters.select(
         F.col("url").cast("bigint").alias("orig_doc_id"), "cluster_id"
     )
@@ -179,6 +173,11 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "orig_doc_id", F.min("orig_doc_id").over(w).alias("cluster_rep")
     )
+
+
+def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cfg = DedupConfig(threshold=0.5)
+    return _min_rep_labels(dedup_pipeline(_url_docs(spark, sf_dir), cfg)["clusters"])
 
 
 def q_dedup_with_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -186,29 +185,16 @@ def q_dedup_with_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-substring edges (>= 29-byte match at this k/w) -> connected
     # components -> cluster labels. Both edge sets are individually
     # oracle-proven; the DuckDB twin unions them before the recursive CC.
-    docs = _spread(_docs(spark, sf_dir)).select(
-        F.col("doc_id").cast("string").alias("url"), "text"
-    )
     cfg = DedupConfig(threshold=0.5, substring_k=20, substring_window=10)
-    clusters = dedup_pipeline(docs, cfg, substring_pass=True)["clusters"]
-    out = clusters.select(
-        F.col("url").cast("bigint").alias("orig_doc_id"), "cluster_id"
-    )
-    # Window min instead of groupBy + broadcast join: one exchange, one
-    # pass over the clusters table (the join shape scanned it twice).
-    w = Window.partitionBy("cluster_id")
-    return out.select(
-        "orig_doc_id", F.min("orig_doc_id").over(w).alias("cluster_rep")
-    )
+    stages = dedup_pipeline(_url_docs(spark, sf_dir), cfg, substring_pass=True)
+    return _min_rep_labels(stages["clusters"])
 
 
 def q_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _spread(_docs(spark, sf_dir)).select("doc_id", "text")
     cfg = DedupConfig(threshold=0.5)
     # candidate_pairs consumes the bands twice (hot-bucket histogram +
-    # cold anti-join); without the checkpoint the signature UDF evaluates
-    # once per branch (two ArrowEvalPython nodes in the r6 before-plan).
-    sigs = with_signature(docs, cfg).localCheckpoint(eager=False)
+    # cold anti-join); signature_table evaluates the UDF once for both.
+    sigs = signature_table(_docs(spark, sf_dir), cfg)
     return candidate_pairs(bands_table(sigs, cfg), cfg)
 
 
@@ -222,7 +208,7 @@ def q_substring_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # separate rows-only query (longest-common-substring is not SQL).
     from datasketch_spark.operators.suffix import substring_dedup_edges
 
-    docs = _spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    docs = spread(_docs(spark, sf_dir)).select("doc_id", "text")
     # bucket_cap lifted for the oracle query: the driver corpus is 500 docs,
     # so even a fully-shared boilerplate fingerprint is far below any memory
     # hazard, and the oracle has no cap.
@@ -241,7 +227,7 @@ def q_substring_match_len(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the two formulations agree exactly.
     from datasketch_spark.operators.suffix import substring_dedup_edges
 
-    docs = _spread(_docs(spark, sf_dir)).select("doc_id", "text")
+    docs = spread(_docs(spark, sf_dir)).select("doc_id", "text")
     return substring_dedup_edges(docs, k=20, w=10, bucket_cap=100_000)
 
 
@@ -255,7 +241,7 @@ def q_hll_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hash-match a DuckDB oracle.
     from datasketch_spark.operators.hll import hll_count_reference, md5_hash32_col
 
-    words = _spread(_docs(spark, sf_dir)).select(
+    words = spread(_docs(spark, sf_dir)).select(
         F.explode(distinct_words_col("text")).alias("word")
     )
     est = hll_count_reference(words, "word", p=8, hash32=md5_hash32_col("word"))
@@ -271,21 +257,15 @@ def q_lsh_query_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Token hash = md5-based 32-bit (same as the HLL oracle hash) so the
     # whole path — token hash, 128 permutations, banding, bucket join,
     # per-query candidate union — has an exact DuckDB twin.
-    from datasketch_spark.functions.minhash import make_signature_from_tokens_udf
-    from datasketch_spark.operators.lsh import bands_table, lsh_query
+    from datasketch_spark.operators.lsh import lsh_query
 
-    docs = _spread(_docs(spark, sf_dir))
     tok = F.transform(
         distinct_words_col("text"),
         lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long"),
     )
-    udf = make_signature_from_tokens_udf(128, 1)
-    # Checkpoint: the sig table fans into the index-bands and query-bands
-    # branches; lazy checkpoint = one UDF evaluation instead of two.
-    sigs = docs.select("doc_id", udf(tok).alias("sig")).localCheckpoint(
-        eager=False
-    )
     cfg = DedupConfig(threshold=0.5)
+    # The sig table fans into the index-bands and query-bands branches.
+    sigs = signature_table(_docs(spark, sf_dir), cfg, tokens=tok)
     index_bands = bands_table(sigs, cfg)
     q_sigs = sigs.where(F.col("doc_id") % 17 == 0).withColumnRenamed(
         "doc_id", "query_id"
@@ -300,47 +280,9 @@ def q_lsh_query_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _word_md5_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sig, set_size): word-set MinHash with md5-based 32-bit
-    token hashes — the DuckDB-computable token hash shared by the
-    lsh_query/ensemble/forest oracle rows."""
-    from datasketch_spark.functions.minhash import make_signature_from_tokens_udf
-
-    docs = _spread(_docs(spark, sf_dir))
-    words = distinct_words_col("text")
-    tok = F.transform(
-        words,
-        lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long"),
-    )
-    udf = make_signature_from_tokens_udf(128, 1)
-    # The sig table fans out into several plan branches (index bands,
-    # query bands, size/selection); the lazy checkpoint makes the UDF
-    # evaluate once instead of once per branch.
-    return docs.select(
-        "doc_id", udf(tok).alias("sig"), F.size(words).alias("set_size")
-    ).localCheckpoint(eager=False)
-
-
 # Fixed distinct-5-gram-count partition bounds for the ensemble row
 # (literals, so the DuckDB twin sees the same bounds).
 _ENSEMBLE_PARTS = [(1, 250), (251, 350), (351, 450), (451, 1_000_000)]
-
-
-def _shingle_sigs_with_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sig, set_size): the engine's standard shingle MinHash
-    (fast splitmix path — same sig the lsh_candidates oracle reproduces)
-    plus the distinct-shingle count. Lazily checkpointed: the sig table
-    fans out into several plan branches."""
-    from datasketch_spark.operators.lsh import with_signature
-
-    docs = _spread(_docs(spark, sf_dir)).select("doc_id", "text")
-    cfg = DedupConfig(threshold=0.5)
-    set_size = F.size(F.array_distinct(char_ngrams_col(F.col("text"), 5)))
-    return (
-        with_signature(docs, cfg)
-        .select("doc_id", "sig", set_size.alias("set_size"))
-        .localCheckpoint(eager=False)
-    )
 
 
 def q_ensemble_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -355,7 +297,11 @@ def q_ensemble_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensemble_bands,
     )
 
-    sigs = _shingle_sigs_with_size(spark, sf_dir)
+    # Standard shingle MinHash (the sig the lsh_candidates oracle
+    # reproduces) plus the distinct-5-gram count.
+    sigs = signature_table(
+        _docs(spark, sf_dir), DedupConfig(threshold=0.5), with_size=True
+    )
     ecfg = EnsembleConfig(threshold=0.8, num_perm=128, num_part=4, m=8)
     bands = ensemble_bands(sigs, ecfg, _ENSEMBLE_PARTS)
     queries = sigs.where(F.col("doc_id") % 23 == 0).select(
@@ -383,15 +329,8 @@ def q_forest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         topk_query,
     )
 
-    # Size-free sig table: the forest ranking never uses set_size, and
-    # _shingle_sigs_with_size would compute the distinct-5-gram count
-    # (an O(len) array_distinct per doc) just to checkpoint-and-drop it.
-    docs = _spread(_docs(spark, sf_dir)).select("doc_id", "text")
-    sigs = (
-        with_signature(docs, DedupConfig(threshold=0.5))
-        .select("doc_id", "sig")
-        .localCheckpoint(eager=False)
-    )
+    # Size-free sig table: the forest ranking never uses set_size.
+    sigs = signature_table(_docs(spark, sf_dir), DedupConfig(threshold=0.5))
     fcfg = ForestConfig(num_perm=128, l_trees=8)
     prefixes = prefix_table(sigs, fcfg)
     queries = sigs.where(F.col("doc_id") % 29 == 0).withColumnRenamed(
@@ -400,23 +339,12 @@ def q_forest_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk_query(prefixes, queries, sigs, fcfg, k=5)
 
 
-def q_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Partitioned HNSW ANN (reference hnsw.py), made SELF-CHECKING: the
-    # graph search itself is non-SQL-expressible, but its RECALL against
-    # the exact cosine top-k (which IS SQL — same math as cosine_topk) is
-    # a checkable contract. Per query we emit recall_ok = (>= 4 of the 5
-    # HNSW neighbors are in the exact top-5); the DuckDB twin asserts TRUE
-    # for every query, so the row hash-matches only if HNSW actually
-    # achieves the recall (measured 5/5 exact at sf0.01 and sf0.1; >= 4
-    # absorbs rounding-order near-ties between the two exact rankings).
-    from datasketch_spark.operators.ann import brute_force_topk
-    from datasketch_spark.operators.hnsw import hnsw_topk
-
-    emb = _spread(_emb(spark, sf_dir))
-    q = emb.where("vec_id < 20")
-    h = hnsw_topk(emb, q, k=5, distance="cosine", n_partitions=4).select(
-        "query_id", "neighbor_id"
-    )
+def _recall_ok(
+    approx: DataFrame, emb: DataFrame, q: DataFrame, min_overlap: int
+) -> DataFrame:
+    """(query_id, recall_ok): per query, whether at least ``min_overlap``
+    of the approximate top-5 neighbors are in the exact cosine top-5."""
+    h = approx.select("query_id", "neighbor_id")
     ex = brute_force_topk(emb, q, k=5).select(
         F.col("query_id").alias("_q"), F.col("neighbor_id").alias("_n")
     )
@@ -428,8 +356,25 @@ def q_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         hits.groupBy("query_id")
         .agg(F.count("_n").alias("_overlap"))
-        .select("query_id", (F.col("_overlap") >= 4).alias("recall_ok"))
+        .select("query_id", (F.col("_overlap") >= min_overlap).alias("recall_ok"))
     )
+
+
+def q_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Partitioned HNSW ANN (reference hnsw.py), made SELF-CHECKING: the
+    # graph search itself is non-SQL-expressible, but its RECALL against
+    # the exact cosine top-k (which IS SQL — same math as cosine_topk) is
+    # a checkable contract. Per query we emit recall_ok = (>= 4 of the 5
+    # HNSW neighbors are in the exact top-5); the DuckDB twin asserts TRUE
+    # for every query, so the row hash-matches only if HNSW actually
+    # achieves the recall (measured 5/5 exact at sf0.01 and sf0.1; >= 4
+    # absorbs rounding-order near-ties between the two exact rankings).
+    from datasketch_spark.operators.hnsw import hnsw_topk
+
+    emb = spread(_emb(spark, sf_dir))
+    q = emb.where("vec_id < 20")
+    h = hnsw_topk(emb, q, k=5, distance="cosine", n_partitions=4)
+    return _recall_ok(h, emb, q, min_overlap=4)
 
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -441,26 +386,12 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 16 lists on these near-uniform embeddings measures min overlap 4/5
     # at sf0.01 and 3/5 at sf0.1 — deterministic (hash-ordered centroid
     # training, fixed rounding), so the bar holds exactly.
-    from datasketch_spark.operators.ann import brute_force_topk, ivf_topk
+    from datasketch_spark.operators.ann import ivf_topk
 
-    emb = _spread(_emb(spark, sf_dir))
+    emb = spread(_emb(spark, sf_dir))
     q = emb.where("vec_id < 20")
-    a = ivf_topk(emb, q, k=5, n_lists=16, n_probe=12).select(
-        "query_id", "neighbor_id"
-    )
-    ex = brute_force_topk(emb, q, k=5).select(
-        F.col("query_id").alias("_q"), F.col("neighbor_id").alias("_n")
-    )
-    hits = a.join(
-        F.broadcast(ex),
-        (a["query_id"] == ex["_q"]) & (a["neighbor_id"] == ex["_n"]),
-        "left",
-    )
-    return (
-        hits.groupBy("query_id")
-        .agg(F.count("_n").alias("_overlap"))
-        .select("query_id", (F.col("_overlap") >= 3).alias("recall_ok"))
-    )
+    a = ivf_topk(emb, q, k=5, n_lists=16, n_probe=12)
+    return _recall_ok(a, emb, q, min_overlap=3)
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -476,7 +407,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic. Non-planted pairs top out at cosine ~0.6 << 0.9.
     from datasketch_spark.operators.ann import simhash_bucketed_pairs
 
-    # No _spread here: the per-row work is one batched matmul UDF and the
+    # No spread here: the per-row work is one batched matmul UDF and the
     # base/pert branches would each pay an exchange (measured net loss).
     e = F.col("embedding").cast("array<double>")
     emb = _emb(spark, sf_dir)
@@ -551,9 +482,8 @@ def q_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = DedupConfig(threshold=0.5)
     indexed = _docs(spark, sf_dir).where("doc_id < 250").select("doc_id", "text")
     # The filter build consumes sigs three times (sizing count, shard
-    # build, membership probe); the lazy checkpoint evaluates the
-    # signature UDF once instead of once per consumer.
-    sigs = with_signature(indexed, cfg).localCheckpoint(eager=False)
+    # build, membership probe).
+    sigs = signature_table(indexed, cfg)
     bloom = LSHBloomFilter(sigs, cfg)
     return bloom.mark_candidates(sigs).select(
         "doc_id", F.col("maybe_dup").alias("indexed_hit")
@@ -631,7 +561,8 @@ def q_bbit_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where("length(text) >= 1 AND doc_id < 300")
         .select("doc_id", "text")
     )
-    sigs = with_signature(docs, cfg)
+    # Both pair sides read the one sig table.
+    sigs = signature_table(docs, cfg)
     a = sigs.where("doc_id % 2 = 0").select(
         F.col("doc_id").alias("a"), F.col("sig").alias("_sa")
     )
@@ -677,7 +608,7 @@ def q_media_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_media,
     )
 
-    # No _spread here: 160 rows don't amortize an exchange (measured).
+    # No spread here: 160 rows don't amortize an exchange (measured).
     ids = (
         _docs(spark, sf_dir)
         .select(F.col("doc_id").alias("media_id"))

@@ -23,7 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def _spark():
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
     from datasketch_spark.session import get_spark
 
     return get_spark(
@@ -95,17 +95,16 @@ def run_stages() -> None:
         )
 
     timed("read_only", lambda: noop(docs()))
-    timed("signatures", lambda: noop(lsh.with_signature(docs(), cfg).select("doc_id", "sig")))
+    timed("signatures", lambda: noop(lsh.signature_table(docs(), cfg)))
 
     def bands():
-        sigs = lsh.with_signature(docs(), cfg).select("doc_id", "sig").localCheckpoint(eager=False)
-        return lsh.bands_table(sigs, cfg)
+        return lsh.bands_table(lsh.signature_table(docs(), cfg), cfg)
 
     timed("sig+bands", lambda: noop(bands()))
     timed("sig+bands+pairs", lambda: noop(lsh.candidate_pairs(bands(), cfg)))
 
     def verified():
-        sigs = lsh.with_signature(docs(), cfg).select("doc_id", "sig").localCheckpoint(eager=False)
+        sigs = lsh.signature_table(docs(), cfg)
         bands_df = lsh.bands_table(sigs, cfg)
         pairs = lsh.candidate_pairs(bands_df, cfg).localCheckpoint(eager=False)
         return verify_pairs_est(pairs, sigs, cfg)

@@ -36,10 +36,6 @@ def norm_col(v):
     )
 
 
-def cosine_col(v1, v2):
-    return dot_col(v1, v2) / (norm_col(v1) * norm_col(v2))
-
-
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -136,34 +132,6 @@ def cosine_pairs(
 def random_hyperplanes(dim: int, n_bits: int, seed: int = 1) -> np.ndarray:
     rng = np.random.RandomState(seed)
     return rng.normal(size=(n_bits, dim)).astype(np.float64)
-
-
-def simhash_signature_col(vec_col: str, planes: np.ndarray):
-    """Cosine-LSH bit signature as a native expression: sign of dot with
-    each hyperplane, packed into a bigint (n_bits <= 63).
-
-    Plan-size warning: this inlines n_bits x dim float literals into the
-    expression tree — fine for toy dims, Catalyst-hostile at embedding
-    dims (768 x 16 x n_tables literals). The scale path is
-    ``make_simhash_bands_udf`` (one Arrow matmul)."""
-    n_bits = planes.shape[0]
-    bit_terms = []
-    for i in range(n_bits):
-        row = planes[i]
-        dot = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                F.array(*[F.lit(float(x)) for x in row]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bit_terms.append(F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bit_terms[0]
-    for t in bit_terms[1:]:
-        out = out + t
-    return out.cast("long")
 
 
 def make_simhash_bands_udf(dim: int, n_bits: int, n_tables: int, seed: int = 1):

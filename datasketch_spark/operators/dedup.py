@@ -28,7 +28,7 @@ from datasketch_spark.operators.verify import (
     verify_pairs_est,
     verify_pairs_exact_text,
 )
-from datasketch_spark.sources.io import CheckpointManager, NoopCheckpoints
+from datasketch_spark.sources.io import CheckpointManager, NoopCheckpoints, spread
 
 
 def assign_doc_ids(pages: DataFrame, key_col: str = "url") -> DataFrame:
@@ -37,9 +37,9 @@ def assign_doc_ids(pages: DataFrame, key_col: str = "url") -> DataFrame:
     Content-addressed ids (not row_number) keep ids stable across cluster
     sizes and partial re-runs — required for the cross-parallelism
     stability invariant. Collision probability at 10^12 docs over 64 bits
-    is ~3%-birthday-level for the whole corpus but vanishing per pair; for
-    strictness, a collision check (groupBy id, count>1) is part of the
-    metrics stage.
+    is ~3%-birthday-level for the whole corpus but vanishing per pair.
+    Nothing checks for collisions yet: two urls with the same doc_id are
+    silently treated as one document downstream.
     """
     return pages.withColumn("doc_id", F.xxhash64(F.col(key_col)))
 
@@ -68,8 +68,11 @@ def dedup_pipeline(
     cfg = cfg or DedupConfig()
     ckpt = checkpoints or NoopCheckpoints()
 
-    docs = assign_doc_ids(pages, key_col).select(
-        "doc_id", F.col(key_col).alias("url"), F.col(text_col).alias("text")
+    # Spread once here so the substring pass shares the spread input.
+    docs = spread(
+        assign_doc_ids(pages, key_col).select(
+            "doc_id", F.col(key_col).alias("url"), F.col(text_col).alias("text")
+        )
     )
 
     # Signatures are the only stage worth materializing mid-pipeline: they
@@ -77,8 +80,7 @@ def dedup_pipeline(
     # output. bands/cand_pairs are cheap projections that flow straight
     # into the next shuffle — materializing them would only add I/O. With a
     # persistent CheckpointManager they are still written for resume.
-    sigs = lsh.with_signature(docs, cfg, text_col="text")
-    sigs = ckpt.materialize(sigs.select("doc_id", "sig"), "signatures")
+    sigs = lsh.signature_table(docs, cfg, checkpoints=ckpt)
 
     bands = lsh.bands_table(sigs, cfg)
     if ckpt.enabled:

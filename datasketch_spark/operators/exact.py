@@ -26,13 +26,3 @@ def exact_dup_groups(
             F.array_sort(F.collect_list(key_col)).alias("doc_ids"),
         )
     )
-
-
-def exact_dedup(
-    docs: DataFrame, key_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Keep one representative (min key) per distinct normalized content."""
-    canon = exact_dup_groups(docs, key_col, text_col).select(
-        F.col("canonical_id").alias(key_col)
-    )
-    return docs.join(canon, key_col, "left_semi")

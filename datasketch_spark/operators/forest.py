@@ -201,10 +201,12 @@ def topk_query(
     zip_with slot-equality array feeds both best_depth and est_jaccard),
     keep the round's depth band, and retire queries holding >= k verified
     candidates via an anti-join folded into the NEXT round's probe build —
-    no separate emptiness/count job per round. Rounds materialize
-    EAGERLY via ``localCheckpoint`` — len(schedule) (default 3) small
-    jobs, lineage truncated, so this call runs Spark jobs instead of
-    returning a fully lazy plan. Local checkpoints pin blocks to
+    no separate emptiness/count job per round. Rounds materialize via a
+    LAZY ``localCheckpoint(eager=False)``, lineage truncated; under AQE
+    requesting each round's RDD still runs its shuffle stages, so this
+    call runs Spark jobs instead of returning a fully lazy plan (the
+    round's final result stage folds into the next consuming job).
+    Local checkpoints pin blocks to
     executors and are NOT fault-tolerant: on a real cluster an executor
     loss mid-query (or before the result is consumed) is unrecoverable.
     Set ``reliable_checkpoint=True`` to use ``DataFrame.checkpoint``

@@ -39,12 +39,6 @@ def hll_estimate(sketch_col: Column | str) -> Column:
     return F.hll_sketch_estimate(sketch_col)
 
 
-def hll_merge(s1: Column | str, s2: Column | str) -> Column:
-    """Pairwise union of sketch states (reference ``merge``/``union`` =
-    elementwise register max, ``hyperloglog.py:170-183``)."""
-    return F.hll_union(s1, s2)
-
-
 def hll_merge_agg(sketch_col: Column | str) -> Column:
     """Aggregate-union of many sketch states."""
     return F.hll_union_agg(sketch_col)
@@ -197,13 +191,3 @@ def hll_count_reference(
         .otherwise(F.lit(-float(1 << 32)) * F.log(F.lit(1.0) - e / F.lit(float(1 << 32))))
     )
     return stats.select(estimate.alias("hll_estimate"))
-
-
-def distinct_per_group(
-    df: DataFrame, group_cols: list[str], value_col: str, p: int = 14
-) -> DataFrame:
-    """groupBy + HLL++ estimate — the standard 'distinct tokens per shard'
-    pipeline metric."""
-    return df.groupBy(*group_cols).agg(
-        approx_distinct(value_col, p).alias("approx_distinct")
-    )

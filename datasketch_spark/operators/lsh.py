@@ -17,19 +17,25 @@ Reference semantics reproduced:
   - ``MinHashLSH.get_counts`` (``lsh.py:560-589``) -> bucket histogram
     groupBy; feeds the bucket cap (our skew-handling addition).
 
-Everything in this module is pure DataFrame API — whole-stage codegen,
-no Python UDFs.
+Everything in this module past the signature UDF (``with_signature`` /
+``signature_table``) is pure DataFrame API — whole-stage codegen, no
+Python UDFs.
 """
 
 from __future__ import annotations
 
 from weakref import WeakKeyDictionary
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datasketch_spark.config import DedupConfig
-from datasketch_spark.functions.minhash import make_signature_udf
+from datasketch_spark.functions.minhash import (
+    make_signature_from_tokens_udf,
+    make_signature_udf,
+)
+from datasketch_spark.functions.text import char_ngrams_col
+from datasketch_spark.sources.io import CheckpointManager, NoopCheckpoints, spread
 
 
 def with_signature(
@@ -38,6 +44,55 @@ def with_signature(
     """Attach the MinHash signature column (the single pandas-UDF stage)."""
     udf = make_signature_udf(cfg.num_perm, cfg.seed, cfg.shingle_k, cfg.hash_mode)
     return df.withColumn(sig_col, udf(F.col(text_col)))
+
+
+def signature_table(
+    df: DataFrame,
+    cfg: DedupConfig,
+    tokens: Column | None = None,
+    with_size: bool = False,
+    checkpoints: CheckpointManager | None = None,
+) -> DataFrame:
+    """(doc_id, sig[, set_size]) over ``df``'s ``doc_id``/``text`` columns,
+    with the signature UDF evaluated once however many plan branches
+    consume the table (bands + verify, index + query bands, ...).
+
+    ``df`` is first ``spread`` (a no-op unless it scans narrower than
+    ``defaultParallelism``). ``tokens`` (array<bigint> of token hashes)
+    signs those tokens instead of the text's shingles. ``with_size`` adds
+    ``set_size``: the distinct ``cfg.shingle_k``-shingle count of the text
+    (the distinct token count when ``tokens`` is given). ``checkpoints``
+    materializes the table as its ``signatures`` stage; the default
+    ``NoopCheckpoints`` is a lazy local checkpoint.
+    """
+    df = spread(df)
+    if tokens is None:
+        sigs = with_signature(df, cfg)
+        members = F.array_distinct(char_ngrams_col(F.col("text"), cfg.shingle_k))
+    else:
+        udf = make_signature_from_tokens_udf(cfg.num_perm, cfg.seed)
+        sigs = df.withColumn("sig", udf(tokens))
+        members = F.array_distinct(tokens)
+    cols = ["doc_id", "sig"] + ([F.size(members).alias("set_size")] if with_size else [])
+    ckpt = checkpoints or NoopCheckpoints()
+    return ckpt.materialize(sigs.select(*cols), "signatures")
+
+
+def pairs_expr(
+    ids_col: str, pair=lambda x, y: F.struct(x.alias("a"), y.alias("b"))
+) -> Column:
+    """array of ``pair(ids[i], ids[j])`` for every i < j — the within-bucket
+    pair expansion, natively (nested ``transform`` over ``slice``). With
+    ``ids`` sorted, the default (a, b) structs have a < b."""
+    return F.flatten(
+        F.transform(
+            ids_col,
+            lambda x, i: F.transform(
+                F.slice(F.col(ids_col), i + 2, F.size(ids_col)),
+                lambda y: pair(x, y),
+            ),
+        )
+    )
 
 
 def band_hash_array(cfg: DedupConfig, sig_col: str = "sig"):
@@ -169,18 +224,8 @@ def candidate_pairs(
     )
     if salt_groups and salt_groups > 1:
         return _salted_pair_expansion(buckets, salt_groups)
-    # pairs(ids) = [(ids[i], ids[j]) for i < j], ids sorted -> a < b.
-    pair_expr = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size("ids")),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     return (
-        buckets.select(F.explode(pair_expr).alias("p"))
+        buckets.select(F.explode(pairs_expr("ids")).alias("p"))
         .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .dropDuplicates(["a", "b"])
     )
@@ -213,15 +258,7 @@ def _salted_pair_expansion(buckets: DataFrame, g: int) -> DataFrame:
         .select("si", "sj", "gi", "gj")
         .repartition(F.col("si"), F.col("sj"), F.xxhash64("gi", "gj"))
     )
-    within = F.flatten(
-        F.transform(
-            "gi",
-            lambda x, i: F.transform(
-                F.slice(F.col("gi"), i + 2, F.size("gi")),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
+    within = pairs_expr("gi")
     cross = F.flatten(
         F.transform(
             "gi",

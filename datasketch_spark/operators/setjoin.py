@@ -23,24 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _pair_expand(buckets: DataFrame, ids_col: str = "ids") -> DataFrame:
-    """sorted member arrays -> distinct (a, b), a < b (one shuffle shape
-    shared with lsh.candidate_pairs)."""
-    pair_expr = F.flatten(
-        F.transform(
-            ids_col,
-            lambda x, i: F.transform(
-                F.slice(F.col(ids_col), i + 2, F.size(ids_col)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(pair_expr).alias("p"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
+from datasketch_spark.operators.lsh import pairs_expr
 
 
 def _effective_threshold(threshold: float, round_digits: int | None) -> float:
@@ -155,7 +138,12 @@ def prefix_filtered_jaccard_pairs(
         .where((F.size("ids") >= 2) & (F.size("ids") <= bucket_cap))
         .select(F.array_sort("ids").alias("ids"))
     )
-    cands = _pair_expand(buckets)
+    # Same bucket -> pair shape as lsh.candidate_pairs.
+    cands = (
+        buckets.select(F.explode(pairs_expr("ids")).alias("p"))
+        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .dropDuplicates(["a", "b"])
+    )
 
     # Exact verification (same expression as the naive join).
     left = base.select(

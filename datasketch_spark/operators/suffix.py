@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from datasketch_spark.operators.lsh import pairs_expr
+
 _B = np.uint64(1000003)  # polynomial rolling-hash base
 
 
@@ -134,19 +136,14 @@ def substring_candidates(
         .where((F.size("members") >= 2) & (F.size("members") <= bucket_cap))
         .select(F.array_sort("members").alias("members"))
     )
-    pair_expr = F.flatten(
-        F.transform(
-            "members",
-            lambda x, i: F.transform(
-                F.slice(F.col("members"), i + 2, F.size("members")),
-                lambda y: F.struct(
-                    x["doc_id"].alias("a"),
-                    y["doc_id"].alias("b"),
-                    x["pos"].alias("pos_a"),
-                    y["pos"].alias("pos_b"),
-                ),
-            ),
-        )
+    pair_expr = pairs_expr(
+        "members",
+        lambda x, y: F.struct(
+            x["doc_id"].alias("a"),
+            y["doc_id"].alias("b"),
+            x["pos"].alias("pos_a"),
+            y["pos"].alias("pos_b"),
+        ),
     )
     return (
         grouped.select(F.explode(pair_expr).alias("p"))

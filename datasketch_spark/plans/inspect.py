@@ -36,11 +36,6 @@ def scan_read_schemas(df: DataFrame) -> list[str]:
     return re.findall(r"ReadSchema: ([^\n]*)", plan_str(df, "formatted"))
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans."""
-    return len(re.findall(r"WholeStageCodegen", plan_str(df, "simple")))
-
-
 def python_eval_count(df: DataFrame) -> int:
     """Arrow/Python eval nodes in the plan — the pipeline contract is
     exactly ONE (the signature UDF) per signature computation."""

@@ -138,6 +138,35 @@ class NoopCheckpoints(CheckpointManager):
         return df.localCheckpoint(eager=False)
 
 
+def _planned_partitions(df: DataFrame) -> int:
+    """Partitions ``df``'s physical plan outputs, read off the plan without
+    running a Spark job. A plan with a shuffle reports its exchange's count;
+    a scan and the narrow ops over it report the scan's splits (summed over
+    the plan's leaves)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        # Executing the adaptive wrapper would run its query stages.
+        plan = plan.inputPlan()
+    n = plan.outputPartitioning().numPartitions()
+    if n == 0:
+        leaves = plan.collectLeaves()
+        n = sum(
+            leaves.apply(i).execute().getNumPartitions() for i in range(leaves.size())
+        )
+    return n
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` to ``defaultParallelism`` partitions if its plan
+    outputs fewer, before expensive per-row work (input skew: a single small
+    parquet file scans as ONE task, so every narrow stage downstream —
+    signature UDF, token-array prep, per-pair scoring — runs on one core).
+    Inputs already split at least that wide are returned unchanged, so real
+    inputs arriving in many scan partitions pay no exchange."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(target) if _planned_partitions(df) < target else df
+
+
 def write_bucketed(
     df: DataFrame,
     table: str,

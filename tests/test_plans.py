@@ -17,6 +17,7 @@ from datasketch_spark.plans.inspect import (
     scan_read_schemas,
     shuffle_count,
 )
+from datasketch_spark.sources.io import NoopCheckpoints, spread
 
 
 def test_signature_stage_single_python_boundary(spark):
@@ -149,3 +150,96 @@ def test_bucketed_bands_elide_groupby_shuffles(spark, tmp_path):
         assert a == b and a
     finally:
         spark.sql("DROP TABLE IF EXISTS bands_bucketed_test")
+
+
+class _NoCheckpoint(NoopCheckpoints):
+    """Leaves the signature table un-checkpointed so its own plan shows."""
+
+    def materialize(self, df, stage, partition_by=None):
+        return df
+
+
+def _docs_parquet(spark, path, n_files):
+    spark.createDataFrame(
+        [(i, f"shared words here plus token{i % 9} and more") for i in range(40)],
+        "doc_id long, text string",
+    ).repartition(n_files).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_signature_table_spreads_single_partition_input(spark, tmp_path):
+    docs = _docs_parquet(spark, str(tmp_path / "one"), 1)
+    sigs = lsh.signature_table(docs, DedupConfig(threshold=0.5), checkpoints=_NoCheckpoint())
+    plan = plan_str(sigs, "simple")
+    # Exactly one exchange, a round-robin one, below (before) the UDF.
+    assert shuffle_count(sigs) == 1
+    assert plan.count("RoundRobinPartitioning") == 1
+    assert plan.index("ArrowEvalPython") < plan.index("RoundRobinPartitioning")
+
+
+def test_signature_table_leaves_wide_input_alone(spark, tmp_path):
+    n = spark.sparkContext.defaultParallelism
+    docs = _docs_parquet(spark, str(tmp_path / "wide"), n)
+    sigs = lsh.signature_table(docs, DedupConfig(threshold=0.5), checkpoints=_NoCheckpoint())
+    assert shuffle_count(sigs) == 0
+    assert python_eval_count(sigs) == 1
+
+
+def test_spread_decision_runs_no_job(spark, tmp_path):
+    sc = spark.sparkContext
+    docs = _docs_parquet(spark, str(tmp_path / "one"), 1)
+    shuffled = docs.repartition(2).select("doc_id", "text")  # adaptive plan
+    sc.setJobGroup("spread-decision", "spread decision")
+    try:
+        for df in (docs, shuffled, spread(docs), spread(shuffled)):
+            spread(df)
+        assert list(sc.statusTracker().getJobIdsForGroup("spread-decision")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_signature_table_evaluates_udf_once_for_every_consumer(spark):
+    cfg = DedupConfig(threshold=0.5)
+    docs = spark.createDataFrame(
+        [(i, f"shared words here plus token{i % 9} and more") for i in range(40)],
+        "doc_id long, text string",
+    )
+    sigs = lsh.signature_table(docs, cfg)
+    pairs = lsh.candidate_pairs(lsh.bands_table(sigs, cfg), cfg)
+    verified = verify_pairs_est(pairs, sigs, cfg)
+    # Two consumers (banding, verification), both reading the checkpoint.
+    assert python_eval_count(pairs) == 0
+    assert python_eval_count(verified) == 0
+    assert verified.count() > 0
+
+
+def test_signature_table_tokens_and_size(spark):
+    from datasketch_spark.functions.minhash import make_signature_from_tokens_udf
+    from datasketch_spark.functions.text import char_ngrams_col
+
+    cfg = DedupConfig(threshold=0.5)
+    docs = spark.createDataFrame(
+        [(1, "abcabcabc", [3, 1, 3, 2]), (2, "xyz", [7])],
+        "doc_id long, text string, toks array<bigint>",
+    )
+    sized = lsh.signature_table(docs, cfg, with_size=True)
+    assert sized.columns == ["doc_id", "sig", "set_size"]
+    n_shingles = F.size(F.array_distinct(char_ngrams_col(F.col("text"), 5)))
+    want = {r["doc_id"]: r["n"] for r in docs.select("doc_id", n_shingles.alias("n")).collect()}
+    assert {r["doc_id"]: r["set_size"] for r in sized.collect()} == want
+
+    toks = lsh.signature_table(docs, cfg, tokens=F.col("toks"), with_size=True)
+    udf = make_signature_from_tokens_udf(cfg.num_perm, cfg.seed)
+    signed = docs.select("doc_id", udf("toks").alias("s"))
+    expect = {r["doc_id"]: list(r["s"]) for r in signed.collect()}
+    got = {r["doc_id"]: (list(r["sig"]), r["set_size"]) for r in toks.collect()}
+    assert got == {1: (expect[1], 3), 2: (expect[2], 1)}
+
+
+def test_pairs_expr_all_ordered_pairs(spark):
+    df = spark.createDataFrame([([1, 2, 3, 4],)], "ids array<bigint>")
+    pairs = df.select(F.explode(lsh.pairs_expr("ids")).alias("p")).select("p.*")
+    got = [(r["a"], r["b"]) for r in pairs.collect()]
+    assert got == [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
+    plus = df.select(F.explode(lsh.pairs_expr("ids", lambda x, y: x + y)).alias("s"))
+    assert [r["s"] for r in plus.collect()] == [3, 4, 5, 5, 6, 7]

@@ -4,8 +4,10 @@ Usage:
     python tools/capture_plans.py <tag-dir> [suffix] [query ...]
 
 Writes plans/<tag>/<query>_<suffix>.txt (suffix default "before") for each
-named query (default: all). The streaming query is skipped by default
-(constructing it RUNS the stream); pass it explicitly to include it.
+named query (default: all) and prints its Python-eval and Exchange counts.
+The streaming query is skipped by default (constructing it RUNS the
+stream); pass it explicitly to include it. Env: SPARK_GRAFT_SF_DIR,
+SPARK_GRAFT_CPUS (default: all cores).
 """
 
 from __future__ import annotations
@@ -16,20 +18,15 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def explain_formatted(df) -> str:
-    jvm = df.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
-
-
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "r06"
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
 
     import __spark_entry__ as entrymod
+    from datasketch_spark.plans.inspect import plan_str, python_eval_count, shuffle_count
     from datasketch_spark.session import get_spark
 
     spark = get_spark(
@@ -48,8 +45,8 @@ def main() -> None:
         df = qs[name](spark, sf_dir)
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(explain_formatted(df))
-        print(f"wrote {path}")
+            fh.write(plan_str(df, "formatted"))
+        print(f"wrote {path} python_eval={python_eval_count(df)} shuffles={shuffle_count(df)}")
 
 
 if __name__ == "__main__":

@@ -5,11 +5,12 @@ column names, and order-insensitive values."""
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 from datasketch_spark.session import get_spark  # noqa: E402
 
@@ -43,7 +44,8 @@ def main():
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    spark = get_spark(master="local[8]", shuffle_partitions=16)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=16)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
