@@ -14,6 +14,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from datasketch_spark.operators.lsh import bucket_pairs
+from datasketch_spark.operators.verify import join_sides
+
 
 def dot_col(v1, v2):
     a = F.col(v1) if isinstance(v1, str) else v1
@@ -188,48 +191,18 @@ def simhash_bucketed_pairs(
         F.col(id_col),
         F.posexplode(udf(F.col(vec_col))).alias("band_idx", "band_hash"),
     )
-    buckets = (
-        bands.groupBy("band_idx", "band_hash")
-        .agg(F.collect_list(id_col).alias("ids"))
-        .where(F.size("ids") >= 2)
-        .select(F.array_sort("ids").alias("ids"))
-    )
-    pair_expr = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size("ids")),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    cands = (
-        buckets.select(F.explode(pair_expr).alias("p"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
-    # Exact-cosine verification: two equi-joins back to the (UDF-free)
-    # vector table; AQE broadcasts the small pair side. Cast hoisted per
-    # vector (see cosine_pairs).
+    cands = bucket_pairs(bands, ["band_idx", "band_hash"], id_col)
+    # Exact-cosine verification against the (UDF-free) vector table. Cast
+    # hoisted per vector (see cosine_pairs).
     v = vectors.select(
-        F.col(id_col).alias("_k"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-        norm_col(vec_col).alias("_n"),
+        id_col,
+        F.col(vec_col).cast("array<double>").alias("v"),
+        norm_col(vec_col).alias("n"),
     )
     return (
-        cands.join(
-            v.withColumnRenamed("_v", "_va").withColumnRenamed("_n", "_na"),
-            F.col("a") == F.col("_k"),
-        )
-        .drop("_k")
-        .join(
-            v.withColumnRenamed("_v", "_vb").withColumnRenamed("_n", "_nb"),
-            F.col("b") == F.col("_k"),
-        )
-        .drop("_k")
+        join_sides(cands, v, id_col, ["v", "n"])
         .withColumn(
-            "sim",
-            F.round(dot_col("_va", "_vb") / (F.col("_na") * F.col("_nb")), 4),
+            "sim", F.round(dot_col("v_a", "v_b") / (F.col("n_a") * F.col("n_b")), 4)
         )
         .where(F.col("sim") >= min_sim)
         .select("a", "b", "sim")

@@ -4,9 +4,9 @@ Absent from the reference entirely (SURVEY.md 2.4); implemented with the
 alternating large-star / small-star DataFrame algorithm (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC 2014), which converges
 in O(log n) rounds even on path graphs. Each round is two grouped
-aggregations + joins; lineage is cut with localCheckpoint per round so the
-plan doesn't grow unboundedly (at cluster scale, swap localCheckpoint for a
-checkpoint table write — see operators/dedup.py).
+aggregations + joins; lineage is cut with an eager localCheckpoint per round
+so the plan doesn't grow unboundedly. Local checkpoints are not
+fault-tolerant: an executor lost mid-run loses the round's blocks.
 """
 
 from __future__ import annotations
@@ -68,25 +68,18 @@ def _edge_fingerprint(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def connected_components(
-    edges: DataFrame, max_iterations: int = 20, checkpoint=None
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFrame:
     """(u, v) undirected edges -> (node, component) labels, component = the
     minimum node id in each connected component.
 
-    ``checkpoint``: optional callable DataFrame -> DataFrame used to
-    materialize + truncate lineage each round (default
-    ``localCheckpoint(eager=True)``).
+    Each round is materialized with an eager ``localCheckpoint``, which
+    truncates its lineage.
     """
-    if checkpoint is None:
-        def checkpoint(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
-    cur = checkpoint(_canon(edges))
+    cur = _canon(edges).localCheckpoint(eager=True)
     prev_fp = None
     converged = False
     for _ in range(max_iterations):
-        cur = checkpoint(_canon(_small_star(_large_star(cur))))
+        cur = _canon(_small_star(_large_star(cur))).localCheckpoint(eager=True)
         fp = _edge_fingerprint(cur)
         if fp == prev_fp:
             converged = True
@@ -134,7 +127,6 @@ def connected_components_auto(
     edges: DataFrame,
     driver_max_edges: int = 2_000_000,
     max_iterations: int = 20,
-    checkpoint=None,
 ) -> DataFrame:
     """Hybrid CC: if the edge set is small enough (dedup edge sets are tiny
     relative to the corpus — dup rate x corpus, not corpus^2), collect and
@@ -149,7 +141,7 @@ def connected_components_auto(
     # the edge set twice).
     pdf = edges.select("u", "v").limit(driver_max_edges + 1).toPandas()
     if len(pdf) > driver_max_edges:
-        return connected_components(edges, max_iterations, checkpoint)
+        return connected_components(edges, max_iterations)
     if len(pdf) == 0:
         return spark.createDataFrame([], "node long, component long")
     labels = _driver_union_find(list(zip(pdf["u"].tolist(), pdf["v"].tolist())))

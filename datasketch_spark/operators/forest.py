@@ -190,7 +190,6 @@ def topk_query(
     diagnostics: dict | None = None,
     schedule: list[int] | None = None,
     index_depths: list[int] | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Batched top-k: (query_id, doc_id, best_depth, est_jaccard, rank),
     identical to full-enumeration ranking (see module docstring), computed
@@ -209,9 +208,6 @@ def topk_query(
     Local checkpoints pin blocks to
     executors and are NOT fault-tolerant: on a real cluster an executor
     loss mid-query (or before the result is consumed) is unrecoverable.
-    Set ``reliable_checkpoint=True`` to use ``DataFrame.checkpoint``
-    instead (requires ``spark.sparkContext.setCheckpointDir`` pointing at
-    durable storage) for cluster deployments.
 
     ``diagnostics`` (optional dict) receives ``candidate_rows`` (total
     scored candidate rows accumulated) and per-round ``rounds`` entries —
@@ -294,17 +290,6 @@ def topk_query(
         pos = F.array_position(F.slice("_eq", t * kpt + 1, kpt), F.lit(False))
         return F.when(pos == 0, F.lit(kpt)).otherwise((pos - 1).cast("int"))
 
-    def _materialize(df: DataFrame) -> DataFrame:
-        if reliable_checkpoint:
-            return df.checkpoint(eager=True)
-        # eager=False: under AQE the plan's shuffle stages still execute
-        # here (requesting the RDD materializes the query stages), but the
-        # final result stage folds into the FIRST consuming job (the next
-        # round's probe / the final ranking) instead of a dedicated job
-        # per round — one fewer scheduled job per deepening round, blocks
-        # still computed once and pinned.
-        return df.localCheckpoint(eager=False)
-
     active = query_sig_df.select(query_key)
     # Each round materializes ONLY its own scored rows; `accumulated` is a
     # lazy union over the per-round checkpoints. Re-checkpointing the
@@ -351,7 +336,10 @@ def topk_query(
             .where((F.col("best_depth") >= d) & (F.col("best_depth") < prev_d))
             .select(query_key, index_key, "best_depth", "est_jaccard")
         )
-        parts.append(_materialize(scored))
+        # eager=False: the round's final result stage folds into the first
+        # consuming job (next round's probe / final ranking) instead of a
+        # dedicated job per round; blocks are still computed once and pinned.
+        parts.append(scored.localCheckpoint(eager=False))
         accumulated = parts[0]
         for p in parts[1:]:
             accumulated = accumulated.unionByName(p)

@@ -78,9 +78,11 @@ def signature_table(
     return ckpt.materialize(sigs.select(*cols), "signatures")
 
 
-def pairs_expr(
-    ids_col: str, pair=lambda x, y: F.struct(x.alias("a"), y.alias("b"))
-) -> Column:
+def _ab(x: Column, y: Column) -> Column:
+    return F.struct(x.alias("a"), y.alias("b"))
+
+
+def pairs_expr(ids_col: str, pair=_ab) -> Column:
     """array of ``pair(ids[i], ids[j])`` for every i < j — the within-bucket
     pair expansion, natively (nested ``transform`` over ``slice``). With
     ``ids`` sorted, the default (a, b) structs have a < b."""
@@ -215,20 +217,53 @@ def candidate_pairs(
         .where(F.col("n_keys") > cfg.bucket_cap)
         .select("band_idx", "band_hash")
     )
-    cold = bands.join(F.broadcast(hot), ["band_idx", "band_hash"], "left_anti")
-    buckets = (
-        cold.groupBy("band_idx", "band_hash")
-        .agg(F.collect_list(key_col).alias("ids"))
-        .where(F.size("ids") >= 2)
+    bucket = ["band_idx", "band_hash"]
+    cold = bands.join(F.broadcast(hot), bucket, "left_anti")
+    if salt_groups and salt_groups > 1:
+        return _salted_pair_expansion(_sorted_buckets(cold, bucket, key_col), salt_groups)
+    return bucket_pairs(cold, bucket, key_col)
+
+
+def _sorted_buckets(
+    rows: DataFrame, bucket_cols: list[str], member, cap: int | None = None
+) -> DataFrame:
+    """(ids): each bucket's sorted member list, buckets of 2..cap members."""
+    keep = F.size("ids") >= 2
+    if cap is not None:
+        keep &= F.size("ids") <= cap
+    return (
+        rows.groupBy(*bucket_cols)
+        .agg(F.collect_list(member).alias("ids"))
+        .where(keep)
         .select(F.array_sort("ids").alias("ids"))
     )
-    if salt_groups and salt_groups > 1:
-        return _salted_pair_expansion(buckets, salt_groups)
-    return (
-        buckets.select(F.explode(pairs_expr("ids")).alias("p"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
+
+
+def _distinct_pairs(units: DataFrame, pair_array: Column) -> DataFrame:
+    """Explode an array of pair structs into a duplicate-free pair table."""
+    return units.select(F.explode(pair_array).alias("p")).select("p.*").dropDuplicates()
+
+
+def bucket_pairs(
+    rows: DataFrame,
+    bucket_cols: list[str],
+    member,
+    cap: int | None = None,
+    pair=_ab,
+) -> DataFrame:
+    """The candidate-pair table of a bucketing: every distinct
+    ``pair(x, y)`` of two ``member`` values (a column name or expression)
+    sharing a ``bucket_cols`` bucket, x before y in sorted member order.
+
+    ONE shuffle groups each bucket's members into a list, native
+    ``pairs_expr`` expands it, and a final distinct removes the copies of
+    pairs that share several buckets. Buckets over ``cap`` members are
+    dropped; each caller surfaces what its cap skipped. The cap filter runs
+    after the list is built, so a caller that must bound the
+    ``collect_list`` buffer itself (``candidate_pairs``) pre-filters hot
+    buckets. With the default (a, b) ``pair``, a < b."""
+    buckets = _sorted_buckets(rows, bucket_cols, member, cap)
+    return _distinct_pairs(buckets, pairs_expr("ids", pair))
 
 
 def _salted_pair_expansion(buckets: DataFrame, g: int) -> DataFrame:
@@ -271,12 +306,7 @@ def _salted_pair_expansion(buckets: DataFrame, g: int) -> DataFrame:
         )
     )
     pair_expr = F.when(F.col("si") == F.col("sj"), within).otherwise(cross)
-    return (
-        units.select(F.explode(pair_expr).alias("p"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    return _distinct_pairs(units, pair_expr).where(F.col("a") != F.col("b"))
 
 
 def dropped_buckets(bands: DataFrame, cfg: DedupConfig) -> DataFrame:

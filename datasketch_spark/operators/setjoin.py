@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datasketch_spark.operators.lsh import pairs_expr
+from datasketch_spark.operators.lsh import bucket_pairs
+from datasketch_spark.operators.verify import join_sides
 
 
 def _effective_threshold(threshold: float, round_digits: int | None) -> float:
@@ -132,40 +133,22 @@ def prefix_filtered_jaccard_pairs(
     base, tokens = _prefix_tokens(d, arr_col, t_eff, blocks, id_col)
 
     bucket_keys = ["_tok", *[f"_blk_{c}" for c in blocks]]
-    buckets = (
-        tokens.groupBy(*bucket_keys)
-        .agg(F.collect_list("_id").alias("ids"))
-        .where((F.size("ids") >= 2) & (F.size("ids") <= bucket_cap))
-        .select(F.array_sort("ids").alias("ids"))
-    )
-    # Same bucket -> pair shape as lsh.candidate_pairs.
-    cands = (
-        buckets.select(F.explode(pairs_expr("ids")).alias("p"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    cands = bucket_pairs(tokens, bucket_keys, "_id", bucket_cap)
 
     # Exact verification (same expression as the naive join).
-    left = base.select(
-        F.col("_id").alias("a"), F.col("_arr").alias("_xa"), F.col("_n").alias("_na")
-    )
-    right = base.select(
-        F.col("_id").alias("b"), F.col("_arr").alias("_xb"), F.col("_n").alias("_nb")
-    )
     scored = (
-        cands.join(left, "a")
-        .join(right, "b")
+        join_sides(cands, base, "_id", ["_arr", "_n"])
         .select(
             "a",
             "b",
-            "_na",
-            "_nb",
-            F.size(F.array_intersect("_xa", "_xb")).cast("double").alias("_i"),
+            "_n_a",
+            "_n_b",
+            F.size(F.array_intersect("_arr_a", "_arr_b")).cast("double").alias("_i"),
         )
         .withColumn(
             "jaccard",
-            F.when(F.col("_na") + F.col("_nb") == 0, F.lit(1.0)).otherwise(
-                F.col("_i") / (F.col("_na") + F.col("_nb") - F.col("_i"))
+            F.when(F.col("_n_a") + F.col("_n_b") == 0, F.lit(1.0)).otherwise(
+                F.col("_i") / (F.col("_n_a") + F.col("_n_b") - F.col("_i"))
             ),
         )
     )

@@ -31,7 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from datasketch_spark.operators.lsh import pairs_expr
+from datasketch_spark.operators.lsh import bucket_pairs
+from datasketch_spark.operators.verify import join_sides
 
 _B = np.uint64(1000003)  # polynomial rolling-hash base
 
@@ -130,14 +131,11 @@ def substring_candidates(
     the cap skipped with ``dropped_fingerprints`` (never silent-by-design:
     callers of ``substring_dedup_edges`` get it in the returned dict of the
     pipeline or can evaluate it directly)."""
-    grouped = (
-        fps.groupBy("fp")
-        .agg(F.collect_list(F.struct("doc_id", "pos")).alias("members"))
-        .where((F.size("members") >= 2) & (F.size("members") <= bucket_cap))
-        .select(F.array_sort("members").alias("members"))
-    )
-    pair_expr = pairs_expr(
-        "members",
+    pairs = bucket_pairs(
+        fps,
+        ["fp"],
+        F.struct("doc_id", "pos"),
+        bucket_cap,
         lambda x, y: F.struct(
             x["doc_id"].alias("a"),
             y["doc_id"].alias("b"),
@@ -145,12 +143,7 @@ def substring_candidates(
             y["pos"].alias("pos_b"),
         ),
     )
-    return (
-        grouped.select(F.explode(pair_expr).alias("p"))
-        .select("p.a", "p.b", "p.pos_a", "p.pos_b")
-        .where(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b", "pos_a", "pos_b"])
-    )
+    return pairs.where(F.col("a") != F.col("b"))
 
 
 def verify_substring_pairs(
@@ -162,13 +155,8 @@ def verify_substring_pairs(
 ) -> DataFrame:
     """Extend the aligned match exactly; keep (a, b, match_len) pairs whose
     true common substring >= min_len. a < b canonical order on output."""
-    texts = docs.select(F.col(key_col).alias("_k"), F.col(text_col).alias("_t"))
-    joined = (
-        cands.join(texts.withColumnRenamed("_t", "_ta"), F.col("a") == F.col("_k"))
-        .drop("_k")
-        .join(texts.withColumnRenamed("_t", "_tb"), F.col("b") == F.col("_k"))
-        .drop("_k")
-    )
+    joined = join_sides(cands, docs, key_col, [text_col])
+    ta_col, tb_col = f"{text_col}_a", f"{text_col}_b"
 
     out_schema = StructType(
         [
@@ -205,7 +193,7 @@ def verify_substring_pairs(
                 return got
 
             for a, b, pa, pb, ta, tb in zip(
-                pdf["a"], pdf["b"], pdf["pos_a"], pdf["pos_b"], pdf["_ta"], pdf["_tb"]
+                pdf["a"], pdf["b"], pdf["pos_a"], pdf["pos_b"], pdf[ta_col], pdf[tb_col]
             ):
                 ba, bb = as_bytes(ta), as_bytes(tb)
                 pa, pb = int(pa), int(pb)

@@ -17,6 +17,21 @@ from datasketch_spark.config import DedupConfig
 from datasketch_spark.functions.minhash import jaccard_col
 
 
+def join_sides(
+    pairs: DataFrame, table: DataFrame, key_col: str, cols: list[str]
+) -> DataFrame:
+    """``pairs`` plus ``{c}_a`` and ``{c}_b`` for each of ``table``'s
+    ``cols``: the rows keyed by the pair's ``a`` and ``b`` ids, attached with
+    two equi-joins on ``key_col``. The pair side is typically far smaller
+    than ``table``, so AQE broadcasts it when it fits."""
+    for side in ("a", "b"):
+        keyed = table.select(
+            F.col(key_col).alias("_k"), *[F.col(c).alias(f"{c}_{side}") for c in cols]
+        )
+        pairs = pairs.join(keyed, F.col(side) == F.col("_k")).drop("_k")
+    return pairs
+
+
 def verify_pairs_est(
     pairs: DataFrame,
     sig_df: DataFrame,
@@ -26,28 +41,18 @@ def verify_pairs_est(
 ) -> DataFrame:
     """(a, b) -> (a, b, est_jaccard) filtered at cfg.threshold.
 
-    Two equi-joins on the doc key; the signatures side is typically much
-    larger than the pairs side, so Spark's AQE converts the pair side to a
-    broadcast when it fits. est_jaccard = matching-slot fraction — the same
-    estimator the reference's ``MinHash.jaccard`` applies
-    (``minhash.py:299-324``).
+    Both sides' signatures come from ``join_sides``. est_jaccard =
+    matching-slot fraction — the same estimator the reference's
+    ``MinHash.jaccard`` applies (``minhash.py:299-324``).
     """
-    sigs = sig_df.select(F.col(key_col).alias("_k"), F.col(sig_col).alias("_sig"))
-    out = (
-        pairs.join(sigs.withColumnRenamed("_sig", "_sig_a"), pairs["a"] == sigs["_k"])
-        .drop("_k")
-        .join(
-            sigs.withColumnRenamed("_sig", "_sig_b"),
-            F.col("b") == F.col("_k"),
-        )
-        .drop("_k")
+    return (
+        join_sides(pairs, sig_df, key_col, [sig_col])
         .withColumn(
-            "est_jaccard", jaccard_col("_sig_a", "_sig_b", cfg.num_perm)
+            "est_jaccard", jaccard_col(f"{sig_col}_a", f"{sig_col}_b", cfg.num_perm)
         )
         .where(F.col("est_jaccard") >= F.lit(cfg.threshold))
         .select("a", "b", "est_jaccard")
     )
-    return out
 
 
 def verify_pairs_exact_text(
@@ -86,14 +91,8 @@ def verify_pairs_exact_text(
     k = cfg.shingle_k
     threshold = cfg.threshold
 
-    texts = docs.select(F.col(key_col).alias("_k"), F.col(text_col).alias("_t"))
-    joined = (
-        pairs.join(texts.withColumnRenamed("_t", "_ta"), pairs["a"] == texts["_k"])
-        .drop("_k")
-        .join(texts.withColumnRenamed("_t", "_tb"), F.col("b") == F.col("_k"))
-        .drop("_k")
-        .select("a", "b", "_ta", "_tb")
-    )
+    ta_col, tb_col = f"{text_col}_a", f"{text_col}_b"
+    joined = join_sides(pairs, docs, key_col, [text_col]).select("a", "b", ta_col, tb_col)
 
     out_schema = StructType(
         [
@@ -115,7 +114,7 @@ def verify_pairs_exact_text(
 
         for pdf in batches:
             rows = []
-            for a, b, ta, tb in zip(pdf["a"], pdf["b"], pdf["_ta"], pdf["_tb"]):
+            for a, b, ta, tb in zip(pdf["a"], pdf["b"], pdf[ta_col], pdf[tb_col]):
                 sa, sb = shingles(ta), shingles(tb)
                 union = len(np.union1d(sa, sb))
                 j = (

@@ -15,6 +15,7 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,8 +36,9 @@ class CheckpointManager:
     root: str
     format: str = "parquet"  # "parquet" | "iceberg"
     resume: bool = True
-    enabled: bool = True
     run_config: dict = field(default_factory=dict)
+    # Whether stages are written at all; only NoopCheckpoints turns it off.
+    enabled: ClassVar[bool] = True
 
     def _path(self, stage: str) -> str:
         return os.path.join(self.root, stage)
@@ -76,26 +78,16 @@ class CheckpointManager:
             return None
         return cfg if isinstance(cfg, dict) else None
 
-    def materialize(
-        self,
-        df: DataFrame,
-        stage: str,
-        partition_by: list[str] | None = None,
-    ) -> DataFrame:
+    def materialize(self, df: DataFrame, stage: str) -> DataFrame:
         """Write the stage, record metrics, return the re-read DataFrame
         (lineage truncated at the table — the scale-path equivalent of
         localCheckpoint)."""
-        if not self.enabled:
-            return df.localCheckpoint(eager=True)
         spark = df.sparkSession
         if self.resume and self.has(stage):
             return self.load(spark, stage)
         os.makedirs(self.root, exist_ok=True)
         t0 = time.time()
-        writer = df.write.mode("overwrite").format(self.format)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(self._path(stage))
+        df.write.mode("overwrite").format(self.format).save(self._path(stage))
         out = self.load(spark, stage)
         # Per-partition lineage: rows per file (file = unit of parallel read).
         per_file = (
@@ -131,10 +123,12 @@ class NoopCheckpoints(CheckpointManager):
     the signature projection; for the rest it merely skips the final
     result-stage job."""
 
-    def __init__(self) -> None:
-        super().__init__(root="", enabled=False)
+    enabled = False
 
-    def materialize(self, df, stage, partition_by=None):
+    def __init__(self) -> None:
+        super().__init__(root="")
+
+    def materialize(self, df, stage):
         return df.localCheckpoint(eager=False)
 
 

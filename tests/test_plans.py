@@ -155,7 +155,7 @@ def test_bucketed_bands_elide_groupby_shuffles(spark, tmp_path):
 class _NoCheckpoint(NoopCheckpoints):
     """Leaves the signature table un-checkpointed so its own plan shows."""
 
-    def materialize(self, df, stage, partition_by=None):
+    def materialize(self, df, stage):
         return df
 
 
@@ -243,3 +243,79 @@ def test_pairs_expr_all_ordered_pairs(spark):
     assert got == [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
     plus = df.select(F.explode(lsh.pairs_expr("ids", lambda x, y: x + y)).alias("s"))
     assert [r["s"] for r in plus.collect()] == [3, 4, 5, 5, 6, 7]
+
+
+def test_bucket_pairs_drops_over_cap_bucket(spark):
+    rows = spark.createDataFrame(
+        [("hot", i) for i in range(4)] + [("cold", 10), ("cold", 11)],
+        "k string, id long",
+    )
+    assert [tuple(r) for r in lsh.bucket_pairs(rows, ["k"], "id", cap=3).collect()] == [(10, 11)]
+    assert lsh.bucket_pairs(rows, ["k"], "id").count() == 7
+
+
+def test_bucket_pairs_emits_shared_pair_once(spark):
+    # (1, 2) shares buckets 0 and 1.
+    rows = spark.createDataFrame(
+        [(0, 2), (0, 1), (1, 1), (1, 2), (1, 3)], "k int, id long"
+    )
+    got = sorted(tuple(r) for r in lsh.bucket_pairs(rows, ["k"], "id").collect())
+    assert got == [(1, 2), (1, 3), (2, 3)]
+
+
+def test_bucket_pairs_struct_member_carries_positions(spark):
+    rows = spark.createDataFrame(
+        [(7, 2, 30), (7, 1, 5), (8, 1, 6)], "fp long, doc_id long, pos long"
+    )
+    pairs = lsh.bucket_pairs(
+        rows,
+        ["fp"],
+        F.struct("doc_id", "pos"),
+        pair=lambda x, y: F.struct(
+            x["doc_id"].alias("a"),
+            y["doc_id"].alias("b"),
+            x["pos"].alias("pos_a"),
+            y["pos"].alias("pos_b"),
+        ),
+    )
+    assert pairs.columns == ["a", "b", "pos_a", "pos_b"]
+    assert [tuple(r) for r in pairs.collect()] == [(1, 2, 5, 30)]
+
+
+def test_substring_candidates_no_self_pair(spark):
+    from datasketch_spark.operators.suffix import substring_candidates
+
+    # Doc 1 repeats fingerprint 5 at positions 0 and 9.
+    fps = spark.createDataFrame(
+        [(1, 5, 0), (1, 5, 9), (2, 5, 3)], "doc_id long, fp long, pos long"
+    )
+    got = sorted(tuple(r) for r in substring_candidates(fps).collect())
+    assert got == [(1, 2, 0, 3), (1, 2, 9, 3)]
+
+
+def test_pair_operator_shuffle_budgets(spark):
+    import numpy as np
+
+    from datasketch_spark.operators.ann import simhash_bucketed_pairs
+    from datasketch_spark.operators.setjoin import prefix_filtered_jaccard_pairs
+    from datasketch_spark.operators.suffix import substring_candidates
+
+    toks = spark.createDataFrame(
+        [(i, [i % 3, i % 5, 7, 8]) for i in range(12)], "doc_id long, toks array<bigint>"
+    )
+    fps = spark.createDataFrame(
+        [(i % 4, i % 3, i) for i in range(12)], "doc_id long, fp long, pos long"
+    )
+    rng = np.random.RandomState(0)
+    vecs = spark.createDataFrame(
+        [(i, rng.normal(size=8).tolist()) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    counts = (
+        shuffle_count(prefix_filtered_jaccard_pairs(toks, "toks", 0.5)),
+        shuffle_count(substring_candidates(fps)),
+        shuffle_count(simhash_bucketed_pairs(vecs, 0.9, n_bits=4, n_tables=2, dim=8)),
+    )
+    # Each: the bucket groupBy and the pair distinct; setjoin and simhash
+    # add two exchanges per join-back side.
+    assert counts == (6, 2, 6)
