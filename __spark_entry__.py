@@ -419,7 +419,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
     )
     aug = base.unionByName(pert)
-    return simhash_bucketed_pairs(aug, min_sim=0.9, n_bits=16, n_tables=8, dim=64)
+    return simhash_bucketed_pairs(aug, min_sim=0.9, n_bits=16, n_tables=8)
 
 
 def q_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -553,7 +553,7 @@ def q_bbit_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # STRONG oracle: the whole computation is integer/float arithmetic on
     # the signature slots, so DuckDB reproduces full_est, bbit4_est and
     # bbit1_est bit-for-bit from its own re-derived signatures.
-    from datasketch_spark.functions.minhash import bbit_col, bbit_jaccard_col
+    from datasketch_spark.functions.minhash import bbit_col, bbit_jaccard_col, jaccard_col
 
     cfg = DedupConfig(threshold=0.5)
     docs = (
@@ -570,14 +570,7 @@ def q_bbit_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("b"), F.col("sig").alias("_sb")
     )
     pairs = a.join(b, F.col("b") == F.col("a") + 1)
-    full = (
-        F.aggregate(
-            F.zip_with("_sa", "_sb", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
-        / F.lit(128.0)
-    )
+    full = jaccard_col("_sa", "_sb", 128)
     b4 = bbit_jaccard_col(
         bbit_col("_sa", 4), bbit_col("_sb", 4), b=4, r=0.0, num_perm=128
     )

@@ -121,11 +121,17 @@ def count_col(sig: Column | str, num_perm: int = 128) -> Column:
     return F.lit(float(num_perm)) / total - F.lit(1.0)
 
 
+def empty_sig(num_perm: int = 128) -> Column:
+    """The never-updated (all-MAX_HASH) signature as a literal; expressions
+    over it constant-fold, so comparing against its keys costs no job."""
+    return F.array_repeat(F.lit(int(MAX_HASH)).cast("long"), num_perm)
+
+
 def is_empty_col(sig: Column | str, num_perm: int = 128) -> Column:
     """True iff no update has touched the signature
     (reference ``MinHash.is_empty``, ``minhash.py:377-385``)."""
     s = F.col(sig) if isinstance(sig, str) else sig
-    return s == F.array_repeat(F.lit(int(MAX_HASH)).cast("long"), num_perm)
+    return s == empty_sig(num_perm)
 
 
 def bbit_col(sig: Column | str, b: int = 1) -> Column:
@@ -145,13 +151,7 @@ def bbit_jaccard_col(
     where ``C = A(r,b)`` with both sets assumed at ratio r = |S|/2^32 -> for
     the standard large-universe case C -> 2^-b.
     """
-    s1 = F.col(bsig1) if isinstance(bsig1, str) else bsig1
-    s2 = F.col(bsig2) if isinstance(bsig2, str) else bsig2
-    raw = F.aggregate(
-        F.zip_with(s1, s2, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(float(num_perm))
+    raw = jaccard_col(bsig1, bsig2, num_perm)
     # A(r, b) per Li & Koenig 2010 eq.; reference _calc_c b_bit_minhash.py:127-145
     c = _bbit_C(r, b)
     return (raw - F.lit(c)) / F.lit(1.0 - c)

@@ -19,7 +19,8 @@ the same capabilities callable from plain SQL,
 
 Functions whose semantics are pure expressions register as SQL SCALAR
 FUNCTIONS (``CREATE FUNCTION ... RETURN expr`` — inlined into whole-stage
-codegen, zero Python): ``lang_id``. The rest are Arrow-batched pandas
+codegen, zero Python): ``lang_id``, ``token_count`` and ``doc_fingerprint``,
+each the same expression as its column twin. The rest are Arrow-batched pandas
 UDFs (vectorized over batches, never row-at-a-time Python). For hot paths
 prefer the native column expressions (``jaccard_col``/``langid_col``/...);
 the pandas-UDF layer trades one Arrow boundary for SQL ergonomics,
@@ -28,19 +29,11 @@ exactly like the signature UDF itself.
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-)
+from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 from datasketch_spark.config import DedupConfig
 from datasketch_spark.functions.hashing import MAX_HASH
@@ -86,41 +79,39 @@ def register_sql(
     spark.udf.register(f"{prefix}minhash_merge", _merge)
     spark.udf.register(f"{prefix}minhash_count", _count)
 
-    # lang_id is registered as a SQL SCALAR FUNCTION (CREATE ... RETURN
-    # expr), not a pandas UDF: the body is the exact langid_col semantics
-    # (argmax of per-language distinct-stopword hits, LANG_PRIORITY
-    # tie-break via a lexicographic struct max), and Spark inlines it into
-    # whole-stage codegen — no Arrow boundary, no per-row Python.
-    words_sql = r"array_distinct(filter(split(trim(t), '\\s+'), x -> x != ''))"
+    # lang_id, token_count and doc_fingerprint are SQL SCALAR FUNCTIONS
+    # (CREATE ... RETURN expr), not pandas UDFs: each body is the exact
+    # expression of its column twin (langid_col: argmax of per-language
+    # distinct-stopword hits, LANG_PRIORITY tie-break via a lexicographic
+    # struct max; token_count_col; fingerprint_col), tokenized like
+    # words_col with Java's \s+, and Spark inlines it into whole-stage
+    # codegen — no Arrow boundary, no per-row Python.
+    def words_sql(t: str) -> str:
+        return rf"filter(split(trim({t}), '\\s+'), x -> x != '')"
+
+    def scalar(name: str, ret: str, body: str) -> None:
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {prefix}{name}(t STRING) "
+            f"RETURNS {ret} RETURN {body}"
+        )
+
     score_structs = ", ".join(
         "named_struct('s', size(array_intersect({words}, array({sw}))), "
         "'pr', {pr}, 'l', '{lang}')".format(
-            words=words_sql,
+            words=f"array_distinct({words_sql('t')})",
             sw=", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang]),
             pr=len(LANG_PRIORITY) - i,
             lang=lang,
         )
         for i, lang in enumerate(LANG_PRIORITY)
     )
-    spark.sql(
-        f"CREATE OR REPLACE TEMPORARY FUNCTION {prefix}lang_id(t STRING) "
-        f"RETURNS STRING RETURN "
+    scalar(
+        "lang_id",
+        "STRING",
         f"if(array_max(array({score_structs})).s > 0, "
-        f"array_max(array({score_structs})).l, 'und')"
+        f"array_max(array({score_structs})).l, 'und')",
     )
-
-    @F.pandas_udf(StringType())
-    def _fingerprint(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                hashlib.md5(" ".join((t or "").lower().split()).encode()).hexdigest()
-                for t in texts
-            ]
-        )
-
-    @F.pandas_udf(IntegerType())
-    def _token_count(texts: pd.Series) -> pd.Series:
-        return texts.fillna("").str.split().str.len().astype("int32")
-
-    spark.udf.register(f"{prefix}doc_fingerprint", _fingerprint)
-    spark.udf.register(f"{prefix}token_count", _token_count)
+    scalar("token_count", "INT", f"size({words_sql('t')})")
+    scalar(
+        "doc_fingerprint", "STRING", f"md5(array_join({words_sql('lower(t)')}, ' '))"
+    )

@@ -137,26 +137,35 @@ def random_hyperplanes(dim: int, n_bits: int, seed: int = 1) -> np.ndarray:
     return rng.normal(size=(n_bits, dim)).astype(np.float64)
 
 
-def make_simhash_bands_udf(dim: int, n_bits: int, n_tables: int, seed: int = 1):
+def make_simhash_bands_udf(n_bits: int, n_tables: int, seed: int = 1):
     """Pandas UDF ``embedding -> array<bigint>`` of n_tables packed SimHash
     signatures: ONE (batch x dim) @ (dim x n_tables*n_bits) matmul per Arrow
     batch against the closure-held plane tensor, then sign-pack. No plan
     literals, one Python boundary — the same discipline as the MinHash
-    signature UDF."""
+    signature UDF. The embedding width comes from each batch; the planes
+    for a width are drawn once and cached in the closure."""
     from pyspark.sql.types import ArrayType, LongType
 
-    # (n_tables*n_bits, dim), table t owns rows [t*n_bits, (t+1)*n_bits).
-    planes = np.vstack(
-        [random_hyperplanes(dim, n_bits, seed + t * 1000) for t in range(n_tables)]
-    )
+    planes_by_dim: dict[int, np.ndarray] = {}
     weights = (1 << np.arange(n_bits, dtype=np.int64))  # bit i -> 2^i
+
+    def planes_for(dim: int) -> np.ndarray:
+        # (n_tables*n_bits, dim), table t owns rows [t*n_bits, (t+1)*n_bits).
+        if dim not in planes_by_dim:
+            planes_by_dim[dim] = np.vstack(
+                [
+                    random_hyperplanes(dim, n_bits, seed + t * 1000)
+                    for t in range(n_tables)
+                ]
+            )
+        return planes_by_dim[dim]
 
     @F.pandas_udf(ArrayType(LongType()))
     def simhash_bands(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
         V = np.array(vecs.tolist(), dtype=np.float64)  # (n, dim)
-        signs = (V @ planes.T) >= 0  # (n, n_tables*n_bits)
+        signs = (V @ planes_for(V.shape[1]).T) >= 0  # (n, n_tables*n_bits)
         packed = signs.reshape(len(V), n_tables, n_bits).astype(np.int64) @ weights
         return pd.Series(list(packed))  # (n, n_tables) int64
 
@@ -171,19 +180,14 @@ def simhash_bucketed_pairs(
     seed: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate cosine near-dup pairs: candidates collide on at least one
     of n_tables random-hyperplane signatures, then exact-cosine verified.
     The banded structure mirrors MinHash LSH; collision prob per table for
-    angle theta is (1 - theta/pi)^n_bits.
-
-    ``dim``: embedding dimensionality — pass it to avoid a driver
-    ``.first()`` probe job (the probe remains as a convenience fallback)."""
-    if dim is None:
-        dim = len(vectors.select(vec_col).first()[0])
+    angle theta is (1 - theta/pi)^n_bits. Building the plan runs no job:
+    the signature UDF reads the embedding width from its batches."""
     sigs = vectors.select(id_col, vec_col)
-    udf = make_simhash_bands_udf(dim, n_bits, n_tables, seed)
+    udf = make_simhash_bands_udf(n_bits, n_tables, seed)
     # Same shape as lsh.candidate_pairs: ONE UDF evaluation (a self-join on
     # the bands would re-run the ArrowEval per side), one shuffle groupBy on
     # the bucket, native nested-transform pair expansion.

@@ -24,10 +24,11 @@ from __future__ import annotations
 from functools import lru_cache
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datasketch_spark.config import _integrate
+from datasketch_spark.operators.lsh import slice_key
 
 
 def _fp_prob(threshold: float, b: int, r: int, xq: float) -> float:
@@ -259,6 +260,23 @@ def reachable_bands_per_partition(
     return out
 
 
+def _band_entries(band_counts: dict[int, int], sig: Column) -> Column:
+    """array of (r, band_idx, band_hash) structs: the first ``n`` bands of
+    width r for each ``{r: n}``, keyed by ``lsh.slice_key((r, band_idx), ...)``
+    — the index side and the query side both call it."""
+    return F.array(
+        *[
+            F.struct(
+                F.lit(r).alias("r"),
+                F.lit(i).alias("band_idx"),
+                slice_key((r, i), i * r, r, sig).alias("band_hash"),
+            )
+            for r, n_bands in band_counts.items()
+            for i in range(n_bands)
+        ]
+    )
+
+
 def ensemble_bands(
     sig_df: DataFrame,
     ecfg: EnsembleConfig,
@@ -280,33 +298,19 @@ def ensemble_bands(
             F.col(size_col) <= partitions[pid][1], F.lit(pid)
         ).otherwise(part_expr)
     with_part = sig_df.withColumn("partition_id", part_expr)
-
-    def _entries(band_counts: dict[int, int]):
-        entries = []
-        for r, n_bands in band_counts.items():
-            for i in range(n_bands):
-                entries.append(
-                    F.struct(
-                        F.lit(r).alias("r"),
-                        F.lit(i).alias("band_idx"),
-                        F.xxhash64(
-                            F.lit(r), F.lit(i), F.slice(F.col(sig_col), i * r + 1, r)
-                        ).alias("band_hash"),
-                    )
-                )
-        return F.array(*entries)
+    sig = F.col(sig_col)
 
     if prune_unreachable:
         per_part = reachable_bands_per_partition(ecfg, partitions)
-        arr_expr = _entries(per_part[-1])
+        arr_expr = _band_entries(per_part[-1], sig)
         for pid in range(len(partitions) - 2, -1, -1):
             if per_part[pid] == per_part[-1]:
                 continue  # identical branch folds into the default
             arr_expr = F.when(
-                F.col("partition_id") == F.lit(pid), _entries(per_part[pid])
+                F.col("partition_id") == F.lit(pid), _band_entries(per_part[pid], sig)
             ).otherwise(arr_expr)
     else:
-        arr_expr = _entries({r: ecfg.num_perm // r for r in ecfg.rs})
+        arr_expr = _band_entries({r: ecfg.num_perm // r for r in ecfg.rs}, sig)
     return with_part.select(
         F.col(key_col),
         "partition_id",
@@ -368,20 +372,9 @@ def containment_query(
     )
 
     # All bands for every distinct optimal r, built once (native exprs).
-    entries = []
-    for r in ecfg.rs:
-        for i in range(ecfg.num_perm // r):
-            entries.append(
-                F.struct(
-                    F.lit(r).alias("r"),
-                    F.lit(i).alias("band_idx"),
-                    F.xxhash64(
-                        F.lit(r), F.lit(i), F.slice(F.col(sig_col), i * r + 1, r)
-                    ).alias("band_hash"),
-                )
-            )
+    all_bands = {r: ecfg.num_perm // r for r in ecfg.rs}
     q_bands = query_sig_df.select(
-        F.col(query_key), F.explode(F.array(*entries)).alias("e")
+        F.col(query_key), F.explode(_band_entries(all_bands, F.col(sig_col))).alias("e")
     ).select(query_key, "e.r", "e.band_idx", "e.band_hash")
 
     # Per-(query, partition) parameter choice: searchsorted(xqs, upper/q,

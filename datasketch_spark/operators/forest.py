@@ -39,10 +39,11 @@ depth-1-join plan this replaces).
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from datasketch_spark.functions.minhash import empty_sig
+from datasketch_spark.operators.lsh import slice_key
 
 
 class ForestConfig:
@@ -88,94 +89,56 @@ def prefix_table(
     key_col: str = "doc_id",
     sig_col: str = "sig",
     depths: list[int] | None = None,
-    exclude_empty: bool = True,
 ) -> DataFrame:
     """(key, tree_idx, depth, prefix_hash) for the PROBED depths only
     (default: ``probe_schedule`` — len(schedule) rows per doc per tree).
 
-    prefix_hash = xxhash64(tree_idx, depth, slice of sig) — injective-enough
-    stand-in for the reference's byte-concat prefix keys (lshforest.py:63);
-    the reference likewise stores one sorted key per (doc, tree) and derives
-    prefixes positionally, so generating only probed depths matches its
-    O(l) storage, not an explosion of every depth.
+    prefix_hash = ``lsh.slice_key((tree_idx, depth), ...)`` over the
+    tree's first ``depth`` slots — injective-enough stand-in for the
+    reference's byte-concat prefix keys (lshforest.py:63); the reference
+    likewise stores one sorted key per (doc, tree) and derives prefixes
+    positionally, so generating only probed depths matches its O(l)
+    storage, not an explosion of every depth.
 
-    ``exclude_empty``: drop rows whose prefix hash equals the never-updated
-    (all-MAX_HASH) signature's — the same hazard ``lsh.bands_table``
-    filters: on a web corpus every null/empty document shares the SAME
-    full-depth prefix in every tree, so m empty docs would meet the
-    deepest probe round as one m^2-pair bucket. Empty docs simply return
-    no forest results (consistent with their bands-table exclusion).
+    Rows whose prefix hash equals the never-updated (all-MAX_HASH)
+    signature's are dropped — the same hazard ``lsh.bands_table`` filters:
+    on a web corpus every null/empty document shares the SAME full-depth
+    prefix in every tree, so m empty docs would meet the deepest probe
+    round as one m^2-pair bucket. Empty docs simply return no forest
+    results (consistent with their bands-table exclusion). The excluded
+    keys constant-fold, so building the table runs no job. A live document
+    collides with one of them only if a signature slot equals MAX_HASH,
+    probability ~2^-32 per slot.
     """
     if depths is None:
         depths = probe_schedule(fcfg.k_per_tree)
-    entries = []
-    for t in range(fcfg.l_trees):
-        start = t * fcfg.k_per_tree
-        for depth in depths:
-            entries.append(
-                F.struct(
-                    F.lit(t).alias("tree_idx"),
-                    F.lit(depth).alias("depth"),
-                    F.xxhash64(
-                        F.lit(t),
-                        F.lit(depth),
-                        F.slice(F.col(sig_col), start + 1, depth),
-                    ).alias("prefix_hash"),
-                )
-            )
-    out = sig_df.select(
-        F.col(key_col), F.explode(F.array(*entries)).alias("e")
-    ).select(
-        key_col,
-        "e.tree_idx",
-        # The stored depths ride along as column metadata so topk_query
-        # can validate a probe schedule against the ACTUAL index, not an
-        # assumed default (metadata survives projections and joins).
-        F.col("e.depth").alias("depth", metadata={"probe_depths": list(depths)}),
-        "e.prefix_hash",
-    )
-    if exclude_empty:
-        out = out.where(
-            ~F.col("prefix_hash").isin(
-                list(
-                    _empty_prefix_hashes(
-                        sig_df.sparkSession, fcfg.l_trees, tuple(depths)
-                    )
-                )
-            )
+    shape = [(t, depth) for t in range(fcfg.l_trees) for depth in depths]
+
+    def key(t: int, depth: int, sig):
+        return slice_key((t, depth), t * fcfg.k_per_tree, depth, sig)
+
+    entries = [
+        F.struct(
+            F.lit(t).alias("tree_idx"),
+            F.lit(depth).alias("depth"),
+            key(t, depth, F.col(sig_col)).alias("prefix_hash"),
         )
-    return out
-
-
-_EMPTY_PREFIX_CACHE: "WeakKeyDictionary" = WeakKeyDictionary()
-
-
-def _empty_prefix_hashes(spark, l_trees: int, depths: tuple) -> tuple:
-    """The (tree, depth) prefix hashes of the never-updated all-MAX_HASH
-    signature — computed once per (session, shape) with the same
-    expressions prefix_table uses (mirrors ``lsh._empty_band_hashes``,
-    same WeakKeyDictionary-per-session caching per the r4 advice). A live
-    document collides with one of these only if a signature slot equals
-    MAX_HASH, probability ~2^-32 per slot."""
-    per_shape = _EMPTY_PREFIX_CACHE.setdefault(spark, {})
-    key = (l_trees, depths)
-    if key in per_shape:
-        return per_shape[key]
-    from datasketch_spark.functions.hashing import MAX_HASH
-
-    exprs = []
-    for t in range(l_trees):
-        for depth in depths:
-            exprs.append(
-                F.xxhash64(
-                    F.lit(t),
-                    F.lit(depth),
-                    F.array_repeat(F.lit(int(MAX_HASH)).cast("long"), depth),
-                )
-            )
-    row = spark.range(1).select(F.array(*exprs).alias("h")).collect()[0]
-    per_shape[key] = tuple(row["h"])
-    return per_shape[key]
+        for t, depth in shape
+    ]
+    empty = empty_sig(fcfg.num_perm)
+    return (
+        sig_df.select(F.col(key_col), F.explode(F.array(*entries)).alias("e"))
+        .select(
+            key_col,
+            "e.tree_idx",
+            # The stored depths ride along as column metadata so topk_query
+            # can validate a probe schedule against the ACTUAL index, not an
+            # assumed default (metadata survives projections and joins).
+            F.col("e.depth").alias("depth", metadata={"probe_depths": list(depths)}),
+            "e.prefix_hash",
+        )
+        .where(~F.col("prefix_hash").isin(*[key(t, d, empty) for t, d in shape]))
+    )
 
 
 def topk_query(

@@ -5,10 +5,10 @@ Reference semantics reproduced:
   - ``MinHashLSH.__init__`` hashranges ``[(i*r, (i+1)*r)]`` (``lsh.py:196``)
     -> ``F.slice(sig, i*r+1, r)``.
   - ``MinHashLSH._H`` band bucket key = bytes of the r slot values
-    (``lsh.py:537-543``) -> ``xxhash64(band_idx, slice)``: any injective
-    encoding of (band_idx, band content) gives identical bucketing
-    semantics; a 64-bit key is what the reference's optional key-compression
-    hashfunc (``lsh.py:81-83``) produces anyway.
+    (``lsh.py:537-543``) -> ``slice_key``: ``xxhash64(band_idx, slice)``.
+    Any injective encoding of (band_idx, band content) gives identical
+    bucketing semantics; a 64-bit key is what the reference's optional
+    key-compression hashfunc (``lsh.py:81-83``) produces anyway.
   - ``MinHashLSH.insert`` (``lsh.py:326-347``) -> append rows to the bands
     table (posexplode), one shuffle write, no KV store.
   - ``MinHashLSH.query`` (``lsh.py:370-432``) -> equi-join on
@@ -24,13 +24,12 @@ Python UDFs.
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datasketch_spark.config import DedupConfig
 from datasketch_spark.functions.minhash import (
+    empty_sig,
     make_signature_from_tokens_udf,
     make_signature_udf,
 )
@@ -97,14 +96,22 @@ def pairs_expr(ids_col: str, pair=_ab) -> Column:
     )
 
 
+def slice_key(salt: tuple[int, ...], start: int, length: int, sig: Column) -> Column:
+    """The bucket key of signature slots ``[start, start + length)``:
+    ``xxhash64(*salt, slice)``, the salts as int literals. The one encoding
+    of a signature slice as a bucket key — LSH bands, forest prefixes and
+    ensemble bands all key through it, so persisted keys (the ``bands``
+    checkpoint stage, ``write_bucketed`` tables) stay comparable."""
+    return F.xxhash64(*[F.lit(x) for x in salt], F.slice(sig, start + 1, length))
+
+
+def _band_keys(cfg: DedupConfig, sig: Column) -> list[Column]:
+    return [slice_key((i,), i * cfg.r, cfg.r, sig) for i in range(cfg.b)]
+
+
 def band_hash_array(cfg: DedupConfig, sig_col: str = "sig"):
-    """array<bigint> of b band hashes — native xxhash64 over each sig slice."""
-    return F.array(
-        *[
-            F.xxhash64(F.lit(i), F.slice(F.col(sig_col), i * cfg.r + 1, cfg.r))
-            for i in range(cfg.b)
-        ]
-    )
+    """array<bigint> of the b band keys of ``sig_col`` (``slice_key``)."""
+    return F.array(*_band_keys(cfg, F.col(sig_col)))
 
 
 def bands_table(
@@ -130,50 +137,20 @@ def bands_table(
     Docs with an empty signature (null/empty text — never updated) are
     excluded: they all share one constant signature, which would form a
     single giant artificial bucket. They remain singletons downstream.
-    The exclusion filters on the (precomputed, per-band) band hashes of
-    the empty signature AFTER explode — filtering on the sig column before
-    the projection would make Catalyst evaluate the signature UDF twice
-    (once for the filter, once for the band array).
+    The exclusion filters on the band keys of ``minhash.empty_sig``
+    (constant-folded to a literal list; building the table runs no job)
+    AFTER explode — filtering on the sig column before the projection
+    would make Catalyst evaluate the signature UDF twice (once for the
+    filter, once for the band array).
     """
-    empty_band_hashes = _empty_band_hashes(sig_df.sparkSession, cfg)
     exploded = sig_df.select(
         F.col(key_col),
         *[F.col(c) for c in extra_cols],
         F.posexplode(band_hash_array(cfg, sig_col)).alias("band_idx", "band_hash"),
     )
     return exploded.where(
-        ~F.col("band_hash").isin([h for h in empty_band_hashes])
+        ~F.col("band_hash").isin(*_band_keys(cfg, empty_sig(cfg.num_perm)))
     )
-
-
-_EMPTY_BAND_CACHE: "WeakKeyDictionary" = WeakKeyDictionary()
-
-
-def _empty_band_hashes(spark, cfg: DedupConfig) -> tuple:
-    """The b band hashes of the never-updated (all-MAX_HASH) signature —
-    computed once per (session, config) with the same expressions used by
-    band_hash_array. Cached in a WeakKeyDictionary keyed on the session so
-    long-lived processes (notebooks) that restart Spark don't pin dead
-    sessions the way an lru_cache would (r4 advice)."""
-    per_cfg = _EMPTY_BAND_CACHE.setdefault(spark, {})
-    key = (cfg.b, cfg.r)
-    if key in per_cfg:
-        return per_cfg[key]
-    from datasketch_spark.functions.hashing import MAX_HASH
-
-    row = spark.range(1).select(
-        F.array(
-            *[
-                F.xxhash64(
-                    F.lit(i),
-                    F.array_repeat(F.lit(int(MAX_HASH)).cast("long"), cfg.r),
-                )
-                for i in range(cfg.b)
-            ]
-        ).alias("h")
-    ).collect()[0]
-    per_cfg[key] = tuple(row["h"])
-    return per_cfg[key]
 
 
 def bucket_histogram(bands: DataFrame) -> DataFrame:

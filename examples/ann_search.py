@@ -44,7 +44,7 @@ def main() -> None:
     brute_force_topk(vectors, queries, k=3).show(6)
 
     print("=== near-duplicate pairs via SimHash buckets ===")
-    simhash_bucketed_pairs(vectors, min_sim=0.95, dim=32).show(6)
+    simhash_bucketed_pairs(vectors, min_sim=0.95).show(6)
 
     print("=== IVF-flat top-k (train once, query many) ===")
     centroids = train_ivf_centroids(vectors, n_lists=20)

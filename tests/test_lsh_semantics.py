@@ -188,3 +188,68 @@ def test_jaccard_and_merge_columns(spark):
     assert est == pytest.approx((o1 == o2).mean())
     merged = pair.select(merge_col("s1", "s2").alias("m")).collect()[0]["m"]
     assert merged == np.minimum(o1, o2).astype(np.int64).tolist()
+
+
+def test_bands_table_excludes_empty_signatures(spark):
+    # Null and "" texts share the never-updated (all-MAX_HASH) signature,
+    # which would form one giant bucket per band; bands_table drops them,
+    # so they get no band rows and pair with nothing.
+    cfg = DedupConfig(threshold=0.5)
+    docs = spark.createDataFrame(
+        [(1, "some real words here"), (2, "some real words here")]
+        + [(3, None), (4, ""), (5, None), (6, "")],
+        "doc_id long, text string",
+    )
+    bands = bands_table(with_signature(docs, cfg), cfg)
+    assert {r["doc_id"] for r in bands.select("doc_id").distinct().collect()} == {1, 2}
+    assert {tuple(r) for r in candidate_pairs(bands, cfg).collect()} == {(1, 2)}
+
+
+def test_bucket_keys_golden(spark):
+    # Band, forest-prefix and ensemble keys of one fixed signature. The
+    # keys are persisted (the bands checkpoint stage, write_bucketed
+    # tables) and xxhash64 has no DuckDB twin, so their values are pinned
+    # here: a change to the key encoding fails this test.
+    from datasketch_spark.operators.ensemble import EnsembleConfig, ensemble_bands
+    from datasketch_spark.operators.forest import ForestConfig, prefix_table
+
+    sig = [(i * 2654435761 + 12345) % int(MAX_HASH) for i in range(128)]
+    df = spark.createDataFrame(
+        [(7, sig, 50)], "doc_id long, sig array<bigint>, set_size int"
+    )
+    bands = bands_table(df, DedupConfig(params=(4, 8)))
+    assert sorted((r["band_idx"], r["band_hash"]) for r in bands.collect()) == [
+        (0, 5282517491209670196),
+        (1, -646244862577117898),
+        (2, 4280519396084218462),
+        (3, 2274822790871633028),
+    ]
+    prefixes = prefix_table(df, ForestConfig(128, 4), depths=[32, 6, 1])
+    assert sorted(
+        (r["tree_idx"], r["depth"], r["prefix_hash"]) for r in prefixes.collect()
+    ) == [
+        (0, 1, -3546864081105325289),
+        (0, 6, -5767837616690896168),
+        (0, 32, -6750405470771080241),
+        (1, 1, -9208013034578225856),
+        (1, 6, 2131897523026077934),
+        (1, 32, -4831099656233714570),
+        (2, 1, -6373930452249192673),
+        (2, 6, -1685847811172672350),
+        (2, 32, -8627020562351317412),
+        (3, 1, -3022091949729706065),
+        (3, 6, 3528354973904334472),
+        (3, 32, 5430437834504228625),
+    ]
+    ecfg = EnsembleConfig()
+    assert ecfg.rs == [6, 8]
+    ens = ensemble_bands(df, ecfg, [(1, 10**6)], prune_unreachable=False).collect()
+    assert len(ens) == 128 // 6 + 128 // 8
+    assert sorted(
+        (r["r"], r["band_idx"], r["band_hash"]) for r in ens if r["band_idx"] < 2
+    ) == [
+        (6, 0, 671073972555639534),
+        (6, 1, -5764787676369151435),
+        (8, 0, -2932120025425238993),
+        (8, 1, 6005870564709570342),
+    ]

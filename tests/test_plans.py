@@ -5,6 +5,8 @@ accidental Exchange or a second Python eval node fails here, not on the
 cluster.
 """
 
+import itertools
+
 from pyspark.sql import functions as F
 
 from datasketch_spark.config import DedupConfig
@@ -18,6 +20,20 @@ from datasketch_spark.plans.inspect import (
     shuffle_count,
 )
 from datasketch_spark.sources.io import NoopCheckpoints, spread
+
+_JOB_GROUPS = itertools.count()
+
+
+def jobs_run(spark, build) -> int:
+    """How many Spark jobs calling ``build()`` runs."""
+    sc = spark.sparkContext
+    group = f"jobs-run-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_signature_stage_single_python_boundary(spark):
@@ -80,9 +96,7 @@ def test_simhash_real_dim_single_python_boundary(spark):
         near = base[i] + rng.normal(scale=1e-4, size=dim)
         rows.append((2 * i + 1, (near / np.linalg.norm(near)).tolist()))
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    pairs = simhash_bucketed_pairs(
-        df, min_sim=0.999, n_bits=16, n_tables=4, dim=dim
-    )
+    pairs = simhash_bucketed_pairs(df, min_sim=0.999, n_bits=16, n_tables=4)
     assert python_eval_count(pairs) == 1
     got = {(r["a"], r["b"]) for r in pairs.collect()}
     # Every planted near-identical pair collides in some table and verifies.
@@ -186,16 +200,33 @@ def test_signature_table_leaves_wide_input_alone(spark, tmp_path):
 
 
 def test_spread_decision_runs_no_job(spark, tmp_path):
-    sc = spark.sparkContext
     docs = _docs_parquet(spark, str(tmp_path / "one"), 1)
     shuffled = docs.repartition(2).select("doc_id", "text")  # adaptive plan
-    sc.setJobGroup("spread-decision", "spread decision")
-    try:
+
+    def spread_all():
         for df in (docs, shuffled, spread(docs), spread(shuffled)):
             spread(df)
-        assert list(sc.statusTracker().getJobIdsForGroup("spread-decision")) == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    assert jobs_run(spark, spread_all) == 0
+
+
+def test_building_key_tables_runs_no_job(spark):
+    # The empty-signature keys these tables exclude constant-fold, and the
+    # SimHash UDF reads the embedding width from its batches: building any
+    # of them is plan construction only, for shapes no earlier call used.
+    from datasketch_spark.operators.ann import simhash_bucketed_pairs
+    from datasketch_spark.operators.forest import ForestConfig, prefix_table
+
+    sigs = spark.createDataFrame([(1, list(range(128)))], "doc_id long, sig array<bigint>")
+    vecs = spark.createDataFrame([(1, [1.0, 0.5])], "vec_id long, embedding array<double>")
+    builds = {
+        "bands_table": lambda: lsh.bands_table(sigs, DedupConfig(params=(7, 11))),
+        "prefix_table": lambda: prefix_table(sigs, ForestConfig(128, 4), depths=[32, 5, 1]),
+        "simhash_bucketed_pairs": lambda: simhash_bucketed_pairs(vecs, 0.9),
+    }
+    assert {name: jobs_run(spark, b) for name, b in builds.items()} == dict.fromkeys(
+        builds, 0
+    )
 
 
 def test_signature_table_evaluates_udf_once_for_every_consumer(spark):
@@ -314,7 +345,7 @@ def test_pair_operator_shuffle_budgets(spark):
     counts = (
         shuffle_count(prefix_filtered_jaccard_pairs(toks, "toks", 0.5)),
         shuffle_count(substring_candidates(fps)),
-        shuffle_count(simhash_bucketed_pairs(vecs, 0.9, n_bits=4, n_tables=2, dim=8)),
+        shuffle_count(simhash_bucketed_pairs(vecs, 0.9, n_bits=4, n_tables=2)),
     )
     # Each: the bucket groupBy and the pair distinct; setjoin and simhash
     # add two exchanges per join-back side.

@@ -21,8 +21,13 @@ def test_sql_api_matches_dataframe_api(spark):
         (2, "der die das und ist nicht ein mit"),
         (3, "totally unaffiliated words here " * 4),
         (4, ""),
+        # Unicode spaces: the SQL functions split like words_col (Java \s+,
+        # ASCII whitespace only), not like Python's str.split().
+        (5, "hello\u00a0world foo"),
+        (6, "a\u2003b"),
+        (7, None),
     ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     df.createOrReplaceTempView("sql_api_docs")
 
     got = spark.sql(
@@ -52,15 +57,18 @@ def test_sql_api_matches_dataframe_api(spark):
         assert r["fp"] == want_rest[d]["fp"], d
         assert r["n"] == want_rest[d]["n"], d
 
-    # lang_id is a SQL scalar function inlined into codegen: the plan must
-    # contain no Arrow/Python eval for it (VERDICT r2 #8).
-    plan = (
-        spark.sql("SELECT lang_id(text) FROM sql_api_docs")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "ArrowEval" not in plan and "BatchEval" not in plan, plan
+    assert len(got) == len(rows)
+
+    # lang_id, doc_fingerprint and token_count are SQL scalar functions
+    # inlined into codegen: the plan must contain no Arrow/Python eval.
+    for fn in ("lang_id", "doc_fingerprint", "token_count"):
+        plan = (
+            spark.sql(f"SELECT {fn}(text) FROM sql_api_docs")
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert "ArrowEval" not in plan and "BatchEval" not in plan, (fn, plan)
 
     # Sketch algebra through SQL.
     alg = spark.sql(

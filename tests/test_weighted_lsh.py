@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType, LongType, StructField, StructType
 
 from datasketch_spark.functions.weighted import make_weighted_minhash_udf, weighted_jaccard_col
+from datasketch_spark.operators.lsh import slice_key
 
 
 def test_weighted_lsh_buckets_similar_vectors(spark):
@@ -38,17 +39,12 @@ def test_weighted_lsh_buckets_similar_vectors(spark):
     df = spark.createDataFrame(rows, schema)
     udf = make_weighted_minhash_udf(dim, sample_size, seed=1)
     w = df.withColumn("wmh", udf("vec"))
-    # Band the (k, t) struct array exactly like sig bands: slice + xxhash64.
+    # Band the (k, t) struct array exactly like sig bands.
     b, r = 16, 8
     bands = w.select(
         "doc_id",
         F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(F.lit(i), F.slice("wmh", i * r + 1, r))
-                    for i in range(b)
-                ]
-            )
+            F.array(*[slice_key((i,), i * r, r, F.col("wmh")) for i in range(b)])
         ).alias("band_idx", "band_hash"),
     )
     cand = (
