@@ -32,7 +32,7 @@ from datasketch_spark.operators.lsh import (
     signature_table,
     with_signature,
 )
-from datasketch_spark.sources.io import spread
+from datasketch_spark.sources.io import local_checkpoint, spread
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -672,14 +672,12 @@ def q_streaming_claims(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    # Pin the result into the block manager, then delete the working dir
-    # (input copy + sink + checkpoint) — repeated bench runs must not
-    # accumulate temp data.
-    out = (
-        spark.read.parquet(out_dir)
-        .select("band_idx", "url", "first_url", "prior_count")
-        .localCheckpoint(eager=True)
-    )
+    # Pin the result into the block manager (the count is the one job that
+    # reads the sink), then delete the working dir (sink + checkpoint) —
+    # repeated bench runs must not accumulate temp data.
+    cols = ("band_idx", "url", "first_url", "prior_count")
+    out = local_checkpoint(spark.read.parquet(out_dir).select(*cols))
+    out.count()
     shutil.rmtree(tmp, ignore_errors=True)
     return out
 

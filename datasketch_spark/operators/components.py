@@ -4,15 +4,17 @@ Absent from the reference entirely (SURVEY.md 2.4); implemented with the
 alternating large-star / small-star DataFrame algorithm (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC 2014), which converges
 in O(log n) rounds even on path graphs. Each round is two grouped
-aggregations + joins; lineage is cut with an eager localCheckpoint per round
-so the plan doesn't grow unboundedly. Local checkpoints are not
-fault-tolerant: an executor lost mid-run loses the round's blocks.
+aggregations + joins; its lineage is cut with ``sources.io.local_checkpoint``
+(lazy) so the plan doesn't grow unboundedly, and the round's convergence
+check is the job that materializes it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from datasketch_spark.sources.io import local_checkpoint
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -72,14 +74,15 @@ def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFram
     """(u, v) undirected edges -> (node, component) labels, component = the
     minimum node id in each connected component.
 
-    Each round is materialized with an eager ``localCheckpoint``, which
-    truncates its lineage.
+    Each round's edges are a lazy ``local_checkpoint``: the round's
+    fingerprint collect is the one job that materializes them, and the
+    next round reads the pinned blocks instead of the growing lineage.
     """
-    cur = _canon(edges).localCheckpoint(eager=True)
+    cur = local_checkpoint(_canon(edges))
     prev_fp = None
     converged = False
     for _ in range(max_iterations):
-        cur = _canon(_small_star(_large_star(cur))).localCheckpoint(eager=True)
+        cur = local_checkpoint(_canon(_small_star(_large_star(cur))))
         fp = _edge_fingerprint(cur)
         if fp == prev_fp:
             converged = True

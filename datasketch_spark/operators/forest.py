@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from datasketch_spark.functions.minhash import empty_sig
 from datasketch_spark.operators.lsh import slice_key
+from datasketch_spark.sources.io import local_checkpoint
 
 
 class ForestConfig:
@@ -163,14 +164,10 @@ def topk_query(
     zip_with slot-equality array feeds both best_depth and est_jaccard),
     keep the round's depth band, and retire queries holding >= k verified
     candidates via an anti-join folded into the NEXT round's probe build —
-    no separate emptiness/count job per round. Rounds materialize via a
-    LAZY ``localCheckpoint(eager=False)``, lineage truncated; under AQE
-    requesting each round's RDD still runs its shuffle stages, so this
-    call runs Spark jobs instead of returning a fully lazy plan (the
-    round's final result stage folds into the next consuming job).
-    Local checkpoints pin blocks to
-    executors and are NOT fault-tolerant: on a real cluster an executor
-    loss mid-query (or before the result is consumed) is unrecoverable.
+    no separate emptiness/count job per round. Each round's rows are a
+    ``sources.io.local_checkpoint`` (see its caveats: the round's shuffle
+    stages run at call time, so this call runs Spark jobs instead of
+    returning a fully lazy plan).
 
     ``diagnostics`` (optional dict) receives ``candidate_rows`` (total
     scored candidate rows accumulated) and per-round ``rounds`` entries —
@@ -299,10 +296,9 @@ def topk_query(
             .where((F.col("best_depth") >= d) & (F.col("best_depth") < prev_d))
             .select(query_key, index_key, "best_depth", "est_jaccard")
         )
-        # eager=False: the round's final result stage folds into the first
-        # consuming job (next round's probe / final ranking) instead of a
-        # dedicated job per round; blocks are still computed once and pinned.
-        parts.append(scored.localCheckpoint(eager=False))
+        # The round's final result stage folds into the first consuming job
+        # (next round's probe / final ranking); blocks are computed once.
+        parts.append(local_checkpoint(scored))
         accumulated = parts[0]
         for p in parts[1:]:
             accumulated = accumulated.unionByName(p)

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from datasketch_spark.operators.lsh import bucket_pairs
 from datasketch_spark.operators.verify import join_sides
+from datasketch_spark.sources.io import local_checkpoint
 
 
 def _effective_threshold(threshold: float, round_digits: int | None) -> float:
@@ -48,20 +49,17 @@ def _prefix_tokens(
     """(base, tokens): the normalized (id, distinct-array, size) table and
     its exploded prefix tokens under the global (hash, token) order.
 
-    ``base`` is lazily checkpointed: it fans into THREE plan branches
-    (prefix tokens + both verification sides), and without the checkpoint
-    each branch re-runs the per-doc array construction + distinct from
-    the scan (three Generate/Project chains in the r6 before-plan). At
-    cluster scale swap for a checkpoint-table write if the distinct token
-    arrays outgrow executor block storage."""
-    base = (
+    ``base`` is a ``sources.io.local_checkpoint``: it fans into THREE plan
+    branches (prefix tokens + both verification sides), and without the
+    cut each branch re-runs the per-doc array construction + distinct from
+    the scan (three Generate/Project chains in the r6 before-plan)."""
+    base = local_checkpoint(
         d.select(
             F.col(id_col).alias("_id"),
             F.array_distinct(F.col(arr_col)).alias("_arr"),
             *[F.col(c).alias(f"_blk_{c}") for c in blocks],
         )
         .withColumn("_n", F.size("_arr"))
-        .localCheckpoint(eager=False)
     )
     ordered = F.transform(
         F.array_sort(

@@ -25,6 +25,13 @@ def _local_dirs() -> str | None:
     return None
 
 
+def _driver_memory() -> str:
+    """``SPARK_DRIVER_MEM``, else half of physical memory in whole GiB (at
+    least 1): the heap shares RAM with the Python workers and shuffle dir."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return os.environ.get("SPARK_DRIVER_MEM", f"{max(1, phys // 2 // 2**30)}g")
+
+
 def get_spark(
     app_name: str = "datasketch-spark",
     master: str | None = None,
@@ -46,7 +53,7 @@ def get_spark(
         # splitting stay on.
         .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
         # ContextCleaner only reclaims finished queries' shuffle files /
         # broadcasts when the driver GCs; with a large mostly-idle heap

@@ -81,7 +81,7 @@ class CheckpointManager:
     def materialize(self, df: DataFrame, stage: str) -> DataFrame:
         """Write the stage, record metrics, return the re-read DataFrame
         (lineage truncated at the table — the scale-path equivalent of
-        localCheckpoint)."""
+        ``local_checkpoint``)."""
         spark = df.sparkSession
         if self.resume and self.has(stage):
             return self.load(spark, stage)
@@ -113,15 +113,27 @@ class CheckpointManager:
         return out
 
 
+def local_checkpoint(df: DataFrame) -> DataFrame:
+    """The package's one in-memory lineage cut: ``df``'s blocks pinned in
+    executor storage, its plan replaced by a scan of them.
+
+    Lazy (``eager=False``): the first action that consumes the result
+    materializes the blocks, so ``eager=True`` would only add a
+    result-stage job of its own (measured ~0.5s per sf0.1 pipeline run
+    with every stage cut eagerly). Caveat (measured): under AQE, cutting a
+    plan that CONTAINS shuffles runs those shuffle stages at call time
+    anyway (requesting the RDD makes AdaptiveSparkPlanExec materialize its
+    query stages); the laziness then only skips the final result stage.
+    Local checkpoints are NOT fault-tolerant: an executor lost mid-run
+    loses its blocks, and the cut lineage cannot recompute them. At
+    cluster scale use ``CheckpointManager.materialize`` (a table write).
+    """
+    return df.localCheckpoint(eager=False)
+
+
 class NoopCheckpoints(CheckpointManager):
-    """In-memory runs (tests/queries): lazy localCheckpoint, nothing
-    written. eager=False measured ~0.5s faster per sf0.1 pipeline run than
-    eager. Caveat (measured): under AQE, localCheckpoint on a plan that
-    CONTAINS shuffles executes those shuffle stages immediately anyway
-    (requesting the RDD makes AdaptiveSparkPlanExec materialize its query
-    stages) — the laziness win is real only for shuffle-free stages like
-    the signature projection; for the rest it merely skips the final
-    result-stage job."""
+    """In-memory runs (tests/queries): every stage is a ``local_checkpoint``,
+    nothing is written."""
 
     enabled = False
 
@@ -129,7 +141,7 @@ class NoopCheckpoints(CheckpointManager):
         super().__init__(root="")
 
     def materialize(self, df, stage):
-        return df.localCheckpoint(eager=False)
+        return local_checkpoint(df)
 
 
 def _planned_partitions(df: DataFrame) -> int:

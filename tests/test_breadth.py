@@ -304,6 +304,29 @@ def test_ivf_train_rejects_empty_or_zero_corpus(spark):
         train_ivf_centroids(empty, n_lists=2)
 
 
+def _dp_histograms():
+    """(trial, num_part, sizes, counts): random skewed size histograms, the
+    inputs of the reference-DP parity test and its golden twin."""
+    rng = np.random.RandomState(11)
+    for trial in range(6):
+        n = int(rng.randint(8, 40))
+        sizes = np.unique(rng.randint(1, 500, size=n)).astype(np.float64)
+        counts = rng.randint(1, 1000, size=len(sizes)).astype(np.float64)
+        for num_part in (3, 5):
+            if num_part <= len(sizes):
+                yield trial, num_part, sizes, counts
+
+
+def _total_nfp(parts, sizes, counts):
+    total = 0.0
+    for lo, hi in parts:
+        mask = (sizes >= lo) & (sizes <= hi)
+        if mask.any():
+            u = float(sizes[mask][-1])
+            total += float(np.sum(counts[mask] * (u - sizes[mask]) / u))
+    return total
+
+
 def test_optimal_partitions_matches_reference_dp():
     # Parity with the reference DP's OBJECTIVE (lshensemble_partition.py):
     # import the reference MODULE (numpy-only, no package __init__) and
@@ -314,51 +337,61 @@ def test_optimal_partitions_matches_reference_dp():
     # forward recurrence uses p2i(p-1)) and reconstructs strictly
     # suboptimal boundaries on most instances — see the divergence note in
     # operators/ensemble.py::optimal_partitions.
-    import importlib.util
+    from tests.refload import load_reference_module
 
     from datasketch_spark.operators.ensemble import optimal_partitions
 
-    spec = importlib.util.spec_from_file_location(
-        "_ref_part", "/root/reference/datasketch/lshensemble_partition.py"
-    )
-    ref = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(ref)
+    ref = load_reference_module("lshensemble_partition")
 
-    def total_nfp(parts, sizes, counts):
-        total = 0.0
-        for lo, hi in parts:
-            mask = (sizes >= lo) & (sizes <= hi)
-            if mask.any():
-                u = float(sizes[mask][-1])
-                total += float(np.sum(counts[mask] * (u - sizes[mask]) / u))
-        return total
-
-    rng = np.random.RandomState(11)
     n_strictly_better = 0
-    for trial in range(6):
-        n = int(rng.randint(8, 40))
-        sizes = np.unique(rng.randint(1, 500, size=n)).astype(np.float64)
-        counts = rng.randint(1, 1000, size=len(sizes)).astype(np.float64)
-        for num_part in (3, 5):
-            if num_part > len(sizes):
-                continue
-            got = optimal_partitions(sizes, counts, num_part)
-            assert len(got) == num_part
-            # Contiguous cover of the domain.
-            assert got[0][0] == int(sizes[0]) and got[-1][1] == int(sizes[-1])
-            nfps = ref._compute_nfps_real(counts, sizes)
-            ref_parts, claimed_opt, _ = ref._compute_best_partitions(
-                num_part, sizes, nfps
-            )
-            ours = total_nfp(got, sizes, counts)
-            theirs = total_nfp(ref_parts, sizes, counts)
-            assert abs(ours - claimed_opt) < 1e-9, (trial, num_part, ours, claimed_opt)
-            assert ours <= theirs + 1e-9
-            if ours < theirs - 1e-9:
-                n_strictly_better += 1
+    for trial, num_part, sizes, counts in _dp_histograms():
+        got = optimal_partitions(sizes, counts, num_part)
+        assert len(got) == num_part
+        # Contiguous cover of the domain.
+        assert got[0][0] == int(sizes[0]) and got[-1][1] == int(sizes[-1])
+        nfps = ref._compute_nfps_real(counts, sizes)
+        ref_parts, claimed_opt, _ = ref._compute_best_partitions(
+            num_part, sizes, nfps
+        )
+        ours = _total_nfp(got, sizes, counts)
+        theirs = _total_nfp(ref_parts, sizes, counts)
+        assert abs(ours - claimed_opt) < 1e-9, (trial, num_part, ours, claimed_opt)
+        assert ours <= theirs + 1e-9
+        if ours < theirs - 1e-9:
+            n_strictly_better += 1
     # The reference backtrack bug manifests on these seeds; if this stops
     # holding the reference was fixed and boundary equality can be asserted.
     assert n_strictly_better > 0
+
+
+def test_optimal_partitions_objective_golden():
+    # Runs without the reference checkout: pins this package's optimal
+    # total NFP on the parity test's histograms.
+    from datasketch_spark.operators.ensemble import optimal_partitions
+
+    got = {}
+    for trial, num_part, sizes, counts in _dp_histograms():
+        parts = optimal_partitions(sizes, counts, num_part)
+        assert len(parts) == num_part
+        assert parts[0][0] == int(sizes[0]) and parts[-1][1] == int(sizes[-1])
+        got[trial, num_part] = _total_nfp(parts, sizes, counts)
+    assert got == pytest.approx(
+        {
+            (0, 3): 3053.3860658779427,
+            (0, 5): 1822.4830127183645,
+            (1, 3): 3640.539408808584,
+            (1, 5): 2234.444362104185,
+            (2, 3): 640.1844577854012,
+            (2, 5): 165.41202795212882,
+            (3, 3): 3571.387124555442,
+            (3, 5): 2008.2371441578653,
+            (4, 3): 3060.861007846588,
+            (4, 5): 1497.2220753639785,
+            (5, 3): 686.4751110500883,
+            (5, 5): 198.0785205960011,
+        },
+        abs=1e-9,
+    )
 
 
 def test_ensemble_optimal_partitions_pipeline(spark):
@@ -582,6 +615,18 @@ def test_ann_topk_and_simhash_recall(spark):
     assert len(approx) >= 0.9 * len(exact)  # high recall on tight clusters
 
 
+_HLL_WORDS = [f"word-{i}" for i in range(3000)] + ["word-0", "word-1"]
+
+
+def _hll_md5_estimate(spark) -> float:
+    from datasketch_spark.operators.hll import hll_count_reference, md5_hash32_col
+
+    df = spark.createDataFrame([(w,) for w in _HLL_WORDS], ["word"])
+    return hll_count_reference(
+        df, "word", p=8, hash32=md5_hash32_col("word")
+    ).collect()[0]["hll_estimate"]
+
+
 def test_hll_count_reference_parity(spark):
     # The Spark-native reference-parity estimator vs the ACTUAL reference
     # HyperLogLog object, same custom md5-based 32-bit hashfunc, same
@@ -591,22 +636,23 @@ def test_hll_count_reference_parity(spark):
     from tests.refload import load_reference_module
 
     ref_hll_mod = load_reference_module("hyperloglog")
-    from datasketch_spark.operators.hll import hll_count_reference, md5_hash32_col
 
     def md5_hash32(b: bytes) -> int:
         return int(hashlib.md5(b).hexdigest()[:8], 16)
 
-    words = [f"word-{i}" for i in range(3000)] + ["word-0", "word-1"]
     ref = ref_hll_mod.HyperLogLog(p=8, hashfunc=md5_hash32)
-    for w in words:
+    for w in _HLL_WORDS:
         ref.update(w.encode())
     expected = ref.count()
 
-    df = spark.createDataFrame([(w,) for w in words], ["word"])
-    got = hll_count_reference(df, "word", p=8, hash32=md5_hash32_col("word")).collect()[
-        0
-    ]["hll_estimate"]
+    got = _hll_md5_estimate(spark)
     assert abs(got - float(expected)) < 1e-9, (got, expected)
+
+
+def test_hll_count_reference_golden(spark):
+    # Runs without the reference checkout: pins this package's estimate on
+    # the parity test's values.
+    assert _hll_md5_estimate(spark) == pytest.approx(2851.963303571345, abs=1e-9)
 
 
 def test_hll_count_reference_empty_input(spark):

@@ -185,37 +185,33 @@ def test_parity64_shingle_mode():
     assert (hv >= (1 << 32)).any()  # genuinely 64-bit values
 
 
-def test_signature_bit_parity_vs_reference_implementation():
-    # Strongest parity evidence: load the REFERENCE MinHash module itself
-    # (module-level import machinery; the full package pulls optional
-    # deps) and compare signatures bit-for-bit across random inputs,
-    # seeds, and permutation counts.
-    import importlib.util
-    import sys
-    import types
-
-    pkg = types.ModuleType("datasketch")
-    pkg.__path__ = ["/root/reference/datasketch"]
-    sys.modules.setdefault("datasketch", pkg)
-    for name in ("hashfunc", "minhash"):
-        spec = importlib.util.spec_from_file_location(
-            f"datasketch.{name}", f"/root/reference/datasketch/{name}.py"
-        )
-        mod = importlib.util.module_from_spec(spec)
-        sys.modules[f"datasketch.{name}"] = mod
-        spec.loader.exec_module(mod)
-    RefMinHash = sys.modules["datasketch.minhash"].MinHash
-
-    from datasketch_spark.functions.shingles import byte_shingles
-
+def _parity_trials():
+    """(num_perm, seed, tokens) over random inputs, seeds and permutation
+    counts: the inputs of the reference-parity test and its golden twin."""
     rng = np.random.RandomState(123)
-    for trial in range(6):
+    for _ in range(6):
         num_perm = int(rng.choice([16, 64, 128]))
         seed = int(rng.randint(0, 10_000))
         n_tokens = int(rng.randint(1, 200))
         tokens = [
             f"tok-{rng.randint(0, 1_000_000)}".encode() for _ in range(n_tokens)
         ]
+        yield num_perm, seed, tokens
+
+
+_PARITY_TEXT = "the quick brown fox jumps over the lazy dog " * 7
+
+
+def test_signature_bit_parity_vs_reference_implementation():
+    # Strongest parity evidence: load the REFERENCE MinHash module itself
+    # (module-level import machinery; the full package pulls optional
+    # deps) and compare signatures bit-for-bit across random inputs,
+    # seeds, and permutation counts.
+    from tests.refload import load_reference_module
+
+    RefMinHash = load_reference_module("minhash").MinHash
+
+    for trial, (num_perm, seed, tokens) in enumerate(_parity_trials()):
         ref = RefMinHash(num_perm=num_perm, seed=seed)
         ref.update_batch(tokens)
         a, b = permutations(num_perm, seed)
@@ -223,14 +219,35 @@ def test_signature_bit_parity_vs_reference_implementation():
         assert np.array_equal(ref.hashvalues, ours), (trial, num_perm, seed)
 
     # And through the engine's parity-mode shingling on real-ish text.
-    text = "the quick brown fox jumps over the lazy dog " * 7
     ref = RefMinHash(num_perm=128, seed=1)
-    ref.update_batch(byte_shingles(text, 5))
+    ref.update_batch(byte_shingles(_PARITY_TEXT, 5))
     a, b = permutations(128, 1)
-    from datasketch_spark.functions.shingles import shingle_hashes_sha1
-
-    ours = permute_min(shingle_hashes_sha1(text, 5), a, b)
+    ours = permute_min(shingle_hashes_sha1(_PARITY_TEXT, 5), a, b)
     assert np.array_equal(ref.hashvalues, ours)
+
+
+def _sig_digest(sig: np.ndarray) -> str:
+    return hashlib.sha256(sig.astype("<u8").tobytes()).hexdigest()[:16]
+
+
+def test_signature_bit_golden():
+    # Runs without the reference checkout: pins this package's signatures
+    # on the parity test's inputs.
+    got = []
+    for num_perm, seed, tokens in _parity_trials():
+        sig = permute_min(sha1_hash32_batch(tokens), *permutations(num_perm, seed))
+        got.append((num_perm, seed, _sig_digest(sig)))
+    assert got == [
+        (128, 1346, "1a5588a8cb0846ec"),
+        (64, 7224, "0409a500a7b104f2"),
+        (128, 3365, "bffdadb30fead5fb"),
+        (64, 6382, "83df81b058c2aaf5"),
+        (16, 6733, "e89e32c8283692e9"),
+        (64, 6948, "bb1c45e5868298a3"),
+    ]
+    text_sig = permute_min(shingle_hashes_sha1(_PARITY_TEXT, 5), *permutations(128, 1))
+    assert text_sig[:2].tolist() == [84766837, 11034845]
+    assert _sig_digest(text_sig) == "b3f1fb72d48817f3"
 
 
 def test_permute_min_property_vs_pure_integer_math():

@@ -229,6 +229,15 @@ def test_building_key_tables_runs_no_job(spark):
     )
 
 
+def test_connected_components_job_budget(spark):
+    # Each round's edges are a lazy local_checkpoint that the round's
+    # fingerprint collect materializes: cutting lineage adds no job.
+    from datasketch_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(40)], ["u", "v"])
+    assert jobs_run(spark, lambda: connected_components(edges)) == 64
+
+
 def test_signature_table_evaluates_udf_once_for_every_consumer(spark):
     cfg = DedupConfig(threshold=0.5)
     docs = spark.createDataFrame(

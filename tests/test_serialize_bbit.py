@@ -1,5 +1,6 @@
 """LeanMinHash codec round-trip + b-bit / count / is_empty column fns."""
 
+import hashlib
 import struct
 
 import numpy as np
@@ -119,6 +120,33 @@ def test_lean_minhash_bytes_parity_with_reference():
     assert seed == 7 and vals == [int(v) for v in m.hashvalues]
 
 
+def _sig(tokens: list[bytes], num_perm: int, seed: int) -> np.ndarray:
+    return permute_min(sha1_hash32_batch(tokens), *permutations(num_perm, seed))
+
+
+def test_lean_minhash_bytes_golden():
+    # Runs without the reference checkout: pins this package's lean bytes
+    # for the parity test's MinHash.
+    sig = _sig([f"t{i}".encode() for i in range(50)], 32, 7)
+    buf = lean_minhash_bytes(7, sig)
+    assert len(buf) == 140
+    assert hashlib.sha256(buf).hexdigest()[:16] == "c188dafcbe896987"
+    assert lean_minhash_from_bytes(buf) == (7, [int(v) for v in sig])
+
+
+_BBIT_COMMON = [f"c{i}".encode() for i in range(60)]
+_BBIT_X = _BBIT_COMMON + [f"x{i}".encode() for i in range(40)]
+_BBIT_Y = _BBIT_COMMON + [f"y{i}".encode() for i in range(40)]
+
+
+def _bbit_jaccard(spark, s1, s2, b: int) -> float:
+    df = spark.createDataFrame(
+        [([int(v) for v in s1], [int(v) for v in s2])], ["s1", "s2"]
+    )
+    j = bbit_jaccard_col(bbit_col("s1", b), bbit_col("s2", b), b=b, r=0.0, num_perm=128)
+    return df.select(j.alias("j")).collect()[0]["j"]
+
+
 def test_bbit_jaccard_r0_parity_with_reference(spark):
     # At r=0 (the default large-universe case) our b-bit estimator and the
     # reference bBitMinHash.jaccard must agree exactly; for r > 0 they
@@ -129,27 +157,26 @@ def test_bbit_jaccard_r0_parity_with_reference(spark):
     ref_mh = load_reference_module("minhash")
     ref_bbit = load_reference_module("b_bit_minhash")
 
-    from datasketch_spark.functions.minhash import bbit_col, bbit_jaccard_col
-
     m1 = ref_mh.MinHash(num_perm=128, seed=1)
     m2 = ref_mh.MinHash(num_perm=128, seed=1)
-    common = [f"c{i}".encode() for i in range(60)]
-    m1.update_batch(common + [f"x{i}".encode() for i in range(40)])
-    m2.update_batch(common + [f"y{i}".encode() for i in range(40)])
+    m1.update_batch(_BBIT_X)
+    m2.update_batch(_BBIT_Y)
     for b in (1, 2, 4):
         expected = ref_bbit.bBitMinHash(m1, b=b, r=0.0).jaccard(
             ref_bbit.bBitMinHash(m2, b=b, r=0.0)
         )
-        df = spark.createDataFrame(
-            [([int(v) for v in m1.hashvalues], [int(v) for v in m2.hashvalues])],
-            ["s1", "s2"],
-        )
-        got = df.select(
-            bbit_jaccard_col(
-                bbit_col("s1", b), bbit_col("s2", b), b=b, r=0.0, num_perm=128
-            ).alias("j")
-        ).collect()[0]["j"]
+        got = _bbit_jaccard(spark, m1.hashvalues, m2.hashvalues, b)
         assert abs(got - float(expected)) < 1e-12, (b, got, expected)
+
+
+def test_bbit_jaccard_r0_golden(spark):
+    # Runs without the reference checkout: pins this package's b-bit
+    # estimates for the parity test's signatures.
+    s1, s2 = _sig(_BBIT_X, 128, 1), _sig(_BBIT_Y, 128, 1)
+    got = {b: _bbit_jaccard(spark, s1, s2, b) for b in (1, 2, 4)}
+    assert got == pytest.approx(
+        {1: 0.421875, 2: 0.4583333333333333, 4: 0.44166666666666665}, abs=1e-12
+    )
 
 
 def test_hll_codec_reference_roundtrip(spark):
@@ -191,4 +218,24 @@ def test_hll_codec_reference_roundtrip(spark):
     assert ref2 == ref
 
     # Empty sketch: linear counting yields exactly 0.0.
+    assert hll_count_from_bytes(hll_bytes(8, np.zeros(256))) == 0.0
+
+
+def test_hll_codec_golden(spark):
+    # Runs without the reference checkout: pins this package's exported
+    # bytes and estimate for the round-trip test's values.
+    from datasketch_spark.functions.serialize import hll_bytes, hll_from_bytes
+    from datasketch_spark.operators.hll import (
+        hll_count_from_bytes,
+        hll_export_bytes,
+        hll_registers,
+    )
+
+    df = spark.createDataFrame([(f"word{i}",) for i in range(500)], ["word"])
+    buf = hll_export_bytes(hll_registers(df, "word", p=8), 8)
+    assert len(buf) == 1 + 256
+    assert hashlib.sha256(buf).hexdigest()[:16] == "51beefbbb1f4a3cc"
+    assert hll_count_from_bytes(buf) == pytest.approx(509.3963220454781, abs=1e-9)
+    p, reg = hll_from_bytes(buf)
+    assert hll_bytes(p, reg) == buf
     assert hll_count_from_bytes(hll_bytes(8, np.zeros(256))) == 0.0
