@@ -17,23 +17,19 @@ the same capabilities callable from plain SQL,
     ''')
     spark.sql("SELECT minhash_jaccard(a.sig, b.sig) FROM ...")
 
-Functions whose semantics are pure expressions register as SQL SCALAR
-FUNCTIONS (``CREATE FUNCTION ... RETURN expr`` — inlined into whole-stage
-codegen, zero Python): ``lang_id``, ``token_count`` and ``doc_fingerprint``,
-each the same expression as its column twin. The rest are Arrow-batched pandas
-UDFs (vectorized over batches, never row-at-a-time Python). For hot paths
-prefer the native column expressions (``jaccard_col``/``langid_col``/...);
-the pandas-UDF layer trades one Arrow boundary for SQL ergonomics,
-exactly like the signature UDF itself.
+``minhash_sig`` is the signature pandas UDF itself (one Arrow boundary,
+exactly like ``with_signature``). Every other function is a SQL SCALAR
+FUNCTION (``CREATE FUNCTION ... RETURN expr`` — inlined into whole-stage
+codegen, zero Python) whose body is the same expression as its column
+twin: ``minhash_jaccard``/``minhash_merge``/``minhash_count`` are
+``jaccard_col``/``merge_col``/``count_col``, and ``lang_id``,
+``token_count`` and ``doc_fingerprint`` are ``langid_col``,
+``token_count_col`` and ``fingerprint_col``.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 from datasketch_spark.config import DedupConfig
 from datasketch_spark.functions.hashing import MAX_HASH
@@ -57,43 +53,40 @@ def register_sql(
         make_signature_udf(num_perm, cfg.seed, cfg.shingle_k, cfg.hash_mode),
     )
 
-    @F.pandas_udf(DoubleType())
-    def _jaccard(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        a = np.array(s1.tolist(), dtype=np.int64)
-        b = np.array(s2.tolist(), dtype=np.int64)
-        return pd.Series((a == b).mean(axis=1))
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _merge(s1: pd.Series, s2: pd.Series) -> pd.Series:
-        a = np.array(s1.tolist(), dtype=np.int64)
-        b = np.array(s2.tolist(), dtype=np.int64)
-        return pd.Series(list(np.minimum(a, b)))
-
-    @F.pandas_udf(DoubleType())
-    def _count(s: pd.Series) -> pd.Series:
-        a = np.array(s.tolist(), dtype=np.float64)
-        total = (a / float(int(MAX_HASH))).sum(axis=1)
-        return pd.Series(np.where(total > 0, num_perm / total - 1.0, 0.0))
-
-    spark.udf.register(f"{prefix}minhash_jaccard", _jaccard)
-    spark.udf.register(f"{prefix}minhash_merge", _merge)
-    spark.udf.register(f"{prefix}minhash_count", _count)
-
-    # lang_id, token_count and doc_fingerprint are SQL SCALAR FUNCTIONS
-    # (CREATE ... RETURN expr), not pandas UDFs: each body is the exact
-    # expression of its column twin (langid_col: argmax of per-language
-    # distinct-stopword hits, LANG_PRIORITY tie-break via a lexicographic
-    # struct max; token_count_col; fingerprint_col), tokenized like
-    # words_col with Java's \s+, and Spark inlines it into whole-stage
-    # codegen — no Arrow boundary, no per-row Python.
-    def words_sql(t: str) -> str:
-        return rf"filter(split(trim({t}), '\\s+'), x -> x != '')"
-
-    def scalar(name: str, ret: str, body: str) -> None:
+    # Everything else is a SQL SCALAR FUNCTION (CREATE ... RETURN expr):
+    # each body is the exact expression of its column twin, and Spark
+    # inlines it into whole-stage codegen — no Arrow boundary, no per-row
+    # Python.
+    def scalar(name: str, params: str, ret: str, body: str) -> None:
         spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {prefix}{name}(t STRING) "
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {prefix}{name}({params}) "
             f"RETURNS {ret} RETURN {body}"
         )
+
+    # Sketch algebra: jaccard_col, merge_col and count_col, num_perm inlined.
+    pair = "s1 ARRAY<BIGINT>, s2 ARRAY<BIGINT>"
+    scalar(
+        "minhash_jaccard",
+        pair,
+        "DOUBLE",
+        "aggregate(zip_with(s1, s2, (x, y) -> CAST(x = y AS INT)), 0, "
+        f"(acc, v) -> acc + v) / {float(num_perm)}D",
+    )
+    scalar("minhash_merge", pair, "ARRAY<BIGINT>", "zip_with(s1, s2, (x, y) -> least(x, y))")
+    scalar(
+        "minhash_count",
+        "s ARRAY<BIGINT>",
+        "DOUBLE",
+        f"{float(num_perm)}D / aggregate(s, 0.0D, "
+        f"(acc, v) -> acc + CAST(v AS DOUBLE) / {float(int(MAX_HASH))}D) - 1.0D",
+    )
+
+    # Text functions: langid_col (argmax of per-language distinct-stopword
+    # hits, LANG_PRIORITY tie-break via a lexicographic struct max),
+    # token_count_col and fingerprint_col, tokenized like words_col with
+    # Java's \s+.
+    def words_sql(t: str) -> str:
+        return rf"filter(split(trim({t}), '\\s+'), x -> x != '')"
 
     score_structs = ", ".join(
         "named_struct('s', size(array_intersect({words}, array({sw}))), "
@@ -107,11 +100,15 @@ def register_sql(
     )
     scalar(
         "lang_id",
+        "t STRING",
         "STRING",
         f"if(array_max(array({score_structs})).s > 0, "
         f"array_max(array({score_structs})).l, 'und')",
     )
-    scalar("token_count", "INT", f"size({words_sql('t')})")
+    scalar("token_count", "t STRING", "INT", f"size({words_sql('t')})")
     scalar(
-        "doc_fingerprint", "STRING", f"md5(array_join({words_sql('lower(t)')}, ' '))"
+        "doc_fingerprint",
+        "t STRING",
+        "STRING",
+        f"md5(array_join({words_sql('lower(t)')}, ' '))",
     )

@@ -8,17 +8,17 @@ accumulated (``lshforest.py:92-128``) — that early exit is what makes
 Forest queries sublinear.
 
 Spark-shaped equivalent with identical top-k semantics: BATCHED ITERATIVE
-DEEPENING. Probe depths descend geometrically (default: quarter steps
-with a depth-2 guard round before the near-all-pairs depth-1 band, e.g.
-[16, 4, 2, 1]); each round is ONE equi-join on (tree_idx, depth,
+DEEPENING. Probe depths descend geometrically (``probe_schedule``: quarter
+steps with a depth-2 guard round before the near-all-pairs depth-1 band,
+e.g. [16, 4, 2, 1]); each round is ONE equi-join on (tree_idx, depth,
 prefix_hash) restricted to the still-unsatisfied queries, each joined pair
 is scored with its TRUE deepest-shared-prefix depth (one shared
 slot-equality array), and queries that have accumulated >= k verified
 candidates are anti-joined away before the next (shallower, hotter) round.
 A true prefix match at depth d is also a match at every shallower depth,
-so joining a single depth per round finds every pair in its depth band —
-the index stores ONLY the probed depths (len(schedule) rows per doc per
-tree, e.g. 4 instead of 16).
+so joining only a round's own depths finds every pair in its depth band —
+the index stores ONLY the probed depths (4 rows per doc per tree instead
+of 16 at k_per_tree = 16).
 
 Correctness vs full enumeration: the accumulated set after the stop round
 contains every pair with best_depth >= the stop depth, which is >= k pairs
@@ -56,30 +56,32 @@ class ForestConfig:
         self.k_per_tree = num_perm // l_trees
 
 
-def probe_schedule(k_per_tree: int, factor: int = 4, guard: int = 2) -> list[int]:
-    """Geometric descent of probe depths: k, k//factor, ..., guard, 1
-    (always ends at 1, the completeness depth).
+# probe_schedule's descent; its docstring has the measurements that chose it.
+_FACTOR = 4
+_GUARD = 2
 
-    Results are identical for ANY valid schedule (every pair is re-scored
-    with its true best_depth); the shape only trades per-round fixed cost
-    (one materialization job per depth) against early-exit granularity
-    (a coarser schedule enumerates more rows before retiring a query).
-    The default keeps a ``guard`` round at depth 2 before the
-    near-all-pairs depth-1 band: measured at sf0.1, [16, 4, 2, 1]
-    accumulates 31.5k candidate rows vs 123.5k for the pure-quarter
-    [16, 4, 1] (queries satisfiable at depth 2-3 never touch the depth-1
-    flood — the property that matters at 100x corpus size), while still
-    beating the r3 halving schedule [16, 8, 4, 2, 1] on wall clock
-    (4.90s vs 5.01s isolated; depth 8 retired only 4 of 6856 rows).
-    ``guard=1`` gives the pure-factor descent ([16, 4, 1]: 3.52s at
-    sf0.1 — fastest at small SF, candidate-heavier at scale)."""
-    if factor < 2:
-        raise ValueError("factor must be >= 2")
+
+def probe_schedule(k_per_tree: int) -> list[int]:
+    """The forest's probe depths: k, k//4, ..., 2, 1 (always ends at 1,
+    the completeness depth).
+
+    Results do not depend on the depths (every pair is re-scored with its
+    true best_depth); the shape only trades per-round fixed cost (one
+    materialization job per round) against early-exit granularity (a
+    coarser descent enumerates more rows before retiring a query). The
+    depth-2 guard round sits before the near-all-pairs depth-1 band:
+    measured at sf0.1, [16, 4, 2, 1] accumulates 31.5k candidate rows vs
+    123.5k for the pure-quarter [16, 4, 1] (queries satisfiable at depth
+    2-3 never touch the depth-1 flood — the property that matters at 100x
+    corpus size), while still beating the r3 halving schedule
+    [16, 8, 4, 2, 1] on wall clock (4.90s vs 5.01s isolated; depth 8
+    retired only 4 of 6856 rows). The pure-quarter descent was fastest at
+    small SF (3.52s at sf0.1) but candidate-heavier at scale."""
     out: list[int] = []
     d = k_per_tree
     while d > 1:
         out.append(d)
-        d = max(d // factor, guard if d > guard else 1)
+        d = max(d // _FACTOR, _GUARD if d > _GUARD else 1)
     out.append(1)
     return out
 
@@ -89,10 +91,9 @@ def prefix_table(
     fcfg: ForestConfig,
     key_col: str = "doc_id",
     sig_col: str = "sig",
-    depths: list[int] | None = None,
 ) -> DataFrame:
-    """(key, tree_idx, depth, prefix_hash) for the PROBED depths only
-    (default: ``probe_schedule`` — len(schedule) rows per doc per tree).
+    """(key, tree_idx, depth, prefix_hash) for the ``probe_schedule``
+    depths only: len(probe_schedule) rows per doc per tree.
 
     prefix_hash = ``lsh.slice_key((tree_idx, depth), ...)`` over the
     tree's first ``depth`` slots — injective-enough stand-in for the
@@ -111,8 +112,14 @@ def prefix_table(
     collides with one of them only if a signature slot equals MAX_HASH,
     probability ~2^-32 per slot.
     """
-    if depths is None:
-        depths = probe_schedule(fcfg.k_per_tree)
+    return _prefix_rows(sig_df, fcfg, key_col, sig_col, probe_schedule(fcfg.k_per_tree))
+
+
+def _prefix_rows(
+    sig_df: DataFrame, fcfg: ForestConfig, key_col: str, sig_col: str, depths: list[int]
+) -> DataFrame:
+    """``prefix_table``'s rows at ``depths``: the index, or one round's
+    query side."""
     shape = [(t, depth) for t in range(fcfg.l_trees) for depth in depths]
 
     def key(t: int, depth: int, sig):
@@ -129,15 +136,7 @@ def prefix_table(
     empty = empty_sig(fcfg.num_perm)
     return (
         sig_df.select(F.col(key_col), F.explode(F.array(*entries)).alias("e"))
-        .select(
-            key_col,
-            "e.tree_idx",
-            # The stored depths ride along as column metadata so topk_query
-            # can validate a probe schedule against the ACTUAL index, not an
-            # assumed default (metadata survives projections and joins).
-            F.col("e.depth").alias("depth", metadata={"probe_depths": list(depths)}),
-            "e.prefix_hash",
-        )
+        .select(key_col, "e.tree_idx", "e.depth", "e.prefix_hash")
         .where(~F.col("prefix_hash").isin(*[key(t, d, empty) for t, d in shape]))
     )
 
@@ -152,93 +151,36 @@ def topk_query(
     index_key: str = "doc_id",
     sig_col: str = "sig",
     diagnostics: dict | None = None,
-    schedule: list[int] | None = None,
-    index_depths: list[int] | None = None,
 ) -> DataFrame:
     """Batched top-k: (query_id, doc_id, best_depth, est_jaccard, rank),
     identical to full-enumeration ranking (see module docstring), computed
     with per-query early exit.
 
-    Each round: join the active queries' single-depth prefixes against the
-    index prefixes at that depth, score every pair's true best_depth (ONE
-    zip_with slot-equality array feeds both best_depth and est_jaccard),
-    keep the round's depth band, and retire queries holding >= k verified
-    candidates via an anti-join folded into the NEXT round's probe build —
-    no separate emptiness/count job per round. Each round's rows are a
-    ``sources.io.local_checkpoint`` (see its caveats: the round's shuffle
-    stages run at call time, so this call runs Spark jobs instead of
-    returning a fully lazy plan).
+    Each round: join the active queries' prefixes against the index
+    prefixes at the round's depths, score every pair's true best_depth
+    (ONE zip_with slot-equality array feeds both best_depth and
+    est_jaccard), keep the round's depth band, and retire queries holding
+    >= k verified candidates via an anti-join folded into the NEXT round's
+    probe build — no separate emptiness/count job per round. Each round's
+    rows are a ``sources.io.local_checkpoint`` (see its caveats: the
+    round's shuffle stages run at call time, so this call runs Spark jobs
+    instead of returning a fully lazy plan).
+
+    The deep ``probe_schedule`` depths share one round and the last two
+    depths get one each ([16, 4, 2, 1] -> [[16, 4], [2], [1]]): deep
+    buckets are small and sparse, so almost no query retires between
+    them, while the retirement barriers that protect the HOT shallow bands
+    (depth 2, the near-all-pairs depth 1) are kept. Grouping changes no
+    output: every pair is still scored with its true best_depth and the
+    band filters tile [1, k_per_tree].
 
     ``diagnostics`` (optional dict) receives ``candidate_rows`` (total
     scored candidate rows accumulated) and per-round ``rounds`` entries —
     the coverage/pruning metric mirroring ``lsh.dropped_buckets`` (adds
     one count job per round).
-
-    ``schedule`` (optional) overrides the probe depths — strictly
-    descending, ending at 1. Every scheduled depth MUST be present in
-    ``index_prefixes`` (a depth the index lacks would silently yield zero
-    candidates for its band, quietly corrupting the top-k), so the
-    schedule is validated against the index's ACTUAL depths: the explicit
-    ``index_depths`` argument if given, else the ``probe_depths`` column
-    metadata every ``prefix_table`` output carries (zero cost), else
-    assumed ``probe_schedule(fcfg.k_per_tree)``.
-
-    Each schedule entry may be an int (one probe depth per round) or a
-    list of ints (one round probing SEVERAL depths at once: one join on
-    ``depth IN (...)``, one band filter ``[min(group), prev)``). By
-    default the DEEP depths are merged into one round and the final two
-    depths stay singleton rounds (e.g. [16,4,2,1] → [[16,4],[2],[1]]):
-    deep buckets are small and sparse, so almost no query retires
-    between the deep rounds — paying a full round of fixed cost (join +
-    materialization + retirement) per deep depth buys nothing, while the
-    retirement barriers that protect the HOT shallow bands (depth 2, the
-    near-all-pairs depth 1) are kept. Output is IDENTICAL for any valid
-    grouping: every pair is still scored with its true best_depth, the
-    band filters tile [1, k_per_tree] exactly as before, and extra rows
-    accumulated for queries that would have retired mid-group can never
-    displace higher-depth rows from the final top-k window.
     """
-    meta_depths = None
-    try:
-        md = index_prefixes.schema["depth"].metadata or {}
-        if md.get("probe_depths"):
-            meta_depths = [int(d) for d in md["probe_depths"]]
-    except KeyError:
-        pass
-    # An explicitly passed index_depths wins over column metadata: a
-    # caller who rebuilt/transformed the prefix table may carry stale
-    # metadata, and silently ignoring their argument would corrupt the
-    # schedule validation below without warning.
-    if index_depths is None:
-        index_depths = (
-            meta_depths
-            if meta_depths is not None
-            else probe_schedule(fcfg.k_per_tree)
-        )
-    if schedule is None:
-        # Default grouping: merge the deep depths into one round, keep
-        # the last two depths as singleton retirement rounds (docstring).
-        flat_default = [d for d in index_depths]
-        if len(flat_default) > 3:
-            schedule = [flat_default[:-2], *flat_default[-2:]]
-        else:
-            schedule = flat_default
-    groups: list[list[int]] = [
-        [int(d)] if isinstance(d, int) else sorted((int(x) for x in d), reverse=True)
-        for d in schedule
-    ]
-    flat = [d for g in groups for d in g]
-    if not flat or flat[-1] != 1 or any(
-        flat[i] <= flat[i + 1] for i in range(len(flat) - 1)
-    ):
-        raise ValueError("schedule must strictly descend and end at 1")
-    missing = set(flat) - set(index_depths)
-    if missing:
-        raise ValueError(
-            f"scheduled depths {sorted(missing)} absent from the index "
-            f"(index_depths={sorted(set(index_depths))}); probing them "
-            "would silently yield zero candidates for those bands"
-        )
+    depths = probe_schedule(fcfg.k_per_tree)
+    groups = ([depths[:-2]] if len(depths) > 2 else []) + [[d] for d in depths[-2:]]
     q_sigs = query_sig_df.select(F.col(query_key), F.col(sig_col).alias("_qsig"))
     i_sigs = index_sig_df.select(F.col(index_key), F.col(sig_col).alias("_isig"))
     kpt = fcfg.k_per_tree
@@ -261,13 +203,9 @@ def topk_query(
     prev_d = kpt + 1
     rounds: list[dict] = []
     for group in groups:
-        d = min(group)  # the round's band floor
-        q_pref = prefix_table(
-            query_sig_df.join(active, query_key),
-            fcfg,
-            key_col=query_key,
-            sig_col=sig_col,
-            depths=group,
+        d = group[-1]  # the round's band floor
+        q_pref = _prefix_rows(
+            query_sig_df.join(active, query_key), fcfg, query_key, sig_col, group
         )
         cands = (
             q_pref.join(

@@ -188,13 +188,8 @@ def candidate_pairs(
     raised. Salting keeps task-level pair work ~n^2/g^2 and lets the cap
     grow accordingly. Output is identical (exact same pair set).
     """
-    hot = (
-        bands.groupBy("band_idx", "band_hash")
-        .agg(F.count("*").alias("n_keys"))
-        .where(F.col("n_keys") > cfg.bucket_cap)
-        .select("band_idx", "band_hash")
-    )
     bucket = ["band_idx", "band_hash"]
+    hot = dropped_buckets(bands, cfg).select(*bucket)
     cold = bands.join(F.broadcast(hot), bucket, "left_anti")
     if salt_groups and salt_groups > 1:
         return _salted_pair_expansion(_sorted_buckets(cold, bucket, key_col), salt_groups)

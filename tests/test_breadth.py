@@ -81,40 +81,31 @@ def test_forest_self_recall_topk(spark):
         assert abs(top - q) == 1, (q, hits)
 
 
-def test_forest_deepening_equals_full_enumeration_and_prunes(spark):
-    # Self-similar corpus (8 clusters x 6 near-identical sigs): iterative
-    # deepening must return EXACTLY the full-enumeration top-k (the early
-    # exit only skips pairs that cannot outrank the accumulated ones) while
-    # generating far fewer candidate rows than the all-pairs depth-1 join.
-    rng = np.random.RandomState(11)
-    base_sigs = rng.randint(0, 1 << 31, size=(8, 128))
+def _near_dup_sigs(seed, n_clusters, n_members, flips_per_member):
+    # n_clusters random base signatures, each with n_members copies; copy m
+    # has flips_per_member * m slots redrawn.
+    rng = np.random.RandomState(seed)
+    base_sigs = rng.randint(0, 1 << 31, size=(n_clusters, 128))
     rows = []
     did = 0
-    for c in range(8):
-        for m in range(6):
+    for c in range(n_clusters):
+        for m in range(n_members):
             sig = base_sigs[c].copy()
             if m:
-                flip = rng.choice(128, size=m, replace=False)
-                sig[flip] = rng.randint(0, 1 << 31, size=m)
+                n_flip = flips_per_member * m
+                flip = rng.choice(128, size=n_flip, replace=False)
+                sig[flip] = rng.randint(0, 1 << 31, size=n_flip)
             rows.append((did, [int(x) for x in sig]))
             did += 1
-    sig_df = spark.createDataFrame(rows, "doc_id long, sig array<bigint>")
-    fcfg = ForestConfig(num_perm=128, l_trees=8)
-    prefixes = prefix_table(sig_df, fcfg)
-    queries = sig_df.where("doc_id % 6 = 0").withColumnRenamed(
-        "doc_id", "query_id"
-    )
-    diag = {}
-    res = topk_query(prefixes, queries, sig_df, fcfg, k=5, diagnostics=diag)
-    got = {
-        (r["query_id"], r["rank"]): (r["doc_id"], r["best_depth"], r["est_jaccard"])
-        for r in res.collect()
-    }
+    return rows
 
-    # Brute-force full enumeration with the same total order.
+
+def _brute_force_topk(rows, queries, k):
+    # Full enumeration with topk_query's total order (best_depth desc,
+    # est_jaccard desc, doc_id asc) over 8 trees of 16 slots.
     sigs = dict(rows)
     expected = {}
-    for q in range(0, 48, 6):
+    for q in queries:
         scored = []
         for d, s in sigs.items():
             if d == q:
@@ -132,63 +123,59 @@ def test_forest_deepening_equals_full_enumeration_and_prunes(spark):
                 continue
             scored.append((-best, -sum(eq) / 128.0, d))
         scored.sort()
-        for rank, (nb, ne, d) in enumerate(scored[:5], start=1):
+        for rank, (nb, ne, d) in enumerate(scored[:k], start=1):
             expected[(q, rank)] = (d, -nb, -ne)
-    assert got == expected
+    return expected
+
+
+def _forest_topk_rows(spark, rows, query_every, k, diagnostics=None):
+    sig_df = spark.createDataFrame(rows, "doc_id long, sig array<bigint>")
+    fcfg = ForestConfig(num_perm=128, l_trees=8)
+    prefixes = prefix_table(sig_df, fcfg)
+    queries = sig_df.where(f"doc_id % {query_every} = 0").withColumnRenamed(
+        "doc_id", "query_id"
+    )
+    res = topk_query(prefixes, queries, sig_df, fcfg, k=k, diagnostics=diagnostics)
+    got = {
+        (r["query_id"], r["rank"]): (r["doc_id"], r["best_depth"], r["est_jaccard"])
+        for r in res.collect()
+    }
+    return got, prefixes
+
+
+def test_forest_deepening_equals_full_enumeration_and_prunes(spark):
+    # Self-similar corpus (8 clusters x 6 near-identical sigs): iterative
+    # deepening must return EXACTLY the full-enumeration top-k (the early
+    # exit only skips pairs that cannot outrank the accumulated ones) while
+    # generating far fewer candidate rows than the all-pairs depth-1 join.
+    rows = _near_dup_sigs(11, 8, 6, 1)
+    diag = {}
+    got, prefixes = _forest_topk_rows(spark, rows, 6, 5, diagnostics=diag)
+    assert got == _brute_force_topk(rows, range(0, 48, 6), 5)
     # Pruning: every query satisfies at a deep round (cluster-mates match
     # at or near full depth), so the hot shallow buckets are never probed —
     # retired queries make the later rounds' joins empty.
     n_all_pairs = 8 * 47
     assert diag["candidate_rows"] < n_all_pairs / 2, diag
-    # default schedule groups the deep depths: [[16, 4], [2], [1]]
+    # The deep depths share a round: [[16, 4], [2], [1]].
     assert len(diag["rounds"]) == 3, diag
-    # Index storage holds only the probed depths: l_trees * |schedule|
+    # Index storage holds only the probed depths [16, 4, 2, 1]: l_trees * 4
     # rows per doc (32), not num_perm (128).
-    from datasketch_spark.operators.forest import probe_schedule
+    assert prefixes.count() == 48 * 8 * 4
 
-    n_depths = len(probe_schedule(fcfg.k_per_tree))
-    assert prefixes.count() == 48 * fcfg.l_trees * n_depths
-    # A coarser valid sub-schedule returns the identical top-k.
-    res2 = topk_query(prefixes, queries, sig_df, fcfg, k=5, schedule=[16, 1])
-    got2 = {
-        (r["query_id"], r["rank"]): (r["doc_id"], r["best_depth"], r["est_jaccard"])
-        for r in res2.collect()
-    }
-    assert got2 == expected
-    # A depth the index never stored must raise, not silently drop a band.
-    with pytest.raises(ValueError, match="absent from the index"):
-        topk_query(prefixes, queries, sig_df, fcfg, k=5, schedule=[8, 1])
-    # A custom-depth index carries its depths as column metadata, so the
-    # DEFAULT call adopts them (correct results, no silent bands)...
-    prefixes_coarse = prefix_table(sig_df, fcfg, depths=[16, 1])
-    res_c = topk_query(prefixes_coarse, queries, sig_df, fcfg, k=5)
-    got_c = {
-        (r["query_id"], r["rank"]): (r["doc_id"], r["best_depth"], r["est_jaccard"])
-        for r in res_c.collect()
-    }
-    assert got_c == expected
-    # ...and a schedule probing a depth that index lacks still raises even
-    # though it would be valid for a default-built index.
-    with pytest.raises(ValueError, match="absent from the index"):
-        topk_query(prefixes_coarse, queries, sig_df, fcfg, k=5, schedule=[16, 4, 1])
-    # A finer index (factor-2 depths) serves a matching schedule via
-    # index_depths, still identical output.
-    fine_depths = probe_schedule(fcfg.k_per_tree, factor=2)
-    prefixes_fine = prefix_table(sig_df, fcfg, depths=fine_depths)
-    res3 = topk_query(
-        prefixes_fine,
-        queries,
-        sig_df,
-        fcfg,
-        k=5,
-        schedule=[16, 8, 2, 1],
-        index_depths=fine_depths,
-    )
-    got3 = {
-        (r["query_id"], r["rank"]): (r["doc_id"], r["best_depth"], r["est_jaccard"])
-        for r in res3.collect()
-    }
-    assert got3 == expected
+    # Two 6 x 5 corpora in one call. With 3*m slots redrawn, cluster-mates
+    # still share full-depth prefixes and every query retires in the deep
+    # round. With 24*m, mates share only shallow prefixes, so the depth-2
+    # and depth-1 rounds add rows too, and each band must still tile into
+    # the full-enumeration top-k.
+    rows = _near_dup_sigs(23, 6, 5, 3) + [
+        (d + 30, s) for d, s in _near_dup_sigs(29, 6, 5, 24)
+    ]
+    diag = {}
+    got, _ = _forest_topk_rows(spark, rows, 5, 4, diagnostics=diag)
+    assert got == _brute_force_topk(rows, range(0, 60, 5), 4)
+    cumulative = [r["cumulative_rows"] for r in diag["rounds"]]
+    assert cumulative[0] < cumulative[1] < cumulative[2], diag
 
 
 def test_ensemble_self_containment(spark):
@@ -743,76 +730,3 @@ def test_forest_excludes_empty_signatures(spark):
     )
     got = {(r["query_id"], r["doc_id"]) for r in res.collect()}
     assert not any(q >= 100 or d >= 100 for q, d in got), got
-
-
-def test_forest_explicit_index_depths_beats_metadata(spark):
-    # An explicitly passed index_depths must override stale column
-    # metadata: here metadata says the default depths [16,4,2,1], but the
-    # caller asserts the index only has [16,1] — scheduling depth 4 must
-    # therefore raise, proving the explicit argument was honored
-    # (pre-fix, metadata silently won and no error surfaced).
-    rng = np.random.RandomState(77)
-    rows = [
-        (i, [int(v) for v in rng.randint(0, 1 << 30, size=128)])
-        for i in range(12)
-    ]
-    sig_df = spark.createDataFrame(rows, "doc_id long, sig array<bigint>")
-    fcfg = ForestConfig(num_perm=128, l_trees=8)
-    prefixes = prefix_table(sig_df, fcfg)  # metadata: depths [16, 4, 2, 1]
-    q_sigs = sig_df.where("doc_id < 2").withColumnRenamed(
-        "doc_id", "query_id"
-    )
-    with pytest.raises(ValueError, match="absent from the index"):
-        topk_query(
-            prefixes,
-            q_sigs,
-            sig_df,
-            fcfg,
-            k=3,
-            schedule=[16, 4, 1],
-            index_depths=[16, 1],
-        )
-
-
-def test_forest_grouped_rounds_equal_singleton_rounds(spark):
-    # A grouped schedule (deep depths merged into one round — the r6
-    # default) must return EXACTLY the per-depth schedule's top-k: every
-    # pair is re-scored with its true best_depth and band filters tile
-    # the same range, so grouping only changes job structure.
-    rng = np.random.RandomState(23)
-    base_sigs = rng.randint(0, 1 << 31, size=(6, 128))
-    rows = []
-    did = 0
-    for c in range(6):
-        for m in range(5):
-            sig = base_sigs[c].copy()
-            if m:
-                flip = rng.choice(128, size=3 * m, replace=False)
-                sig[flip] = rng.randint(0, 1 << 31, size=3 * m)
-            rows.append((did, [int(x) for x in sig]))
-            did += 1
-    sig_df = spark.createDataFrame(rows, "doc_id long, sig array<bigint>")
-    fcfg = ForestConfig(num_perm=128, l_trees=8)
-    prefixes = prefix_table(sig_df, fcfg)
-    queries = sig_df.where("doc_id % 5 = 0").withColumnRenamed(
-        "doc_id", "query_id"
-    )
-
-    def rows_of(schedule):
-        res = topk_query(
-            prefixes, queries, sig_df, fcfg, k=4, schedule=schedule
-        )
-        return {
-            (r["query_id"], r["rank"]): (
-                r["doc_id"],
-                r["best_depth"],
-                round(r["est_jaccard"], 9),
-            )
-            for r in res.collect()
-        }
-
-    singleton = rows_of([16, 4, 2, 1])
-    grouped = rows_of([[16, 4], [2], [1]])
-    default = rows_of(None)  # default IS the grouped shape
-    assert grouped == singleton
-    assert default == singleton

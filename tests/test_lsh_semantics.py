@@ -224,21 +224,26 @@ def test_bucket_keys_golden(spark):
         (2, 4280519396084218462),
         (3, 2274822790871633028),
     ]
-    prefixes = prefix_table(df, ForestConfig(128, 4), depths=[32, 6, 1])
+    # ForestConfig(128, 4) stores the probe depths [32, 8, 2, 1].
+    prefixes = prefix_table(df, ForestConfig(128, 4))
     assert sorted(
         (r["tree_idx"], r["depth"], r["prefix_hash"]) for r in prefixes.collect()
     ) == [
         (0, 1, -3546864081105325289),
-        (0, 6, -5767837616690896168),
+        (0, 2, 3660729868448097407),
+        (0, 8, -5853806351532531143),
         (0, 32, -6750405470771080241),
         (1, 1, -9208013034578225856),
-        (1, 6, 2131897523026077934),
+        (1, 2, 7407762303829665689),
+        (1, 8, 6473664921528266242),
         (1, 32, -4831099656233714570),
         (2, 1, -6373930452249192673),
-        (2, 6, -1685847811172672350),
+        (2, 2, -1274027837780353610),
+        (2, 8, -4649716144493039627),
         (2, 32, -8627020562351317412),
         (3, 1, -3022091949729706065),
-        (3, 6, 3528354973904334472),
+        (3, 2, -5366240590768705333),
+        (3, 8, -5385850788658240955),
         (3, 32, 5430437834504228625),
     ]
     ecfg = EnsembleConfig()

@@ -5,35 +5,20 @@ accidental Exchange or a second Python eval node fails here, not on the
 cluster.
 """
 
-import itertools
-
 from pyspark.sql import functions as F
 
 from datasketch_spark.config import DedupConfig
 from datasketch_spark.operators import lsh
 from datasketch_spark.operators.verify import verify_pairs_est
 from datasketch_spark.plans.inspect import (
+    jobs_run,
     plan_str,
     pushed_filters,
     python_eval_count,
     scan_read_schemas,
     shuffle_count,
 )
-from datasketch_spark.sources.io import NoopCheckpoints, spread
-
-_JOB_GROUPS = itertools.count()
-
-
-def jobs_run(spark, build) -> int:
-    """How many Spark jobs calling ``build()`` runs."""
-    sc = spark.sparkContext
-    group = f"jobs-run-{next(_JOB_GROUPS)}"
-    sc.setJobGroup(group, group)
-    try:
-        build()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+from datasketch_spark.sources.io import NoopCheckpoints, local_checkpoint, spread
 
 
 def test_signature_stage_single_python_boundary(spark):
@@ -213,7 +198,7 @@ def test_spread_decision_runs_no_job(spark, tmp_path):
 def test_building_key_tables_runs_no_job(spark):
     # The empty-signature keys these tables exclude constant-fold, and the
     # SimHash UDF reads the embedding width from its batches: building any
-    # of them is plan construction only, for shapes no earlier call used.
+    # of them is plan construction only.
     from datasketch_spark.operators.ann import simhash_bucketed_pairs
     from datasketch_spark.operators.forest import ForestConfig, prefix_table
 
@@ -221,7 +206,7 @@ def test_building_key_tables_runs_no_job(spark):
     vecs = spark.createDataFrame([(1, [1.0, 0.5])], "vec_id long, embedding array<double>")
     builds = {
         "bands_table": lambda: lsh.bands_table(sigs, DedupConfig(params=(7, 11))),
-        "prefix_table": lambda: prefix_table(sigs, ForestConfig(128, 4), depths=[32, 5, 1]),
+        "prefix_table": lambda: prefix_table(sigs, ForestConfig(128, 4)),
         "simhash_bucketed_pairs": lambda: simhash_bucketed_pairs(vecs, 0.9),
     }
     assert {name: jobs_run(spark, b) for name, b in builds.items()} == dict.fromkeys(
@@ -236,6 +221,19 @@ def test_connected_components_job_budget(spark):
 
     edges = spark.createDataFrame([(i, i + 1) for i in range(40)], ["u", "v"])
     assert jobs_run(spark, lambda: connected_components(edges)) == 64
+
+
+def test_dedup_pipeline_job_budget(spark):
+    # One small in-memory pipeline call through the collect of its
+    # clusters. Its stage cuts are lazy local checkpoints, so a stage that
+    # starts paying a job of its own fails here.
+    from datasketch_spark.operators.dedup import dedup_pipeline
+    from datasketch_spark.sources.pages import synth_pages
+
+    pages = local_checkpoint(synth_pages(spark, 200, seed=3))
+    pages.count()  # the input's own job stays out of the budget
+    cfg = DedupConfig(threshold=0.8)
+    assert jobs_run(spark, lambda: dedup_pipeline(pages, cfg)["clusters"].collect()) == 11
 
 
 def test_signature_table_evaluates_udf_once_for_every_consumer(spark):

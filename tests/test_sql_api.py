@@ -4,6 +4,7 @@ column-expression API."""
 from pyspark.sql import functions as F
 
 from datasketch_spark.config import DedupConfig
+from datasketch_spark.functions.minhash import count_col, jaccard_col, merge_col
 from datasketch_spark.functions.sql_api import register_sql
 from datasketch_spark.functions.text import (
     fingerprint_col,
@@ -88,3 +89,31 @@ def test_sql_api_matches_dataframe_api(spark):
         min(x, y) for x, y in zip(want_sig[1], want_sig[3])
     ]
     assert alg["est"] > 0
+
+    # The sketch functions are the column expressions: equal on every
+    # ordered pair of the same signatures, and inlined into codegen.
+    sig_df = spark.createDataFrame(
+        sorted(want_sig.items()), "doc_id long, sig array<bigint>"
+    )
+    sig_df.createOrReplaceTempView("sql_api_sigs")
+    alg_sql = spark.sql(
+        """
+        SELECT a.doc_id AS a, b.doc_id AS b,
+               minhash_jaccard(a.sig, b.sig) AS j,
+               minhash_merge(a.sig, b.sig) AS merged,
+               minhash_count(a.sig) AS est
+        FROM sql_api_sigs a CROSS JOIN sql_api_sigs b
+        """
+    )
+    alg_col = sig_df.alias("a").crossJoin(sig_df.alias("b")).select(
+        F.col("a.doc_id").alias("a"),
+        F.col("b.doc_id").alias("b"),
+        jaccard_col("a.sig", "b.sig", cfg.num_perm).alias("j"),
+        merge_col("a.sig", "b.sig").alias("merged"),
+        count_col("a.sig", cfg.num_perm).alias("est"),
+    )
+    got_alg = sorted(tuple(r) for r in alg_sql.collect())
+    assert len(got_alg) == len(rows) ** 2
+    assert got_alg == sorted(tuple(r) for r in alg_col.collect())
+    plan = alg_sql._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEval" not in plan and "BatchEval" not in plan, plan

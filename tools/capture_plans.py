@@ -5,10 +5,9 @@ Usage:
 
 Writes plans/<tag>/<query>_<suffix>.txt (suffix default "before") for each
 named query (default: all) and prints its Python-eval and Exchange counts.
-Run-local counters (``#123`` expression ids, ``MapPartitionsRDD[45]`` ids
-and their call sites, ``plan_id=``, the ``_14`` of lambda variable
-``x_14``) are stripped before writing, so two captures of the same plan
-diff clean.
+Run-local counters are stripped before writing
+(``plans.inspect.strip_run_local``), so two captures of the same plan diff
+clean.
 The streaming query is skipped by default (constructing it RUNS the
 stream); pass it explicitly to include it. Env: SPARK_GRAFT_SF_DIR,
 SPARK_GRAFT_CPUS (default: all cores).
@@ -17,25 +16,9 @@ SPARK_GRAFT_CPUS (default: all cores).
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-# Counters a plan picks up from the session that built it, not its shape.
-_RUN_LOCAL = [
-    (re.compile(r"#\d+"), "#"),
-    (re.compile(r"(\w+RDD)\[\d+\]"), r"\1[]"),
-    (re.compile(r"(RDD\[\] at \w+) at [^\s,]+"), r"\1"),  # the call site's file:line
-    (re.compile(r"plan_id=\d+"), "plan_id="),
-    (re.compile(r"(lambda \w+)_\d+\b"), r"\1_"),
-]
-
-
-def strip_run_local(plan: str) -> str:
-    for pattern, repl in _RUN_LOCAL:
-        plan = pattern.sub(repl, plan)
-    return plan
 
 
 def main() -> None:
@@ -46,7 +29,12 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
 
     import __spark_entry__ as entrymod
-    from datasketch_spark.plans.inspect import plan_str, python_eval_count, shuffle_count
+    from datasketch_spark.plans.inspect import (
+        plan_str,
+        python_eval_count,
+        shuffle_count,
+        strip_run_local,
+    )
     from datasketch_spark.session import get_spark
 
     spark = get_spark(
