@@ -1,6 +1,6 @@
 """MinHash as Spark columns: signature pandas UDFs + signature algebra.
 
-The ONLY JVM<->Python boundary in the pipeline is the signature UDF
+The MinHash path's one JVM<->Python boundary is the signature UDF
 (Arrow-batched). Everything downstream of the ``sig: array<bigint>`` column
 (jaccard, merge, b-bit, banding) is native Spark SQL expressions that stay
 inside whole-stage codegen.
@@ -111,14 +111,18 @@ def merge_col(sig1: Column | str, sig2: Column | str) -> Column:
 def count_col(sig: Column | str, num_perm: int = 128) -> Column:
     """Cardinality estimate ``k / sum(hv / (2^32 - 1)) - 1``
     (reference ``MinHash.count``, ``minhash.py:326-335``: the divisor is
-    ``float(_max_hash)`` = 2^32 - 1, NOT the hash range 2^32)."""
+    ``float(_max_hash)`` = 2^32 - 1, NOT the hash range 2^32). An all-zero
+    signature gives +inf, as the reference's numpy ``k / 0.0 - 1.0`` does;
+    unguarded, ANSI mode fails the whole query with DIVIDE_BY_ZERO."""
     s = F.col(sig) if isinstance(sig, str) else sig
-    total = F.aggregate(
+    return F.aggregate(
         s,
         F.lit(0.0),
         lambda acc, v: acc + v.cast("double") / F.lit(float(int(MAX_HASH))),
+        lambda total: F.when(total == 0, F.lit(float("inf"))).otherwise(
+            F.lit(float(num_perm)) / total - F.lit(1.0)
+        ),
     )
-    return F.lit(float(num_perm)) / total - F.lit(1.0)
 
 
 def empty_sig(num_perm: int = 128) -> Column:

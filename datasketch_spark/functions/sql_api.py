@@ -77,8 +77,10 @@ def register_sql(
         "minhash_count",
         "s ARRAY<BIGINT>",
         "DOUBLE",
-        f"{float(num_perm)}D / aggregate(s, 0.0D, "
-        f"(acc, v) -> acc + CAST(v AS DOUBLE) / {float(int(MAX_HASH))}D) - 1.0D",
+        "aggregate(s, 0.0D, "
+        f"(acc, v) -> acc + CAST(v AS DOUBLE) / {float(int(MAX_HASH))}D, "
+        "t -> CASE WHEN t = 0 THEN CAST('Infinity' AS DOUBLE) "
+        f"ELSE {float(num_perm)}D / t - 1.0D END)",
     )
 
     # Text functions: langid_col (argmax of per-language distinct-stopword

@@ -6,11 +6,15 @@ pages(url, warc_ts, html, text, lang)
   -> bands(doc_id, band_idx, band_hash)         native posexplode
   -> cand_pairs(a, b)                           bucket groupBy + pair expansion
   -> verified(a, b, est_jaccard)                zip_with filter at threshold
+                                                (exact mode: array_intersect)
   -> clusters(doc_id, cluster_id)               large-star/small-star CC
 
 Every stage can checkpoint through a CheckpointManager (parquet sandbox /
-Iceberg cluster) for mid-run resume. No per-row Python anywhere; the
-signature UDF is the only Arrow boundary.
+Iceberg cluster) for mid-run resume. With ``substring_pass=False`` the
+signature UDF is the only Arrow boundary and no stage runs per-row Python,
+in either verify mode. ``substring_pass=True`` adds two mapInPandas stages
+that loop in Python: ``suffix.fingerprints_table`` once per document and
+``suffix.verify_substring_pairs`` once per pair.
 """
 
 from __future__ import annotations

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datasketch_spark.operators.lsh import bucket_pairs
-from datasketch_spark.operators.verify import join_sides
+from datasketch_spark.operators.verify import exact_jaccard_col, join_sides
 from datasketch_spark.sources.io import local_checkpoint
 
 
@@ -133,22 +133,9 @@ def prefix_filtered_jaccard_pairs(
     bucket_keys = ["_tok", *[f"_blk_{c}" for c in blocks]]
     cands = bucket_pairs(tokens, bucket_keys, "_id", bucket_cap)
 
-    # Exact verification (same expression as the naive join).
-    scored = (
-        join_sides(cands, base, "_id", ["_arr", "_n"])
-        .select(
-            "a",
-            "b",
-            "_n_a",
-            "_n_b",
-            F.size(F.array_intersect("_arr_a", "_arr_b")).cast("double").alias("_i"),
-        )
-        .withColumn(
-            "jaccard",
-            F.when(F.col("_n_a") + F.col("_n_b") == 0, F.lit(1.0)).otherwise(
-                F.col("_i") / (F.col("_n_a") + F.col("_n_b") - F.col("_i"))
-            ),
-        )
+    # Exact verification of every candidate.
+    scored = join_sides(cands, base, "_id", ["_arr"]).select(
+        "a", "b", exact_jaccard_col("_arr_a", "_arr_b").alias("jaccard")
     )
     if round_digits is not None:
         scored = scored.withColumn("jaccard", F.round("jaccard", round_digits))

@@ -4,17 +4,52 @@ The reference documents this as a caller-side post-filter
 (``lsh.py:376-378,406-409``; implemented in its benchmark harness
 ``benchmark/indexes/jaccard/lsh.py:58-68``) but has no operator for it.
 Ours: join candidate pairs back to the signatures table twice and filter on
-estimated Jaccard (native zip_with expression, JVM-side), or back to the
-texts for exact shingle-set Jaccard (``verify_mode='exact'``).
+estimated Jaccard, or back to the texts for exact shingle-set Jaccard
+(``verify_mode='exact'``). Both are native expressions (``zip_with`` and
+``array_intersect``), evaluated JVM-side with no Python.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datasketch_spark.config import DedupConfig
 from datasketch_spark.functions.minhash import jaccard_col
+
+
+def exact_jaccard_col(a: Column | str, b: Column | str) -> Column:
+    """Exact Jaccard ``|A∩B| / (|A|+|B|-|A∩B|)`` of two DISTINCT-element
+    arrays, 1.0 when both are empty; NULL if either is NULL.
+
+    Branch-free so the intersection is one common subexpression: ``e`` is
+    1 only when both arrays are empty, turning 0/0 into 1/1."""
+    a = F.col(a) if isinstance(a, str) else a
+    b = F.col(b) if isinstance(b, str) else b
+    n = F.size(a) + F.size(b)
+    i = F.size(F.array_intersect(a, b))
+    e = (n == 0).cast("int")
+    return (i + e).cast("double") / (n - i + e)
+
+
+def shingle_set_col(text: Column | str, k: int) -> Column:
+    """The set of ``functions.shingles.byte_shingles(text, k)`` as an array
+    of distinct tokens: every k-byte window of the UTF-8 text, or the whole
+    text when it has at most k bytes; NULL and '' give an empty array.
+
+    Each token is a string with one ISO-8859-1 char per byte, so a token
+    ``g`` is the window ``g.encode('latin-1')``. Strings, unlike binary,
+    take the hash-based ``array_distinct``/``array_intersect``, and one
+    lookahead regex lists all windows without a per-window lambda."""
+    t = F.col(text) if isinstance(text, str) else text
+    b = F.decode(F.encode(t, "UTF-8"), "ISO-8859-1")
+    n = F.length(b)
+    windows = F.regexp_extract_all(b, F.lit(f"(?s)(?=(.{{{k}}}))"), 1)
+    return (
+        F.when(n >= k, F.array_distinct(windows))
+        .when(n > 0, F.array(b))
+        .otherwise(F.array().cast("array<string>"))
+    )
 
 
 def join_sides(
@@ -62,68 +97,20 @@ def verify_pairs_exact_text(
     key_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """(a, b) -> (a, b, jaccard) with EXACT shingle-set Jaccard recomputed
-    from the candidate docs' texts, filtered at cfg.threshold.
+    """(a, b) -> (a, b, jaccard) with EXACT shingle-set Jaccard of the
+    candidate docs' texts, filtered at cfg.threshold: the
+    ``verify_mode='exact'`` pipeline path, free of estimator variance.
 
-    Only candidate docs are re-shingled (the pair set is orders of
-    magnitude smaller than the corpus), inside one Arrow-batched
-    mapInPandas over the joined pair texts. This is the
-    ``verify_mode='exact'`` pipeline path — slower than the signature
-    estimate but removes estimator variance from the precision story.
+    Tokens are ``shingle_set_col``'s distinct k-byte windows (not hashes,
+    so cfg.hash_mode plays no part), one set per doc of ``docs`` and join
+    side, joined like the signatures in ``verify_pairs_est``. Sets built on
+    the joined pair rows instead are rebuilt per pair, and again in the join
+    condition that the threshold filter is pushed into (exact mode at sf0.1
+    on 4 vCPU: 36 s that way, 6-7 s this way).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
+    tokens = docs.select(key_col, shingle_set_col(text_col, cfg.shingle_k).alias("tokens"))
+    return (
+        join_sides(pairs, tokens, key_col, ["tokens"])
+        .select("a", "b", exact_jaccard_col("tokens_a", "tokens_b").alias("jaccard"))
+        .where(F.col("jaccard") >= F.lit(cfg.threshold))
     )
-
-    from datasketch_spark.functions.shingles import (
-        shingle_hashes_fast,
-        shingle_hashes_sha1,
-    )
-
-    shingle_fn = (
-        shingle_hashes_fast if cfg.hash_mode == "fast" else shingle_hashes_sha1
-    )
-    k = cfg.shingle_k
-    threshold = cfg.threshold
-
-    ta_col, tb_col = f"{text_col}_a", f"{text_col}_b"
-    joined = join_sides(pairs, docs, key_col, [text_col]).select("a", "b", ta_col, tb_col)
-
-    out_schema = StructType(
-        [
-            StructField("a", LongType(), False),
-            StructField("b", LongType(), False),
-            StructField("jaccard", DoubleType(), False),
-        ]
-    )
-
-    def _verify(batches):
-        cache: dict = {}
-
-        def shingles(text):
-            got = cache.get(text)
-            if got is None:
-                got = np.unique(shingle_fn(text, k)) if text else np.empty(0)
-                cache[text] = got
-            return got
-
-        for pdf in batches:
-            rows = []
-            for a, b, ta, tb in zip(pdf["a"], pdf["b"], pdf[ta_col], pdf[tb_col]):
-                sa, sb = shingles(ta), shingles(tb)
-                union = len(np.union1d(sa, sb))
-                j = (
-                    1.0
-                    if union == 0
-                    else len(np.intersect1d(sa, sb, assume_unique=True)) / union
-                )
-                if j >= threshold:
-                    rows.append((int(a), int(b), float(j)))
-            yield pd.DataFrame(rows, columns=["a", "b", "jaccard"])
-
-    return joined.mapInPandas(_verify, schema=out_schema)

@@ -1,6 +1,7 @@
 """SparkSession factory tuned for the dedup pipeline.
 
-Arrow on (the signature UDF is the one Python boundary), AQE on (skew-join
+Arrow on (the signature UDF, plus the substring pass's two mapInPandas
+stages when it runs, cross into Python), AQE on (skew-join
 splitting + adaptive shuffle partitions), shuffle partitions sized for the
 sandbox; on a real cluster these come from spark-submit conf.
 """

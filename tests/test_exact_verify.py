@@ -1,11 +1,19 @@
 """verify_mode='exact': pipeline verification by true shingle-set Jaccard."""
 
+import hashlib
+
 import numpy as np
 
 from datasketch_spark.config import DedupConfig
-from datasketch_spark.functions.shingles import shingle_hashes_fast
+from datasketch_spark.functions.shingles import byte_shingles, shingle_hashes_fast
 from datasketch_spark.operators.dedup import dedup_pipeline
+from datasketch_spark.operators.verify import shingle_set_col, verify_pairs_exact_text
 from datasketch_spark.sources.pages import synth_pages, synth_pages_pdf
+
+# Sorted "a b repr(jaccard)" lines of exact-mode ``verified`` on
+# synth_pages(300, seed=42) at threshold 0.5, captured at commit 5fc09b6
+# (the per-pair Python verifier over 32-bit shingle hashes).
+EXACT_GOLDEN = (118, "a6f9d2b99cd3d4fe9520b74718b5899e3b68013835d143e409339a055107600e")
 
 
 def test_exact_verify_pipeline(spark):
@@ -25,6 +33,37 @@ def test_exact_verify_pipeline(spark):
         true_j = len(sa & sb) / len(sa | sb)
         assert abs(r["est_jaccard"] - true_j) < 1e-12
         assert true_j >= cfg.threshold
+    rows = sorted((r["a"], r["b"], r["est_jaccard"]) for r in verified)
+    blob = "\n".join(f"{a} {b} {j!r}" for a, b, j in rows).encode()
+    assert (len(rows), hashlib.sha256(blob).hexdigest()) == EXACT_GOLDEN
+
+
+def test_exact_tokens_edge_cases(spark):
+    # The native token sets are byte_shingles' sets (a token is its window
+    # encoded as latin-1); NULL and '' have no tokens, as in the old loop.
+    k = 5
+    texts = [
+        "",
+        None,
+        "abc",
+        "abcde",
+        "naïve café — 東京\nŅ\r\n😀 ünïcödé, naïve café — 東京",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = dict(df.select("doc_id", shingle_set_col("text", k)).collect())
+    assert got[0] == [] and got[1] == []
+    for i, t in enumerate(texts):
+        toks = [g.encode("latin-1") for g in got[i]]
+        assert len(toks) == len(set(toks)), i
+        assert set(toks) == set(byte_shingles(t or "", k)), i
+
+    docs = spark.createDataFrame(
+        [(10, ""), (11, ""), (12, "some text")], "doc_id long, text string"
+    )
+    pairs = spark.createDataFrame([(10, 11), (10, 12)], "a long, b long")
+    cfg = DedupConfig(threshold=0.0, params=(16, 8))
+    verified = verify_pairs_exact_text(pairs, docs, cfg).collect()
+    assert {(r["a"], r["b"]): r["jaccard"] for r in verified} == {(10, 11): 1.0, (10, 12): 0.0}
 
 
 def test_exact_vs_est_mode_precision(spark):

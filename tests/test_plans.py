@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from datasketch_spark.config import DedupConfig
 from datasketch_spark.operators import lsh
-from datasketch_spark.operators.verify import verify_pairs_est
+from datasketch_spark.operators.verify import verify_pairs_est, verify_pairs_exact_text
 from datasketch_spark.plans.inspect import (
     jobs_run,
     plan_str,
@@ -103,6 +103,8 @@ def test_verify_stage_stays_jvm_side(spark):
     assert "zip_with" in plan_str(verified, "simple") or "ZipWith" in plan_str(
         verified, "formatted"
     )
+    # Exact verification is native too: array_intersect over byte shingles.
+    assert python_eval_count(verify_pairs_exact_text(pairs, df, cfg)) == 0
 
 
 def test_bucketed_bands_elide_groupby_shuffles(spark, tmp_path):
@@ -234,6 +236,8 @@ def test_dedup_pipeline_job_budget(spark):
     pages.count()  # the input's own job stays out of the budget
     cfg = DedupConfig(threshold=0.8)
     assert jobs_run(spark, lambda: dedup_pipeline(pages, cfg)["clusters"].collect()) == 11
+    exact = DedupConfig(threshold=0.8, verify_mode="exact")
+    assert jobs_run(spark, lambda: dedup_pipeline(pages, exact)["clusters"].collect()) == 12
 
 
 def test_signature_table_evaluates_udf_once_for_every_consumer(spark):

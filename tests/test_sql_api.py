@@ -4,6 +4,7 @@ column-expression API."""
 from pyspark.sql import functions as F
 
 from datasketch_spark.config import DedupConfig
+from datasketch_spark.functions.hashing import MAX_HASH
 from datasketch_spark.functions.minhash import count_col, jaccard_col, merge_col
 from datasketch_spark.functions.sql_api import register_sql
 from datasketch_spark.functions.text import (
@@ -117,3 +118,20 @@ def test_sql_api_matches_dataframe_api(spark):
     assert got_alg == sorted(tuple(r) for r in alg_col.collect())
     plan = alg_sql._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEval" not in plan and "BatchEval" not in plan, plan
+
+
+def test_minhash_count_all_zero_signature(spark):
+    # An all-zero signature estimates +inf (the reference's numpy k / 0.0
+    # - 1.0) in both twins instead of failing the query under ANSI mode.
+    register_sql(spark, DedupConfig(threshold=0.8))
+    sigs = spark.createDataFrame(
+        [(0, [0] * 128), (1, [int(MAX_HASH)] * 64 + [0] * 64)],
+        "doc_id long, sig array<bigint>",
+    )
+    sigs.createOrReplaceTempView("sql_api_count_sigs")
+    want = {0: float("inf"), 1: 1.0}
+    col = dict(sigs.select("doc_id", count_col("sig", 128)).collect())
+    sql = dict(
+        spark.sql("SELECT doc_id, minhash_count(sig) FROM sql_api_count_sigs").collect()
+    )
+    assert col == want and sql == want
