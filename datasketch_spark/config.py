@@ -64,6 +64,10 @@ def optimal_param(
     return opt
 
 
+HASH_MODES = ("fast", "parity", "parity64")
+VERIFY_MODES = ("est", "exact")
+
+
 @dataclass(frozen=True)
 class DedupConfig:
     """End-to-end near-dup pipeline configuration.
@@ -98,6 +102,14 @@ class DedupConfig:
     band_rows: tuple[int, int] = field(init=False, default=None)  # type: ignore[assignment]
 
     def __post_init__(self) -> None:
+        if self.hash_mode not in HASH_MODES:
+            raise ValueError(
+                f"hash_mode must be one of {HASH_MODES}, got {self.hash_mode!r}"
+            )
+        if self.verify_mode not in VERIFY_MODES:
+            raise ValueError(
+                f"verify_mode must be one of {VERIFY_MODES}, got {self.verify_mode!r}"
+            )
         if self.params is not None:
             b, r = self.params
             if b * r > self.num_perm:

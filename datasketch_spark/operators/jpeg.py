@@ -22,9 +22,9 @@ with EOB-run skipping, and AC successive-approximation refinement
 (correction bits) per T.81 G.1.2 — then the same vectorized
 reconstruction runs once at EOI. Hierarchical, arithmetic-coded and
 12-bit variants raise NotImplementedError naming exactly what is
-missing; truncated or corrupt payloads raise ValueError — both
-quarantine upstream (``multimodal.image_features``), never crash the
-job.
+missing; truncated or corrupt payloads raise ValueError — callers
+quarantine both (``media_synth.media_roundtrip_check`` reports such rows
+as not ok), never crash the job.
 
 Reference parity note: the reference repo (ekzhu/datasketch) has no
 image story; this module exists for the LLM-pipeline brief

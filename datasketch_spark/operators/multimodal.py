@@ -1,71 +1,29 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed in Arrow-batched ``mapInPandas`` stages.
+"""Codec-free image decoders for binary media columns.
 
-Decode support is tiered by what this environment can actually do:
-  - REAL decoders with zero external codecs: uncompressed BMP images
-    (pure-numpy header parse + pixel view), non-interlaced 8-bit PNG
-    incl. paletted (chunk parse + stdlib zlib inflate + vectorized
-    scanline unfilter), GIF87a/89a first frame (vectorized LZW,
-    interlace, local/global palettes), baseline TIFF (uncompressed +
-    PackBits strips, both byte orders), baseline AND progressive
-    JPEG (``operators.jpeg``: Huffman-LUT scan decode + batched numpy
-    IDCT; progressive scans accumulate per T.81 G.1.2),
-    and PCM WAV audio (stdlib ``wave``), feeding real feature kernels
-    (block-mean image grid / RMS + zero-crossings + spectral shape).
-  - Formats that genuinely need entropy codec libraries absent here
-    (WebP, MP3/MP4): those raise NotImplementedError
-    naming the dependency, and the seeded ``deterministic_fake``
-    stand-in keeps the Spark-side plumbing — schema, batching,
-    partitioning, UDF signatures — testable end-to-end.
+Every decoder is pure stdlib + numpy and returns an (H, W, 3) uint8 RGB
+raster:
+  - uncompressed 24/32-bit BMP (header parse + pixel view);
+  - non-interlaced 8-bit PNG incl. paletted (chunk walk, stdlib zlib
+    inflate, vectorized scanline unfilter);
+  - GIF87a/89a first frame (vectorized LZW, interlace, local/global
+    palettes, graphic-control transparency over the background color);
+  - baseline and progressive JPEG (``operators.jpeg``: Huffman-LUT scan
+    decode + batched numpy IDCT; progressive scans accumulate per T.81
+    G.1.2).
 
-At scale the binary payloads dominate I/O: keep them in their own parquet
-column (never in the shuffle key), process with mapInPandas so each Arrow
-batch holds few rows (binary-heavy), and carry only extracted features
-forward.
+``decode_image`` dispatches on magic bytes; any other format (WebP, TIFF,
+...) raises NotImplementedError naming the missing codec, and malformed
+payloads raise ValueError. ``image_grid_feature`` turns a decoded raster
+into a luminance block-mean fingerprint. ``media_synth.media_roundtrip_check``
+(the ``media_roundtrip`` query) drives both.
 """
 
 from __future__ import annotations
 
-import hashlib
-import io as _io
 import struct
-import wave
 import zlib
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("payload", BinaryType(), True),
-        StructField("mime", StringType(), True),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", IntegerType(), True),
-    ]
-)
-
-FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("feature", ArrayType(FloatType()), False),
-        StructField("n_bytes", LongType(), False),
-    ]
-)
-
 
 # ---------------------------------------------------------------------------
 # Real decoders (no external codecs needed).
@@ -399,17 +357,15 @@ def _gif_lzw_decode(data: bytes, min_code: int, expected: int) -> bytearray:
     return out
 
 
-def gif_frames(payload: bytes):
-    """Animated GIF87a/89a -> iterator of (composed (H, W, 3) uint8 RGB
-    canvas, delay_ms) per frame, pure Python + numpy.
+def decode_gif(payload: bytes) -> np.ndarray:
+    """GIF87a/89a first frame -> (H, W, 3) uint8 RGB, pure Python + numpy.
 
-    Real composition per the spec: frames paint their (left, top, w, h)
-    rect onto the logical-screen canvas; transparent pixels (graphic
-    control extension) leave the canvas through; disposal methods
-    0/1 (keep), 2 (restore rect to background), 3 (restore previous
-    canvas) are honored between frames. The canvas starts as the
-    background color (black if the background index has no color table
-    entry). Raises ValueError for malformed payloads."""
+    The first image descriptor paints its (left, top, w, h) rect onto the
+    logical-screen canvas, which starts as the background color (black if
+    the background index has no color table entry); pixels matching the
+    graphic-control transparent index leave the background showing.
+    Later animation frames are not read. Raises ValueError for malformed
+    payloads."""
     if payload is None or len(payload) < 13 or payload[:4] != b"GIF8":
         raise ValueError("not a GIF payload")
     sw, sh, flags, bg_idx, _ar = struct.unpack_from("<HHBBB", payload, 6)
@@ -424,13 +380,7 @@ def gif_frames(payload: bytes):
     )
     canvas = np.empty((sh, sw, 3), dtype=np.uint8)
     canvas[:] = bg_rgb
-    # Pending graphic-control state (reset after each image).
-    disposal, delay_ms, trans_idx = 0, 0, None
-
-    def _skip_subblocks(p: int) -> int:
-        while p < len(payload) and payload[p]:
-            p += 1 + payload[p]
-        return p + 1
+    trans_idx = None  # from the graphic control extension, if any
 
     while pos < len(payload):
         block = payload[pos]
@@ -438,10 +388,11 @@ def gif_frames(payload: bytes):
             label = payload[pos + 1] if pos + 1 < len(payload) else 0
             if label == 0xF9 and pos + 7 <= len(payload) and payload[pos + 2] >= 4:
                 packed = payload[pos + 3]
-                disposal = (packed >> 2) & 0x07
-                delay_ms = struct.unpack_from("<H", payload, pos + 4)[0] * 10
                 trans_idx = payload[pos + 6] if packed & 0x01 else None
-            pos = _skip_subblocks(pos + 2)
+            pos += 2
+            while pos < len(payload) and payload[pos]:
+                pos += 1 + payload[pos]
+            pos += 1
         elif block == 0x2C:  # image descriptor
             left, top, w, h, iflags = struct.unpack_from("<HHHHB", payload, pos + 1)
             pos += 10
@@ -459,7 +410,6 @@ def gif_frames(payload: bytes):
                 ln = payload[pos]
                 chunks.append(payload[pos + 1 : pos + 1 + ln])
                 pos += 1 + ln
-            pos += 1  # block terminator
             idx_bytes = _gif_lzw_decode(b"".join(chunks), min_code, w * h)
             idx = np.frombuffer(bytes(idx_bytes[: w * h]), np.uint8).reshape(h, w)
             if iflags & 0x40:  # interlaced: 4-pass row order
@@ -474,7 +424,6 @@ def gif_frames(payload: bytes):
                 raise ValueError("GIF palette index out of range")
             if top + h > sh or left + w > sw:
                 raise ValueError("GIF frame rect exceeds logical screen")
-            prev = canvas.copy() if disposal == 3 else None
             region = canvas[top : top + h, left : left + w]
             rgb = pal[idx]
             if trans_idx is not None:
@@ -482,142 +431,18 @@ def gif_frames(payload: bytes):
                 region[:] = np.where(mask, rgb, region)
             else:
                 region[:] = rgb
-            yield canvas.copy(), delay_ms
-            if disposal == 2:
-                canvas[top : top + h, left : left + w] = bg_rgb
-            elif disposal == 3:
-                canvas = prev
-            disposal, delay_ms, trans_idx = 0, 0, None
+            return canvas
         elif block == 0x3B:  # trailer
-            return
+            break
         else:
             raise ValueError(f"unknown GIF block 0x{block:02x}")
-
-
-def decode_gif(payload: bytes) -> np.ndarray:
-    """GIF87a/89a first frame -> (H, W, 3) uint8 RGB: the first composed
-    canvas from ``gif_frames`` (transparent pixels of frame 1 show the
-    background color; later animation frames are ignored — use
-    ``gif_frames``/``gif_frame_features`` for the animation). Raises
-    ValueError for malformed payloads."""
-    for frame, _delay in gif_frames(payload):
-        return frame
     raise ValueError("GIF contains no image frame")
 
 
-def _tiff_packbits(data: bytes, expected: int) -> bytearray:
-    """PackBits RLE (TIFF compression 32773)."""
-    out = bytearray()
-    i = 0
-    while i < len(data) and len(out) < expected:
-        n = data[i]
-        i += 1
-        if n < 128:  # literal run of n+1 bytes
-            out += data[i : i + n + 1]
-            i += n + 1
-        elif n > 128:  # repeat next byte 257-n times
-            out += data[i : i + 1] * (257 - n)
-            i += 1
-        # n == 128: no-op
-    if len(out) < expected:
-        raise ValueError("truncated PackBits strip")
-    # A literal/repeat run crossing the strip boundary would otherwise
-    # shift every subsequent strip's pixels while reporting status ok.
-    return out[:expected]
-
-
-def decode_tiff(payload: bytes) -> np.ndarray:
-    """Baseline TIFF (first IFD) -> (H, W, 3) uint8 RGB, pure struct +
-    numpy: both byte orders (II/MM), strip layout, uncompressed
-    (compression=1) or PackBits (32773), 8-bit gray (replicated) or RGB
-    (extra samples dropped). Entropy-coded TIFF variants (LZW/JPEG/
-    deflate-compressed) raise NotImplementedError."""
-    if payload is None or len(payload) < 8 or payload[:2] not in (b"II", b"MM"):
-        raise ValueError("not a TIFF payload")
-    bo = "<" if payload[:2] == b"II" else ">"
-    magic, ifd_off = struct.unpack_from(bo + "HI", payload, 2)
-    if magic != 42:
-        raise ValueError("bad TIFF magic")
-    if ifd_off + 2 > len(payload):
-        raise ValueError("truncated TIFF IFD")
-    (n_tags,) = struct.unpack_from(bo + "H", payload, ifd_off)
-    type_size = {1: 1, 3: 2, 4: 4}
-    tags: dict[int, list[int]] = {}
-    for t in range(n_tags):
-        off = ifd_off + 2 + 12 * t
-        tag, ttype, count = struct.unpack_from(bo + "HHI", payload, off)
-        if ttype not in type_size:
-            continue
-        sz = type_size[ttype] * count
-        src = off + 8
-        if sz > 4:
-            (src,) = struct.unpack_from(bo + "I", payload, off + 8)
-        fmt = {1: "B", 3: "H", 4: "I"}[ttype]
-        tags[tag] = list(struct.unpack_from(bo + str(count) + fmt, payload, src))
-    try:
-        w, h = tags[256][0], tags[257][0]
-        strip_offs, strip_lens = tags[273], tags[279]
-    except KeyError as e:
-        raise ValueError(f"TIFF missing required tag {e}")
-    comp = tags.get(259, [1])[0]
-    spp = tags.get(277, [1])[0]
-    bps = tags.get(258, [8])
-    if any(b != 8 for b in bps) or spp not in (1, 3, 4):
-        raise NotImplementedError(
-            f"only 8-bit gray/RGB(A) TIFF supported (bits={bps}, samples={spp})"
-        )
-    if comp not in (1, 32773):
-        raise NotImplementedError(
-            f"TIFF compression {comp} (LZW/JPEG/deflate) needs pillow; "
-            "only uncompressed and PackBits decode codec-free"
-        )
-    # Decoding a layout we don't understand to silently-wrong pixels with
-    # status 'ok' would poison downstream similarity — refuse instead.
-    planar = tags.get(284, [1])[0]
-    if planar != 1:
-        raise NotImplementedError(
-            f"planar-configuration {planar} TIFF (separate channel planes) "
-            "not supported; only chunky (interleaved) layout decodes"
-        )
-    photometric = tags.get(262, [1 if spp == 1 else 2])[0]
-    if spp >= 3 and photometric != 2:
-        raise NotImplementedError(
-            f"photometric {photometric} with {spp} samples (palette/YCbCr/"
-            "separated) needs pillow; only RGB(A) decodes"
-        )
-    if spp == 1 and photometric not in (0, 1):
-        raise NotImplementedError(
-            f"photometric {photometric} single-sample TIFF (palette/mask) "
-            "needs pillow; only WhiteIsZero/BlackIsZero grayscale decodes"
-        )
-    rps = tags.get(278, [h])[0]
-    raw = bytearray()
-    expected = w * h * spp
-    for i, (so, sl) in enumerate(zip(strip_offs, strip_lens)):
-        strip = payload[so : so + sl]
-        if comp == 1:
-            raw += strip
-        else:
-            rows_here = min(rps, h - i * rps)
-            raw += _tiff_packbits(strip, rows_here * w * spp)
-    if len(raw) < expected:
-        raise ValueError("truncated TIFF strip data")
-    px = np.frombuffer(bytes(raw[:expected]), np.uint8).reshape(h, w, spp)
-    if spp >= 3:
-        rgb = px[:, :, :3]
-    else:
-        gray = px[:, :, :1]
-        if photometric == 0:  # WhiteIsZero: min value is white
-            gray = 255 - gray
-        rgb = np.repeat(gray, 3, axis=2)
-    return np.ascontiguousarray(rgb)
-
-
 def decode_image(payload: bytes) -> np.ndarray:
-    """Dispatch on magic bytes: BMP, PNG, GIF, baseline TIFF, and JPEG
-    (baseline + progressive) decode for real; formats whose entropy
-    codecs are genuinely absent here (WebP) raise NotImplementedError
-    naming the dependency."""
+    """Dispatch on magic bytes: BMP, PNG, GIF and JPEG (baseline +
+    progressive) decode for real; any other format (WebP, TIFF, ...)
+    raises NotImplementedError naming the missing codec."""
     if payload is None or len(payload) < 8:
         raise ValueError("not an image payload")
     if payload[:2] == b"BM":
@@ -626,42 +451,14 @@ def decode_image(payload: bytes) -> np.ndarray:
         return decode_png(payload)
     if payload[:4] == b"GIF8":
         return decode_gif(payload)
-    if payload[:2] in (b"II", b"MM"):
-        return decode_tiff(payload)
     if payload[:2] == b"\xff\xd8":
         from datasketch_spark.operators.jpeg import decode_jpeg
 
         return decode_jpeg(payload)
     raise NotImplementedError(
-        "WebP needs pillow; BMP, PNG, GIF, baseline TIFF, and JPEG "
-        "(baseline + progressive) decode codec-free"
+        "WebP, TIFF and other formats need pillow; only BMP, PNG, GIF and "
+        "JPEG (baseline + progressive) decode codec-free"
     )
-
-
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """PCM WAV -> (mono float64 samples in [-1, 1], framerate). Stdlib
-    ``wave`` handles the RIFF framing; 8/16/32-bit integer PCM supported."""
-    if payload is None or len(payload) < 12 or payload[:4] != b"RIFF":
-        raise ValueError("not a WAV payload")
-    with wave.open(_io.BytesIO(payload), "rb") as wf:
-        n_ch = wf.getnchannels()
-        width = wf.getsampwidth()
-        rate = wf.getframerate()
-        frames = wf.readframes(wf.getnframes())
-    if width == 1:
-        x = np.frombuffer(frames, dtype=np.uint8).astype(np.float64)
-        x = (x - 128.0) / 128.0
-    elif width == 2:
-        x = np.frombuffer(frames, dtype="<i2").astype(np.float64) / 32768.0
-    elif width == 4:
-        x = np.frombuffer(frames, dtype="<i4").astype(np.float64) / 2147483648.0
-    else:
-        raise NotImplementedError(
-            f"{8 * width}-bit WAV not supported; compressed audio needs ffmpeg"
-        )
-    if n_ch > 1:
-        x = x.reshape(-1, n_ch).mean(axis=1)
-    return x, rate
 
 
 def image_grid_feature(rgb: np.ndarray, grid: int = 8) -> np.ndarray:
@@ -677,290 +474,3 @@ def image_grid_feature(rgb: np.ndarray, grid: int = 8) -> np.ndarray:
             block = gray[ys[i] : max(ys[i + 1], ys[i] + 1), xs[j] : max(xs[j + 1], xs[j] + 1)]
             out[i, j] = float(block.mean())
     return (out / 255.0).reshape(-1)
-
-
-def audio_feature(samples: np.ndarray, rate: int, n_bins: int = 13) -> np.ndarray:
-    """Real audio feature: [rms, zero-crossing rate, spectral centroid (in
-    normalized frequency)] + n_bins log-spaced FFT magnitude bins, float32."""
-    n = len(samples)
-    if n == 0:
-        return np.zeros(3 + n_bins, dtype=np.float32)
-    rms = float(np.sqrt(np.mean(samples**2)))
-    zcr = float(np.mean(np.abs(np.diff(np.signbit(samples).astype(np.int8)))))
-    spec = np.abs(np.fft.rfft(samples))
-    freqs = np.fft.rfftfreq(n, d=1.0 / rate)
-    total = spec.sum()
-    centroid = float((freqs * spec).sum() / total / (rate / 2.0)) if total > 0 else 0.0
-    # log-spaced magnitude bins over the positive spectrum
-    edges = np.unique(
-        np.geomspace(1, len(spec), n_bins + 1).astype(np.int64)
-    )
-    bins = np.zeros(n_bins, dtype=np.float64)
-    for i in range(min(n_bins, len(edges) - 1)):
-        seg = spec[edges[i] : edges[i + 1]]
-        bins[i] = seg.mean() if len(seg) else 0.0
-    denom = bins.max() or 1.0
-    return np.concatenate(
-        [[rms, zcr, centroid], bins / denom]
-    ).astype(np.float32)
-
-
-def _fake_feature(payload: bytes, dim: int) -> np.ndarray:
-    """Deterministic stand-in feature: seeded by content digest."""
-    digest = hashlib.sha256(payload or b"").digest()
-    seed = int.from_bytes(digest[:4], "little")
-    rng = np.random.RandomState(seed)
-    return rng.normal(size=dim).astype(np.float32)
-
-
-def extract_features(
-    media: DataFrame,
-    dim: int = 64,
-    deterministic_fake: bool = True,
-    batch_rows: int = 32,
-) -> DataFrame:
-    """media (MEDIA_SCHEMA) -> (media_id, feature[dim], n_bytes).
-
-    Real mode would decode (PIL/ffmpeg) + embed; not available here.
-    """
-    if not deterministic_fake:
-        raise NotImplementedError(
-            "generic decode of compressed formats requires pillow/ffmpeg — "
-            "not installed here; use image_features (real BMP) / "
-            "audio_features (real WAV) or deterministic_fake=True"
-        )
-
-    def _extract(batches):
-        for pdf in batches:
-            feats = [
-                _fake_feature(p, dim).tolist() for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "feature": feats,
-                    "n_bytes": [len(p) if p is not None else 0 for p in pdf["payload"]],
-                }
-            )
-
-    return (
-        media.select("media_id", "payload")
-        .mapInPandas(_extract, schema=FEATURES_SCHEMA)
-    )
-
-
-REAL_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("feature", ArrayType(FloatType()), True),
-        StructField("status", StringType(), False),  # ok | <error class/reason>
-    ]
-)
-
-
-def image_features(media: DataFrame, grid: int = 8) -> DataFrame:
-    """REAL image feature extraction for BMP/PNG/GIF/baseline-TIFF
-    payloads: (media_id, feature[grid*grid] luminance block-means, status).
-
-    Undecodable payloads yield a null feature + status naming the reason —
-    a 100TB run must quarantine bad rows, not die on them. Codec-requiring
-    formats report 'NotImplementedError: ... pillow'."""
-
-    def _extract(batches):
-        for pdf in batches:
-            ids, feats, status = [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                try:
-                    feats.append(image_grid_feature(decode_image(p), grid).tolist())
-                    status.append("ok")
-                except (
-                    ValueError,
-                    NotImplementedError,
-                    struct.error,
-                    zlib.error,
-                    IndexError,
-                ) as e:
-                    feats.append(None)
-                    status.append(f"{type(e).__name__}: {e}"[:120])
-            yield pd.DataFrame(
-                {"media_id": ids, "feature": feats, "status": status}
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _extract, schema=REAL_FEATURES_SCHEMA
-    )
-
-
-def audio_features(media: DataFrame, n_bins: int = 13) -> DataFrame:
-    """REAL audio feature extraction for PCM WAV payloads:
-    (media_id, feature[3 + n_bins], status) — rms, zero-crossing rate,
-    spectral centroid, log-spaced magnitude bins. Same quarantine
-    semantics as image_features."""
-
-    def _extract(batches):
-        for pdf in batches:
-            ids, feats, status = [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                ids.append(mid)
-                try:
-                    samples, rate = decode_wav(p)
-                    feats.append(audio_feature(samples, rate, n_bins).tolist())
-                    status.append("ok")
-                except (ValueError, NotImplementedError, wave.Error, EOFError) as e:
-                    feats.append(None)
-                    status.append(f"{type(e).__name__}: {e}"[:120])
-            yield pd.DataFrame(
-                {"media_id": ids, "feature": feats, "status": status}
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _extract, schema=REAL_FEATURES_SCHEMA
-    )
-
-
-REAL_FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("t_ms", IntegerType(), False),
-        StructField("frame_feature", ArrayType(FloatType()), True),
-        StructField("status", StringType(), False),
-    ]
-)
-
-
-def gif_frame_features(
-    media: DataFrame,
-    every_ms: int = 100,
-    grid: int = 8,
-    max_samples: int = 64,
-) -> DataFrame:
-    """REAL frame sampling for animated GIF payloads: (media_id,
-    frame_idx, t_ms, frame_feature[grid*grid], status) — one row per
-    sample time t = 0, every_ms, 2*every_ms, ... across the animation's
-    delay timeline, each carrying the luminance block-mean feature of
-    the frame COMPOSED at that instant (``gif_frames`` honors disposal
-    and transparency). frame_idx is the decode-order index of the frame
-    on screen at t_ms; a zero-delay/static GIF yields exactly one sample
-    (t=0). ``max_samples`` caps rows per media row — when it fires the
-    row's status reads 'ok_truncated' (no silent caps). Undecodable
-    payloads quarantine as one (frame_idx=-1, null feature) row, same
-    contract as ``image_features``."""
-    if max_samples < 1:
-        raise ValueError(
-            f"max_samples must be >= 1, got {max_samples} (0 would silently "
-            "drop every decodable GIF, violating the no-silent-caps contract)"
-        )
-
-    def _extract(batches):
-        for pdf in batches:
-            mids, fidxs, tmss, feats, status = [], [], [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    # STREAM the animation: one composed frame alive at a
-                    # time, decode stops as soon as the sample cap fires —
-                    # a 1000-frame GIF sampled to 64 rows decodes only the
-                    # frames its samples actually touch.
-                    n_emitted, t, start = 0, 0, 0
-                    truncated = False
-                    last = None  # (idx, frame) — for zero-duration GIFs
-                    for i, (frame, delay) in enumerate(gif_frames(p)):
-                        end = start + delay
-                        feat = None
-                        while t < end and n_emitted < max_samples:
-                            if feat is None:
-                                feat = image_grid_feature(frame, grid).tolist()
-                            mids.append(mid)
-                            fidxs.append(i)
-                            tmss.append(t)
-                            feats.append(feat)
-                            status.append("ok")
-                            n_emitted += 1
-                            t += every_ms
-                        if n_emitted >= max_samples:
-                            truncated = True
-                            break
-                        start = end
-                        last = (i, frame)
-                    if n_emitted == 0 and not truncated:
-                        # Zero total duration (static / all-zero delays):
-                        # one sample of the final composed canvas at t=0.
-                        if last is None:
-                            raise ValueError("GIF contains no image frame")
-                        i, frame = last
-                        mids.append(mid)
-                        fidxs.append(i)
-                        tmss.append(0)
-                        feats.append(image_grid_feature(frame, grid).tolist())
-                        status.append("ok")
-                        n_emitted = 1
-                    if truncated:
-                        for j in range(len(status) - n_emitted, len(status)):
-                            status[j] = "ok_truncated"
-                except (ValueError, NotImplementedError, struct.error, IndexError) as e:
-                    mids.append(mid)
-                    fidxs.append(-1)
-                    tmss.append(0)
-                    feats.append(None)
-                    status.append(f"{type(e).__name__}: {e}"[:120])
-            yield pd.DataFrame(
-                {
-                    "media_id": mids,
-                    "frame_idx": fidxs,
-                    "t_ms": tmss,
-                    "frame_feature": feats,
-                    "status": status,
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        _extract, schema=REAL_FRAME_SCHEMA
-    )
-
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("frame_idx", IntegerType(), False),
-        StructField("frame_feature", ArrayType(FloatType()), False),
-    ]
-)
-
-
-def sample_frames(
-    video: DataFrame,
-    every_ms: int = 1000,
-    dim: int = 32,
-    deterministic_fake: bool = True,
-) -> DataFrame:
-    """video rows -> one feature row per sampled frame (1 row in, N out —
-    the mapInPandas fan-out shape for frame extraction)."""
-    if not deterministic_fake:
-        raise NotImplementedError(
-            "real frame sampling requires ffmpeg for MP4/WebM — not "
-            "installed; animated GIFs have a REAL path in "
-            "gif_frame_features; use deterministic_fake=True for the rest"
-        )
-
-    def _frames(batches):
-        for pdf in batches:
-            ids, idxs, feats = [], [], []
-            for mid, payload, dur in zip(
-                pdf["media_id"], pdf["payload"], pdf["duration_ms"]
-            ):
-                n_frames = max(1, int((dur or 0) // every_ms))
-                for i in range(n_frames):
-                    ids.append(mid)
-                    idxs.append(i)
-                    feats.append(
-                        _fake_feature((payload or b"") + i.to_bytes(4, "little"), dim).tolist()
-                    )
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "frame_feature": feats}
-            )
-
-    return (
-        video.select("media_id", "payload", "duration_ms")
-        .mapInPandas(_frames, schema=FRAME_SCHEMA)
-    )

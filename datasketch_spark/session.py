@@ -2,13 +2,14 @@
 
 Arrow on (the signature UDF, plus the substring pass's two mapInPandas
 stages when it runs, cross into Python), AQE on (skew-join
-splitting + adaptive shuffle partitions), shuffle partitions sized for the
-sandbox; on a real cluster these come from spark-submit conf.
+splitting + adaptive shuffle partitions), shuffle partitions sized to the
+local master's cores; on a real cluster these come from spark-submit conf.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -33,6 +34,17 @@ def _driver_memory() -> str:
     return os.environ.get("SPARK_DRIVER_MEM", f"{max(1, phys // 2 // 2**30)}g")
 
 
+def _shuffle_partitions(master: str) -> int | None:
+    """One shuffle partition per core of a local master (``local`` is one
+    core, ``local[N]`` / ``local[N,F]`` N, ``local[*]`` all of them); None
+    for any other master, so the cluster's spark-submit conf decides."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:,\d+)?\])?", master)
+    if m is None:
+        return None
+    cores = m.group(1) or "1"
+    return os.cpu_count() if cores == "*" else int(cores)
+
+
 def get_spark(
     app_name: str = "datasketch-spark",
     master: str | None = None,
@@ -55,7 +67,6 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", _driver_memory())
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
         # ContextCleaner only reclaims finished queries' shuffle files /
         # broadcasts when the driver GCs; with a large mostly-idle heap
         # that can be never within a session, so old query state (incl.
@@ -68,6 +79,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
+    partitions = shuffle_partitions or _shuffle_partitions(master)
+    if partitions:
+        builder = builder.config("spark.sql.shuffle.partitions", str(partitions))
     local_dirs = _local_dirs()
     if local_dirs and master.startswith("local"):
         builder = builder.config("spark.local.dir", local_dirs)

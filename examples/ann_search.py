@@ -31,7 +31,7 @@ from datasketch_spark.operators.hnsw import PartitionedHNSW
 
 
 def main() -> None:
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     rng = np.random.RandomState(7)
     centers = rng.normal(size=(20, 32)) * 4.0
     pts = np.vstack([c + rng.normal(size=(50, 32)) for c in centers])

@@ -20,7 +20,7 @@ from datasketch_spark.sources.pages import synth_pages
 
 
 def main() -> None:
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
 
     # Any DataFrame with (url, text) works; here: a synthetic Common-Crawl
     # style corpus with planted near-duplicate clusters.

@@ -23,6 +23,7 @@ first missing stage.
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import os
 import sys
@@ -30,7 +31,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from datasketch_spark.config import DedupConfig  # noqa: E402
+from datasketch_spark.config import HASH_MODES, DedupConfig  # noqa: E402
 from datasketch_spark.operators.dedup import cluster_summary, dedup_pipeline  # noqa: E402
 from datasketch_spark.session import get_spark  # noqa: E402
 from datasketch_spark.sources.io import CheckpointManager  # noqa: E402
@@ -46,12 +47,14 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--num-perm", type=int, default=128)
     p.add_argument("--shingle-k", type=int, default=5)
     p.add_argument("--bucket-cap", type=int, default=2000)
-    p.add_argument("--hash-mode", default="fast", choices=["fast", "parity"])
+    p.add_argument("--hash-mode", default="fast", choices=HASH_MODES)
     p.add_argument("--resume", action="store_true")
     p.add_argument("--substring-pass", action="store_true",
                    help="also run the exact long-substring pass and merge its edges")
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
+    if not (args.synthetic or args.input):
+        p.error("one of --input / --synthetic is required")
 
     cfg = DedupConfig(
         threshold=args.threshold,
@@ -67,27 +70,21 @@ def main(argv: list[str] | None = None) -> None:
         from datasketch_spark.sources.pages import synth_pages
 
         pages = synth_pages(spark, args.synthetic, seed=42)
-    elif args.input:
-        pages = spark.read.format(args.format).load(args.input)
+        source = {"synthetic": args.synthetic}
     else:
-        p.error("one of --input / --synthetic is required")
+        pages = spark.read.format(args.format).load(args.input)
+        source = {"input": args.input, "format": args.format}
 
     ckpt = CheckpointManager(
         root=args.output,
         format=args.format,
         resume=args.resume,
+        # Every DedupConfig field, the substring-pass toggle and the input
+        # read: changing any of them must invalidate resumable stages.
         run_config={
-            "threshold": cfg.threshold,
-            "num_perm": cfg.num_perm,
-            "b": cfg.b,
-            "r": cfg.r,
-            "shingle_k": cfg.shingle_k,
-            "hash_mode": cfg.hash_mode,
-            # In the digest: toggling the pass must invalidate resumable
-            # stages (clusters differ with/without substring edges).
+            **dataclasses.asdict(cfg),
             "substring_pass": bool(args.substring_pass),
-            "substring_k": cfg.substring_k,
-            "substring_window": cfg.substring_window,
+            "source": source,
         },
     )
     stages = dedup_pipeline(

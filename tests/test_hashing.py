@@ -9,6 +9,7 @@ import hashlib
 import struct
 
 import numpy as np
+import pytest
 
 from datasketch_spark.config import DedupConfig, optimal_param
 from datasketch_spark.functions.hashing import (
@@ -154,6 +155,18 @@ def test_dedup_config_defaults():
     assert (cfg.b, cfg.r) == (9, 13)
     cfg2 = DedupConfig(params=(16, 8))
     assert (cfg2.b, cfg2.r) == (16, 8)
+
+
+def test_dedup_config_rejects_unknown_modes():
+    # A misspelt mode used to run the else-branch (sha1-32 / est) silently.
+    for hash_mode in ("fast", "parity", "parity64"):
+        assert DedupConfig(hash_mode=hash_mode).hash_mode == hash_mode
+    for verify_mode in ("est", "exact"):
+        assert DedupConfig(verify_mode=verify_mode).verify_mode == verify_mode
+    with pytest.raises(ValueError, match="hash_mode"):
+        DedupConfig(hash_mode="parity_64")
+    with pytest.raises(ValueError, match="verify_mode"):
+        DedupConfig(verify_mode="exat")
 
 
 def test_sha1_hash64_golden():

@@ -1,19 +1,11 @@
-"""Index lifecycle (insert/remove/merge/contains), streaming dedup gates,
-multimodal plumbing."""
+"""Index lifecycle (insert/remove/merge/contains) and streaming dedup
+gates."""
 
 import time
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from datasketch_spark.config import DedupConfig
 from datasketch_spark.functions.hashing import sha1_hash32
@@ -21,7 +13,6 @@ from datasketch_spark.functions.minhash import make_signature_from_tokens_udf
 from datasketch_spark.operators.bloom import LSHBloomFilter
 from datasketch_spark.operators.index import MinHashLSHIndex
 from datasketch_spark.operators.lsh import with_signature
-from datasketch_spark.operators.multimodal import extract_features, sample_frames
 from datasketch_spark.streaming.dedup_stream import exact_dedup_stream
 
 CFG = DedupConfig(threshold=0.5)
@@ -178,38 +169,3 @@ def test_near_dedup_bloom_gate_batch(spark):
     assert got["dup"] is True
     assert got["new"] is False
 
-
-def test_multimodal_plumbing(spark):
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), False),
-            StructField("payload", BinaryType(), True),
-            StructField("duration_ms", IntegerType(), True),
-        ]
-    )
-    media = spark.createDataFrame(
-        [
-            (1, b"\x00\x01fakejpeg", None),
-            (2, b"\x00\x02fakejpeg", None),
-            (1000, None, None),  # null payload
-        ],
-        schema,
-    )
-    feats = extract_features(media, dim=16).collect()
-    by_id = {r["media_id"]: r for r in feats}
-    assert len(by_id[1]["feature"]) == 16
-    assert by_id[1]["feature"] != by_id[2]["feature"]  # content-dependent
-    assert by_id[1000]["n_bytes"] == 0  # null-safe
-    # determinism
-    feats2 = extract_features(media, dim=16).collect()
-    assert {r["media_id"]: r["feature"] for r in feats2} == {
-        r["media_id"]: r["feature"] for r in feats
-    }
-    # real mode is explicitly stubbed
-    with pytest.raises(NotImplementedError):
-        extract_features(media, deterministic_fake=False)
-    # video frame fan-out
-    video = spark.createDataFrame([(7, b"vid", 3500)], schema)
-    frames = sample_frames(video, every_ms=1000, dim=8).collect()
-    assert len(frames) == 3
-    assert {r["frame_idx"] for r in frames} == {0, 1, 2}

@@ -365,21 +365,15 @@ def test_jpeg_roundtrip_fuzz(h, w, seed, sub):
         assert np.max(np.abs(got.astype(int) - px.astype(int))) <= 4
 
 
-def test_jpeg_via_decode_image_and_features(spark):
-    # decode_image dispatches JPEG payloads; image_features extracts a
-    # real feature for them (no more NotImplementedError for baseline).
-    from datasketch_spark.operators.multimodal import decode_image, image_features
+def test_jpeg_via_decode_image_and_features():
+    # decode_image dispatches JPEG payloads, and the decoded raster gives
+    # a real grid feature (no more NotImplementedError for baseline).
+    from datasketch_spark.operators.multimodal import decode_image, image_grid_feature
 
     px = _smooth(24, 32, 9)
-    payload = encode_jpeg(px)
-    got = decode_image(payload)
+    got = decode_image(encode_jpeg(px))
     assert got.shape == (24, 32, 3)
-    media = spark.createDataFrame(
-        [(1, bytearray(payload))], ["media_id", "payload"]
-    )
-    rows = image_features(media).collect()
-    assert len(rows) == 1 and rows[0]["status"] == "ok"
-    assert len(rows[0]["feature"]) == 64
+    assert len(image_grid_feature(got)) == 64
 
 
 def test_jpeg_quality_quantized_roundtrip():

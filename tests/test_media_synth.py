@@ -102,8 +102,7 @@ def test_check_flags_pixel_corruption(spark):
 def test_check_quarantines_bitrot_instead_of_crashing(spark):
     # A bit-rotted PNG raises zlib.error and a truncated JPEG raises
     # IndexError deep in the decoders; the checker must report ok=False
-    # rows, not die (code-review r5: except list was narrower than
-    # image_features').
+    # rows, not die.
     import pandas as pd
     from pyspark.sql import functions as F
 

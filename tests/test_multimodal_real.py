@@ -1,23 +1,22 @@
-"""Real multimodal decode kernels: BMP (pure numpy) and WAV (stdlib),
-plus the Spark feature operators with quarantine semantics."""
+"""Codec-free image decoders (BMP, PNG, GIF; JPEG lives in test_jpeg.py),
+the ``decode_image`` dispatch and the grid feature, checked against
+independent test-side encoders."""
 
-import io
 import struct
-import wave
 
 import numpy as np
 import pytest
 
 from datasketch_spark.operators.multimodal import (
-    audio_feature,
-    audio_features,
     decode_bmp,
+    decode_gif,
     decode_image,
     decode_png,
-    decode_wav,
-    image_features,
     image_grid_feature,
 )
+
+# TIFF magic (II*\0, first IFD at 8): no codec-free decoder reads it.
+TIFF_MAGIC = b"II*\x00\x08\x00\x00\x00" + b"\x00" * 8
 
 
 def encode_bmp(rgb: np.ndarray) -> bytes:
@@ -32,16 +31,6 @@ def encode_bmp(rgb: np.ndarray) -> bytes:
     file_header = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(pixel_data), 0, 0, 54)
     dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pixel_data), 2835, 2835, 0, 0)
     return file_header + dib + pixel_data
-
-
-def encode_wav(samples: np.ndarray, rate: int = 8000) -> bytes:
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes((samples * 32767).astype("<i2").tobytes())
-    return buf.getvalue()
 
 
 def test_bmp_roundtrip_exact():
@@ -72,44 +61,20 @@ def test_image_grid_feature_semantics():
     assert np.allclose(f[2:], 1.0, atol=1e-3)
 
 
-def test_wav_roundtrip_and_feature():
-    rate = 8000
-    t = np.arange(rate) / rate
-    tone = 0.5 * np.sin(2 * np.pi * 440.0 * t)
-    samples, got_rate = decode_wav(encode_wav(tone, rate))
-    assert got_rate == rate
-    assert len(samples) == rate
-    assert np.abs(samples - tone).max() < 1e-3
-    feat = audio_feature(samples, rate)
-    # rms of 0.5-amplitude sine = 0.3536; centroid at 440/(rate/2) = 0.11
-    assert feat[0] == pytest.approx(0.3536, abs=0.01)
-    assert feat[2] == pytest.approx(440.0 / (rate / 2.0), abs=0.02)
-
-
-def test_real_feature_operators_with_quarantine(spark):
+def test_real_feature_operators_with_quarantine():
+    # Decodable payloads give distinct grid features; the payloads a
+    # caller must quarantine raise ValueError (truncated JPEG names JPEG).
     img_a = encode_bmp(np.full((8, 8, 3), 10, dtype=np.uint8))
     img_b = encode_bmp(np.full((8, 8, 3), 200, dtype=np.uint8))
-    media = spark.createDataFrame(
-        [(1, img_a), (2, img_b), (3, b"\xff\xd8\xffJPEGish"), (4, None)],
-        "media_id long, payload binary",
-    )
-    rows = {r["media_id"]: r for r in image_features(media, grid=4).collect()}
-    assert rows[1]["status"] == "ok" and len(rows[1]["feature"]) == 16
-    assert rows[2]["status"] == "ok"
-    assert rows[1]["feature"] != rows[2]["feature"]
-    assert rows[3]["feature"] is None
-    # Truncated JPEG junk quarantines with a named reason (baseline JPEG
-    # itself decodes for real since r5 — operators/jpeg.py).
-    assert "ValueError" in rows[3]["status"] and "JPEG" in rows[3]["status"]
-    assert rows[4]["feature"] is None
-
-    tone = encode_wav(0.3 * np.sin(np.linspace(0, 700, 4000)))
-    audio = spark.createDataFrame(
-        [(10, tone), (11, b"not audio")], "media_id long, payload binary"
-    )
-    arows = {r["media_id"]: r for r in audio_features(audio).collect()}
-    assert arows[10]["status"] == "ok" and len(arows[10]["feature"]) == 16
-    assert arows[11]["feature"] is None and arows[11]["status"]
+    feat_a = image_grid_feature(decode_image(img_a), grid=4)
+    feat_b = image_grid_feature(decode_image(img_b), grid=4)
+    assert len(feat_a) == 16
+    assert not np.array_equal(feat_a, feat_b)
+    # Truncated JPEG junk (baseline JPEG itself decodes: operators/jpeg.py).
+    with pytest.raises(ValueError, match="JPEG"):
+        decode_image(b"\xff\xd8\xffJPEGish")
+    with pytest.raises(ValueError):
+        decode_image(None)
 
 
 def encode_png(
@@ -218,16 +183,14 @@ def test_png_rejects_unsupported_variants():
         decode_image(b"RIFF\x00\x01\x00\x00WEBPVP8 ")
 
 
-def test_image_features_decodes_png_rows(spark):
+def test_image_features_decodes_png_rows():
     png = encode_png(np.full((8, 8, 3), 120, dtype=np.uint8), 2)
     bmp = encode_bmp(np.full((8, 8, 3), 120, dtype=np.uint8))
-    media = spark.createDataFrame(
-        [(1, png), (2, bmp)], "media_id long, payload binary"
-    )
-    rows = {r["media_id"]: r for r in image_features(media, grid=4).collect()}
-    assert rows[1]["status"] == "ok" and rows[2]["status"] == "ok"
     # Same pixels through either container -> identical features.
-    assert rows[1]["feature"] == rows[2]["feature"]
+    assert np.array_equal(
+        image_grid_feature(decode_image(png), grid=4),
+        image_grid_feature(decode_image(bmp), grid=4),
+    )
 
 
 def test_png_paletted_decodes_via_plte():
@@ -333,94 +296,7 @@ def encode_gif(
     return bytes(out)
 
 
-def encode_tiff(
-    px: np.ndarray, big_endian: bool = False, packbits: bool = False,
-    rows_per_strip: int | None = None, photometric: int | None = None,
-    planar: int | None = None,
-) -> bytes:
-    """Minimal stdlib baseline-TIFF writer (test-side oracle): 8-bit
-    gray/RGB, strips, optional PackBits, either byte order."""
-    bo = ">" if big_endian else "<"
-    h, w = px.shape[:2]
-    spp = px.shape[2] if px.ndim == 3 else 1
-    rps = rows_per_strip or h
-    flat = px.reshape(h, w * spp).astype(np.uint8)
-    strips = []
-    for y0 in range(0, h, rps):
-        raw = flat[y0 : y0 + rps].tobytes()
-        if packbits:
-            enc = bytearray()
-            i = 0
-            while i < len(raw):
-                # literal-only PackBits (valid, if not maximally compact)
-                run = min(128, len(raw) - i)
-                enc += bytes([run - 1]) + raw[i : i + run]
-                i += run
-            strips.append(bytes(enc))
-        else:
-            strips.append(raw)
-    n_strips = len(strips)
-    # layout: header(8) | strip data | bps array (if spp==3) | IFD
-    data_off = 8
-    offs, lens = [], []
-    pos = data_off
-    for s in strips:
-        offs.append(pos)
-        lens.append(len(s))
-        pos += len(s)
-    bps_off = pos
-    bps_extra = b""
-    if spp >= 3:
-        bps_extra = struct.pack(bo + f"{spp}H", *([8] * spp))
-        pos += len(bps_extra)
-    ifd_off = pos
-
-    def tag(tid, ttype, count, value, inline_fmt=None):
-        if inline_fmt:
-            v = struct.pack(bo + inline_fmt, *value) if isinstance(value, (list, tuple)) else struct.pack(bo + inline_fmt, value)
-            v = v.ljust(4, b"\x00")
-            return struct.pack(bo + "HHI", tid, ttype, count) + v
-        return struct.pack(bo + "HHII", tid, ttype, count, value)
-
-    entries = [
-        tag(256, 3, 1, w, "H"),
-        tag(257, 3, 1, h, "H"),
-    ]
-    if spp >= 3:
-        entries.append(tag(258, 3, spp, bps_off))
-    else:
-        entries.append(tag(258, 3, 1, 8, "H"))
-    entries.append(tag(259, 3, 1, 32773 if packbits else 1, "H"))
-    pm = photometric if photometric is not None else (2 if spp >= 3 else 1)
-    entries.append(tag(262, 3, 1, pm, "H"))
-    if planar is not None:
-        entries.append(tag(284, 3, 1, planar, "H"))
-    if n_strips == 1:
-        entries.append(tag(273, 4, 1, offs[0], "I"))
-        entries.append(tag(277, 3, 1, spp, "H"))
-        entries.append(tag(278, 3, 1, rps, "H"))
-        entries.append(tag(279, 4, 1, lens[0], "I"))
-    else:
-        n_entries = 9 + (1 if planar is not None else 0)
-        strip_arr_off = ifd_off + 2 + 12 * n_entries + 4
-        entries.append(tag(273, 4, n_strips, strip_arr_off))
-        entries.append(tag(277, 3, 1, spp, "H"))
-        entries.append(tag(278, 3, 1, rps, "H"))
-        entries.append(tag(279, 4, n_strips, strip_arr_off + 4 * n_strips))
-    entries.sort(key=lambda e: struct.unpack(bo + "H", e[:2])[0])
-    ifd = struct.pack(bo + "H", len(entries)) + b"".join(entries) + struct.pack(bo + "I", 0)
-    tail = b""
-    if n_strips > 1:
-        tail = struct.pack(bo + f"{n_strips}I", *offs) + struct.pack(
-            bo + f"{n_strips}I", *lens
-        )
-    header = struct.pack(bo + "2sHI", b"MM" if big_endian else b"II", 42, ifd_off)
-    return header + b"".join(strips) + bps_extra + ifd + tail
-
-
 def test_gif_roundtrip_paths():
-    from datasketch_spark.operators.multimodal import decode_gif
-
     rng = np.random.RandomState(46)
     palette = rng.randint(0, 256, size=(16, 3)).astype(np.uint8)
     idx = rng.randint(0, 16, size=(13, 9)).astype(np.uint8)
@@ -451,69 +327,16 @@ def test_gif_roundtrip_paths():
         decode_gif(encode_gif(idx, palette)[:30])
 
 
-def test_tiff_roundtrip_paths():
-    from datasketch_spark.operators.multimodal import decode_tiff
-
-    rng = np.random.RandomState(47)
-    rgb = rng.randint(0, 256, size=(11, 7, 3)).astype(np.uint8)
-    gray = rng.randint(0, 256, size=(6, 5)).astype(np.uint8)
-    for big_endian in (False, True):
-        for packbits in (False, True):
-            got = decode_tiff(encode_tiff(rgb, big_endian, packbits))
-            assert np.array_equal(got, rgb), (big_endian, packbits)
-    # gray replicated to RGB; multi-strip layout
-    got = decode_tiff(encode_tiff(gray, rows_per_strip=2))
-    assert np.array_equal(got, np.repeat(gray[:, :, None], 3, axis=2))
-    got = decode_tiff(encode_tiff(rgb, packbits=True, rows_per_strip=3))
-    assert np.array_equal(got, rgb)
-    # entropy-coded compression names the dependency
-    bad = bytearray(encode_tiff(rgb))
-    with pytest.raises(NotImplementedError, match="pillow"):
-        from datasketch_spark.operators.multimodal import decode_image
-
-        # compression tag patch: find tag 259 and set value to 5 (LZW)
-        import struct as _s
-
-        ifd_off = _s.unpack_from("<I", bad, 4)[0]
-        (n_tags,) = _s.unpack_from("<H", bad, ifd_off)
-        for t in range(n_tags):
-            off = ifd_off + 2 + 12 * t
-            if _s.unpack_from("<H", bad, off)[0] == 259:
-                _s.pack_into("<H", bad, off + 8, 5)
-        decode_image(bytes(bad))
-
-
-def test_tiff_photometric_and_planar():
-    from datasketch_spark.operators.multimodal import decode_tiff
-
-    rng = np.random.RandomState(50)
-    gray = rng.randint(0, 256, size=(5, 4)).astype(np.uint8)
-    # WhiteIsZero (photometric 0): luminance must invert, not pass through.
-    got = decode_tiff(encode_tiff(gray, photometric=0))
-    assert np.array_equal(got, np.repeat((255 - gray)[:, :, None], 3, axis=2))
-    # BlackIsZero stays identity.
-    got = decode_tiff(encode_tiff(gray, photometric=1))
-    assert np.array_equal(got, np.repeat(gray[:, :, None], 3, axis=2))
-    rgb = rng.randint(0, 256, size=(4, 4, 3)).astype(np.uint8)
-    # Planar (separate channel planes) and non-RGB photometrics must
-    # refuse rather than decode scrambled pixels with status ok.
-    with pytest.raises(NotImplementedError, match="planar"):
-        decode_tiff(encode_tiff(rgb, planar=2))
-    with pytest.raises(NotImplementedError, match="pillow"):
-        decode_tiff(encode_tiff(rgb, photometric=6))  # YCbCr
-    with pytest.raises(NotImplementedError, match="pillow"):
-        decode_tiff(encode_tiff(gray, photometric=3))  # palette
-
-
 def test_decode_image_dispatch_gif_tiff():
-    from datasketch_spark.operators.multimodal import decode_image
-
     rng = np.random.RandomState(48)
     palette = rng.randint(0, 256, size=(8, 3)).astype(np.uint8)
     idx = rng.randint(0, 8, size=(5, 5)).astype(np.uint8)
     assert decode_image(encode_gif(idx, palette)).shape == (5, 5, 3)
-    rgb = rng.randint(0, 256, size=(5, 5, 3)).astype(np.uint8)
-    assert decode_image(encode_tiff(rgb)).shape == (5, 5, 3)
+    # TIFF has no codec-free decoder: it is refused, never misread.
+    with pytest.raises(NotImplementedError, match="pillow"):
+        decode_image(TIFF_MAGIC)
+    with pytest.raises(NotImplementedError):
+        decode_image(b"MM\x00*" + TIFF_MAGIC[4:])
     with pytest.raises(ValueError, match="JPEG"):
         decode_image(b"\xff\xd8\xff\xe0JFIF\x00\x00")  # truncated JPEG
 
@@ -555,9 +378,7 @@ def encode_animated_gif(frames, palette, sw, sh, bg_idx=0) -> bytes:
 
 
 def test_gif_animation_composition():
-    from datasketch_spark.operators.multimodal import gif_frames
-
-    # palette: 0=black (bg), 1=red, 2=green, 3=blue
+    # palette: 0=black, 1=red, 2=green, 3=blue
     pal = np.array(
         [[0, 0, 0], [255, 0, 0], [0, 255, 0], [0, 0, 255]], np.uint8
     )
@@ -575,92 +396,39 @@ def test_gif_animation_composition():
         4,
         4,
     )
-    frames = list(gif_frames(data))
-    assert [d for _, d in frames] == [100, 100, 100, 100]
-    f1, f2, f3, f4 = (f for f, _ in frames)
-    RED, GREEN, BLUE, BLACK = pal[1], pal[2], pal[3], pal[0]
-    assert np.array_equal(f1, np.tile(RED, (4, 4, 1)))
-    # frame 2: red canvas with a green 2x2 at (1,1)
-    want2 = np.tile(RED, (4, 4, 1))
-    want2[1:3, 1:3] = GREEN
-    assert np.array_equal(f2, want2)
-    # frame 3: disposal-2 restored (1:3,1:3) to bg black, then the
-    # transparent-blue frame painted at (0,0): blue at (0,0) and (1,1),
-    # transparency leaving red/black visible at (0,1)/(1,0).
-    want3 = np.tile(RED, (4, 4, 1))
-    want3[1:3, 1:3] = BLACK
-    want3[0, 0] = BLUE
-    want3[1, 1] = BLUE
-    assert np.array_equal(f3, want3)
-    # frame 4: disposal-3 restored the pre-frame-3 canvas, then green at (2,2)
-    want4 = np.tile(RED, (4, 4, 1))
-    want4[1:3, 1:3] = BLACK
-    want4[2:4, 2:4] = GREEN
-    assert np.array_equal(f4, want4)
-
-
-def test_gif_frame_features_timeline(spark):
-    from datasketch_spark.operators.multimodal import gif_frame_features
-
-    pal = np.array([[0, 0, 0], [255, 255, 255], [128, 128, 128], [64, 64, 64]], np.uint8)
-    frames = [
-        {"idx": np.full((4, 4), 1, np.uint8), "delay_ms": 200},
-        {"idx": np.full((4, 4), 2, np.uint8), "delay_ms": 100},
-        {"idx": np.full((4, 4), 3, np.uint8), "delay_ms": 100},
-    ]
-    anim = encode_animated_gif(frames, pal, 4, 4)
-    static = encode_gif(np.full((3, 3), 2, np.uint8), pal)
-    media = spark.createDataFrame(
-        [(1, anim), (2, static), (3, b"not a gif")],
-        "media_id long, payload binary",
+    RED, GREEN, BLUE = pal[1], pal[2], pal[3]
+    # decode_gif is frame 1 of the animation; later frames are not read.
+    assert np.array_equal(decode_gif(data), np.tile(RED, (4, 4, 1)))
+    # A first frame smaller than the screen, with a transparent index,
+    # paints over the background color (bg_idx=2, green).
+    data = encode_animated_gif(
+        [{"idx": trans_blue, "left": 1, "top": 1, "trans_idx": 0}, {"idx": red}],
+        pal,
+        4,
+        4,
+        bg_idx=2,
     )
-    rows = gif_frame_features(media, every_ms=100, grid=2).collect()
-    by_media = {}
-    for r in rows:
-        by_media.setdefault(r["media_id"], []).append(r)
-    # timeline 0..400ms at 100ms: frame 0 shows at t=0,100; 1 at 200; 2 at 300
-    anim_rows = sorted(by_media[1], key=lambda r: r["t_ms"])
-    assert [(r["t_ms"], r["frame_idx"]) for r in anim_rows] == [
-        (0, 0), (100, 0), (200, 1), (300, 2),
-    ]
-    assert all(r["status"] == "ok" for r in anim_rows)
-    # white frame feature = 1.0 everywhere at t=0
-    assert all(abs(v - 1.0) < 1e-6 for v in anim_rows[0]["frame_feature"])
-    # static GIF: exactly one sample at t=0
-    assert [(r["t_ms"], r["frame_idx"], r["status"]) for r in by_media[2]] == [
-        (0, 0, "ok")
-    ]
-    # quarantine row
-    assert by_media[3][0]["frame_idx"] == -1
-    assert by_media[3][0]["frame_feature"] is None
-    # truncation cap is visible, not silent
-    rows_cap = gif_frame_features(
-        media.where("media_id = 1"), every_ms=100, max_samples=2
-    ).collect()
-    assert len(rows_cap) == 2
-    assert all(r["status"] == "ok_truncated" for r in rows_cap)
+    want = np.tile(GREEN, (4, 4, 1))
+    want[1, 1] = BLUE
+    want[2, 2] = BLUE
+    assert np.array_equal(decode_gif(data), want)
 
 
-def test_image_features_decodes_gif_tiff_rows(spark):
-    # The quarantine mapInPandas path must handle all four real formats
-    # in one batch and produce identical features for identical pixels.
+def test_image_features_decodes_gif_tiff_rows():
+    # Identical pixels give identical features through every container,
+    # the paletted GIF included; a TIFF payload is refused.
     rng = np.random.RandomState(49)
     px = rng.randint(0, 256, size=(8, 8, 3)).astype(np.uint8)
     pal = px.reshape(-1, 3)[:64]
     idx = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    media = spark.createDataFrame(
-        [
-            (1, encode_png(px, 2)),
-            (2, encode_bmp(px)),
-            (3, encode_tiff(px)),
-            (4, encode_gif(idx, pal)),  # same pixels via palette
-        ],
-        "media_id long, payload binary",
-    )
-    rows = {r["media_id"]: r for r in image_features(media, grid=4).collect()}
-    assert all(rows[i]["status"] == "ok" for i in (1, 2, 3, 4))
-    assert rows[1]["feature"] == rows[2]["feature"] == rows[3]["feature"]
-    assert rows[1]["feature"] == rows[4]["feature"]
+    feats = [
+        image_grid_feature(decode_image(p), grid=4)
+        for p in (encode_png(px, 2), encode_bmp(px), encode_gif(idx, pal))
+    ]
+    assert np.array_equal(feats[0], feats[1])
+    assert np.array_equal(feats[0], feats[2])
+    with pytest.raises(NotImplementedError):
+        decode_image(TIFF_MAGIC)
 
 
 try:
@@ -683,37 +451,12 @@ if HAVE_HYPOTHESIS:
         data=st.data(),
     )
     def test_gif_lzw_roundtrip_fuzz(h, w, n_colors, interlace, data):
-        from datasketch_spark.operators.multimodal import decode_gif
-
         seed = data.draw(st.integers(0, 2**31 - 1))
         rng = np.random.RandomState(seed)
         pal = rng.randint(0, 256, size=(n_colors, 3)).astype(np.uint8)
         idx = rng.randint(0, n_colors, size=(h, w)).astype(np.uint8)
         got = decode_gif(encode_gif(idx, pal, interlace=interlace))
         assert np.array_equal(got, pal[idx])
-
-    @settings(max_examples=30, deadline=None)
-    @given(
-        h=st.integers(1, 10),
-        w=st.integers(1, 10),
-        ch=st.sampled_from([1, 3]),
-        packbits=st.booleans(),
-        big_endian=st.booleans(),
-        rps=st.integers(1, 10),
-        data=st.data(),
-    )
-    def test_tiff_roundtrip_fuzz(h, w, ch, packbits, big_endian, rps, data):
-        from datasketch_spark.operators.multimodal import decode_tiff
-
-        seed = data.draw(st.integers(0, 2**31 - 1))
-        rng = np.random.RandomState(seed)
-        shape = (h, w) if ch == 1 else (h, w, ch)
-        px = rng.randint(0, 256, size=shape).astype(np.uint8)
-        got = decode_tiff(
-            encode_tiff(px, big_endian=big_endian, packbits=packbits, rows_per_strip=rps)
-        )
-        want = px if ch == 3 else np.repeat(px[:, :, None], 3, axis=2)
-        assert np.array_equal(got, want)
 
     @settings(max_examples=30, deadline=None)
     @given(
@@ -752,34 +495,3 @@ def test_png_roundtrip_edge_shapes():
                     np.repeat(px[:, :, :1], 3, axis=2) if ch <= 2 else px[:, :, :3]
                 )
                 assert np.array_equal(got, want), (h, w, ctype, f)
-
-
-def test_tiff_packbits_overshoot_truncated():
-    # A repeat run crossing the strip boundary must contribute EXACTLY
-    # `expected` bytes — overshoot would shift every subsequent strip's
-    # pixels while still reporting status ok (ADVICE r4).
-    from datasketch_spark.operators.multimodal import _tiff_packbits
-
-    out = _tiff_packbits(bytes([248, 7]), expected=8)  # repeat 7 ×9 > 8
-    assert bytes(out) == b"\x07" * 8
-    # Literal run overshoot, same contract.
-    out = _tiff_packbits(bytes([9]) + b"ABCDEFGHIJ", expected=8)
-    assert bytes(out) == b"ABCDEFGH"
-    # Exact fit still round-trips; short still raises.
-    assert bytes(_tiff_packbits(bytes([249, 5]), expected=8)) == b"\x05" * 8
-    with pytest.raises(ValueError, match="truncated"):
-        _tiff_packbits(bytes([250, 5]), expected=8)  # only 7 bytes
-
-
-def test_gif_frame_features_rejects_nonpositive_max_samples(spark):
-    # max_samples=0 used to silently emit zero rows for a decodable GIF.
-    from datasketch_spark.operators.multimodal import gif_frame_features
-
-    idx = np.zeros((2, 2), dtype=np.uint8)
-    pal = np.array([[255, 0, 0]] * 2, dtype=np.uint8)
-    media = spark.createDataFrame(
-        [(1, bytearray(encode_gif(idx, pal)))], ["media_id", "payload"]
-    )
-    for bad in (0, -3):
-        with pytest.raises(ValueError, match="max_samples"):
-            gif_frame_features(media, max_samples=bad)

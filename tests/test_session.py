@@ -2,7 +2,7 @@
 
 import os
 
-from datasketch_spark.session import _driver_memory
+from datasketch_spark.session import _driver_memory, _shuffle_partitions
 
 
 def _host(monkeypatch, gib: float) -> None:
@@ -25,3 +25,15 @@ def test_driver_memory_env_override(monkeypatch):
     _host(monkeypatch, 15.6)
     monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
     assert _driver_memory() == "3g"
+
+
+def test_shuffle_partitions_follow_the_master(monkeypatch):
+    monkeypatch.setattr(os, "cpu_count", lambda: 6)
+    assert _shuffle_partitions("local") == 1
+    assert _shuffle_partitions("local[3]") == 3
+    assert _shuffle_partitions("local[2,4]") == 2  # N threads, F max failures
+    assert _shuffle_partitions("local[*]") == 6
+    assert _shuffle_partitions("local[*,3]") == 6
+    # Cluster masters leave the setting to the spark-submit conf.
+    for master in ("yarn", "spark://host:7077", "k8s://https://h:443", "local-cluster[2,1,1024]"):
+        assert _shuffle_partitions(master) is None
