@@ -378,8 +378,6 @@ def decode_gif(payload: bytes) -> np.ndarray:
     bg_rgb = (
         gct[bg_idx] if gct is not None and bg_idx < len(gct) else np.zeros(3, np.uint8)
     )
-    canvas = np.empty((sh, sw, 3), dtype=np.uint8)
-    canvas[:] = bg_rgb
     trans_idx = None  # from the graphic control extension, if any
 
     while pos < len(payload):
@@ -424,6 +422,9 @@ def decode_gif(payload: bytes) -> np.ndarray:
                 raise ValueError("GIF palette index out of range")
             if top + h > sh or left + w > sw:
                 raise ValueError("GIF frame rect exceeds logical screen")
+            # Allocated only now: a header alone must not cost a full screen.
+            canvas = np.empty((sh, sw, 3), dtype=np.uint8)
+            canvas[:] = bg_rgb
             region = canvas[top : top + h, left : left + w]
             rgb = pal[idx]
             if trans_idx is not None:

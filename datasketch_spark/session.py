@@ -4,12 +4,20 @@ Arrow on (the signature UDF, plus the substring pass's two mapInPandas
 stages when it runs, cross into Python), AQE on (skew-join
 splitting + adaptive shuffle partitions), shuffle partitions sized to the
 local master's cores; on a real cluster these come from spark-submit conf.
+
+Every Python task also pays a fixed start-up cost that has nothing to do with
+its rows: PySpark calls ``importlib.invalidate_caches()``, and on Python 3.12
+and older each zip importer re-reads ``pyspark.zip``'s whole directory (about
+70-125 ms per task). On local masters the Python workers therefore fork from
+``datasketch_spark.worker_daemon``, which re-reads an archive only when it
+changed.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import site
 
 from pyspark.sql import SparkSession
 
@@ -34,15 +42,36 @@ def _driver_memory() -> str:
     return os.environ.get("SPARK_DRIVER_MEM", f"{max(1, phys // 2 // 2**30)}g")
 
 
+_LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:,\d+)?\])?")
+DAEMON_MODULE = "datasketch_spark.worker_daemon"
+
+
 def _shuffle_partitions(master: str) -> int | None:
     """One shuffle partition per core of a local master (``local`` is one
     core, ``local[N]`` / ``local[N,F]`` N, ``local[*]`` all of them); None
     for any other master, so the cluster's spark-submit conf decides."""
-    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:,\d+)?\])?", master)
+    m = _LOCAL_MASTER.fullmatch(master)
     if m is None:
         return None
     cores = m.group(1) or "1"
     return os.cpu_count() if cores == "*" else int(cores)
+
+
+def _daemon_module(master: str) -> str | None:
+    """``DAEMON_MODULE`` for a local master whose Python workers can import
+    it, else None (Spark's own daemon). The workers run ``python -m`` in this
+    process's cwd with its ``PYTHONPATH`` after Spark's zips, so those and
+    site-packages are where they look; a package found only through a
+    driver-side ``sys.path.insert`` is not importable there, and a daemon
+    that fails to import would fail every Python UDF."""
+    if _LOCAL_MASTER.fullmatch(master) is None:
+        return None
+    pythonpath = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    dirs = [os.getcwd(), *pythonpath, *site.getsitepackages()]
+    rel = os.path.join(*DAEMON_MODULE.split(".")) + ".py"
+    if any(d and os.path.isfile(os.path.join(d, rel)) for d in dirs):
+        return DAEMON_MODULE
+    return None
 
 
 def get_spark(
@@ -82,6 +111,9 @@ def get_spark(
     partitions = shuffle_partitions or _shuffle_partitions(master)
     if partitions:
         builder = builder.config("spark.sql.shuffle.partitions", str(partitions))
+    daemon = _daemon_module(master)
+    if daemon:
+        builder = builder.config("spark.python.daemon.module", daemon)
     local_dirs = _local_dirs()
     if local_dirs and master.startswith("local"):
         builder = builder.config("spark.local.dir", local_dirs)

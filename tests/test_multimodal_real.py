@@ -3,6 +3,7 @@ the ``decode_image`` dispatch and the grid feature, checked against
 independent test-side encoders."""
 
 import struct
+import tracemalloc
 
 import numpy as np
 import pytest
@@ -325,6 +326,22 @@ def test_gif_roundtrip_paths():
         decode_gif(b"GIF89a\x00")
     with pytest.raises(ValueError):
         decode_gif(encode_gif(idx, palette)[:30])
+
+
+def test_gif_header_without_frame_allocates_no_screen():
+    """The canvas is allocated at the first image descriptor: a 14-byte
+    header declaring an 8000x8000 screen (192 MB of RGB) and no frame is
+    refused without touching that much memory."""
+    header = b"GIF89a" + struct.pack("<HHBBB", 8000, 8000, 0, 0, 0) + b"\x3b"
+    assert len(header) == 14
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="GIF contains no image frame"):
+            decode_gif(header)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 2**20
 
 
 def test_decode_image_dispatch_gif_tiff():

@@ -1,8 +1,17 @@
 """Session defaults that depend on the host."""
 
 import os
+import site
 
-from datasketch_spark.session import _driver_memory, _shuffle_partitions
+import datasketch_spark
+from datasketch_spark.session import (
+    DAEMON_MODULE,
+    _daemon_module,
+    _driver_memory,
+    _shuffle_partitions,
+)
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(datasketch_spark.__file__)))
 
 
 def _host(monkeypatch, gib: float) -> None:
@@ -37,3 +46,22 @@ def test_shuffle_partitions_follow_the_master(monkeypatch):
     # Cluster masters leave the setting to the spark-submit conf.
     for master in ("yarn", "spark://host:7077", "k8s://https://h:443", "local-cluster[2,1,1024]"):
         assert _shuffle_partitions(master) is None
+
+
+def test_worker_daemon_only_where_workers_can_import_it(monkeypatch, tmp_path):
+    monkeypatch.setattr(site, "getsitepackages", lambda: [])
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    monkeypatch.chdir(REPO)  # workers start in the driver's cwd
+    for master in ("local", "local[3]", "local[*]", "local[2,4]"):
+        assert _daemon_module(master) == DAEMON_MODULE
+    # Cluster masters keep Spark's default daemon.
+    for master in ("yarn", "spark://host:7077", "local-cluster[2,1,1024]"):
+        assert _daemon_module(master) is None
+    # Found on the driver only through sys.path: Spark's default daemon.
+    monkeypatch.chdir(tmp_path)
+    assert _daemon_module("local[2]") is None
+    monkeypatch.setenv("PYTHONPATH", os.pathsep.join([str(tmp_path), REPO]))
+    assert _daemon_module("local[2]") == DAEMON_MODULE
+    monkeypatch.delenv("PYTHONPATH")
+    monkeypatch.setattr(site, "getsitepackages", lambda: [REPO])
+    assert _daemon_module("local[2]") == DAEMON_MODULE
