@@ -12,9 +12,11 @@ pages(url, warc_ts, html, text, lang)
 Every stage can checkpoint through a CheckpointManager (parquet sandbox /
 Iceberg cluster) for mid-run resume. With ``substring_pass=False`` the
 signature UDF is the only Arrow boundary and no stage runs per-row Python,
-in either verify mode. ``substring_pass=True`` adds two mapInPandas stages
-that loop in Python: ``suffix.fingerprints_table`` once per document and
-``suffix.verify_substring_pairs`` once per pair.
+in either verify mode. ``substring_pass=True`` adds two mapInArrow stages,
+each one numpy kernel per Arrow batch with no per-row Python:
+``suffix.fingerprints_table`` winnows the batch's text bytes and
+``suffix.verify_substring_pairs`` extends every aligned match of the
+batch's doc pairs.
 """
 
 from __future__ import annotations

@@ -42,7 +42,9 @@ def python_eval_count(df: DataFrame) -> int:
     """Arrow/Python eval nodes in the plan — the pipeline contract is
     exactly ONE (the signature UDF) per signature computation."""
     return len(
-        re.findall(r"ArrowEvalPython|BatchEvalPython|MapInPandas", plan_str(df, "simple"))
+        re.findall(
+            r"ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow", plan_str(df, "simple")
+        )
     )
 
 

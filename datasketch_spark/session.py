@@ -1,6 +1,6 @@
 """SparkSession factory tuned for the dedup pipeline.
 
-Arrow on (the signature UDF, plus the substring pass's two mapInPandas
+Arrow on (the signature UDF, plus the substring pass's two mapInArrow
 stages when it runs, cross into Python), AQE on (skew-join
 splitting + adaptive shuffle partitions), shuffle partitions sized to the
 local master's cores; on a real cluster these come from spark-submit conf.

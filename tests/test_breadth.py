@@ -33,7 +33,7 @@ from datasketch_spark.operators.ensemble import (
 )
 from datasketch_spark.operators.forest import ForestConfig, prefix_table, topk_query
 from datasketch_spark.operators.hll import approx_distinct, hll_estimate, hll_merge_agg, hll_sketch
-from datasketch_spark.operators.suffix import substring_dedup_edges, winnow
+from datasketch_spark.operators.suffix import substring_dedup_edges, winnow_batch
 
 TOKENS_SCHEMA = StructType(
     [
@@ -544,8 +544,8 @@ def test_hll_wrappers(spark):
 
 def test_winnow_guarantee():
     rng = np.random.RandomState(0)
-    h = rng.randint(0, 2**32, size=500).astype(np.uint64)
-    pos = winnow(h, 40)
+    data = rng.randint(0, 256, size=500 + 50 - 1).astype(np.uint8)  # 500 grams
+    _, _, pos = winnow_batch(data, [0, len(data)], 50, 40)
     # Every window of 40 consecutive grams contains a selected position.
     for start in range(0, 500 - 40 + 1):
         assert ((pos >= start) & (pos < start + 40)).any()

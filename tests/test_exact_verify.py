@@ -92,7 +92,7 @@ def test_winnow_guarantee_property():
     # Pure-numpy property check over random plants.
     import numpy as np
 
-    from datasketch_spark.operators.suffix import _gram_hashes, winnow
+    from datasketch_spark.operators.suffix import winnow_batch
 
     rng = np.random.RandomState(17)
     k, w = 11, 7
@@ -104,16 +104,17 @@ def test_winnow_guarantee_property():
         pad_b = rng.randint(0, 256, int(rng.randint(0, 40))).astype(np.uint8)
         doc_a = np.concatenate([pad_a, block, rng.randint(0, 256, 25).astype(np.uint8)])
         doc_b = np.concatenate([rng.randint(0, 256, 33).astype(np.uint8), block, pad_b])
-        ha, hb = _gram_hashes(doc_a, k), _gram_hashes(doc_b, k)
-        sa, sb = winnow(ha, w), winnow(hb, w)
+        doc, fp, pos = winnow_batch(
+            np.concatenate([doc_a, doc_b]), [0, len(doc_a), len(doc_a) + len(doc_b)], k, w
+        )
+        fps_a = dict(zip(pos[doc == 0].tolist(), fp[doc == 0].tolist()))
+        fps_b = dict(zip(pos[doc == 1].tolist(), fp[doc == 1].tolist()))
         start_a, start_b = len(pad_a), 33
         # aligned shared fingerprint inside the planted block?
         found = False
-        for pa in sa:
+        for pa, h in fps_a.items():
             off = pa - start_a
-            if 0 <= off <= block_len - k:
-                pb = start_b + off
-                if pb in set(sb.tolist()) and ha[pa] == hb[pb]:
-                    found = True
-                    break
+            if 0 <= off <= block_len - k and fps_b.get(start_b + off) == h:
+                found = True
+                break
         assert found, f"trial {trial}: no aligned shared fingerprint"

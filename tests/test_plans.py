@@ -335,6 +335,20 @@ def test_substring_candidates_no_self_pair(spark):
     assert got == [(1, 2, 0, 3), (1, 2, 9, 3)]
 
 
+def test_substring_pass_plan_budget(spark):
+    # Bucket groupBy, pair distinct and the per-pair alignment grouping;
+    # the text join-backs are broadcast at this size. One Python stage
+    # fingerprints, one extend-verifies.
+    from datasketch_spark.operators.dedup import assign_doc_ids
+    from datasketch_spark.operators.suffix import substring_dedup_edges
+    from datasketch_spark.sources.pages import synth_pages
+
+    docs = assign_doc_ids(local_checkpoint(synth_pages(spark, 200, seed=3)))
+    edges = substring_dedup_edges(docs)
+    assert shuffle_count(edges) == 3
+    assert python_eval_count(edges) == 2
+
+
 def test_pair_operator_shuffle_budgets(spark):
     import numpy as np
 
