@@ -192,8 +192,8 @@ def q_dedup_with_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = DedupConfig(threshold=0.5)
-    # candidate_pairs consumes the bands twice (hot-bucket histogram +
-    # cold anti-join); signature_table evaluates the UDF once for both.
+    # signature_table checkpoints the signatures, so the pairs plan below
+    # carries no Python UDF.
     sigs = signature_table(_docs(spark, sf_dir), cfg)
     return candidate_pairs(bands_table(sigs, cfg), cfg)
 

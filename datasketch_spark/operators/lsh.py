@@ -14,8 +14,10 @@ Reference semantics reproduced:
   - ``MinHashLSH.query`` (``lsh.py:370-432``) -> equi-join on
     ``(band_idx, band_hash)`` + union of candidates across bands
     (groupBy/collect_set).
-  - ``MinHashLSH.get_counts`` (``lsh.py:560-589``) -> bucket histogram
-    groupBy; feeds the bucket cap (our skew-handling addition).
+  - ``MinHashLSH.get_counts`` (``lsh.py:560-589``) -> ``bucket_histogram``
+    groupBy. The bucket cap (our skew-handling addition) does not read it:
+    ``bucket_pairs`` counts each bucket in-line, and ``dropped_buckets``
+    reports what the cap skipped.
 
 Everything in this module past the signature UDF (``with_signature`` /
 ``signature_table``) is pure DataFrame API — whole-stage codegen, no
@@ -24,7 +26,7 @@ Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from datasketch_spark.config import DedupConfig
@@ -130,8 +132,8 @@ def bands_table(
     write. At scale, persist this table with
     ``sources.io.write_bucketed(bands, ..., bucket_cols=["band_hash"])``:
     the bucketed scan's hash distribution satisfies the
-    ``groupBy(band_idx, band_hash)`` chains downstream, so
-    ``candidate_pairs``/``bucket_histogram`` run shuffle-free against it
+    ``(band_idx, band_hash)`` windows and groupBys downstream, so
+    ``candidate_pairs``/``bucket_histogram`` group buckets shuffle-free
     (asserted in ``test_plans.py::test_bucketed_bands_elide_groupby_shuffles``).
 
     Docs with an empty signature (null/empty text — never updated) are
@@ -160,60 +162,15 @@ def bucket_histogram(bands: DataFrame) -> DataFrame:
 
 
 def candidate_pairs(
-    bands: DataFrame,
-    cfg: DedupConfig,
-    key_col: str = "doc_id",
-    salt_groups: int | None = None,
+    bands: DataFrame, cfg: DedupConfig, key_col: str = "doc_id"
 ) -> DataFrame:
-    """All-pairs dedup: distinct (a, b), a < b, sharing >= 1 LSH bucket.
+    """All-pairs dedup: distinct (a, b), a < b, sharing >= 1 LSH bucket of
+    at most ``cfg.bucket_cap`` members (``bucket_pairs`` over the bands).
 
-    Strategy: first exclude hot buckets with a broadcast anti-join — the
-    set of buckets over ``bucket_cap`` is tiny (hot buckets = boilerplate:
-    headers, templates), and its count aggregation is map-side-combined,
-    so this costs one cheap pre-pass but guarantees no ``collect_list``
-    buffer ever exceeds bucket_cap entries (without it, one 10M-member
-    bucket OOMs the agg buffer BEFORE the size filter can drop it).
-    Then ONE shuffle (groupBy bucket, collect sorted member list) and
-    native pair expansion with nested ``transform`` — no two-sided
-    self-join shuffle. AQE handles residual skew in the final distinct.
-    A bucket of n yields n(n-1)/2 pairs; dropped buckets are surfaced by
-    ``dropped_buckets``, never silently.
-
-    ``salt_groups = g`` additionally SALTS the pair expansion: each
-    bucket's member list is split into g deterministic salt groups and the
-    n^2/2 pair generation is fanned out over the g(g+1)/2 group-pair units
-    (one row per unit, re-shuffled so different executors expand different
-    units). Without salting, a bucket at the cap expands all its pairs in
-    ONE task — fine at cap 2000 (~2M pairs), a straggler if the cap is
-    raised. Salting keeps task-level pair work ~n^2/g^2 and lets the cap
-    grow accordingly. Output is identical (exact same pair set).
-    """
-    bucket = ["band_idx", "band_hash"]
-    hot = dropped_buckets(bands, cfg).select(*bucket)
-    cold = bands.join(F.broadcast(hot), bucket, "left_anti")
-    if salt_groups and salt_groups > 1:
-        return _salted_pair_expansion(_sorted_buckets(cold, bucket, key_col), salt_groups)
-    return bucket_pairs(cold, bucket, key_col)
-
-
-def _sorted_buckets(
-    rows: DataFrame, bucket_cols: list[str], member, cap: int | None = None
-) -> DataFrame:
-    """(ids): each bucket's sorted member list, buckets of 2..cap members."""
-    keep = F.size("ids") >= 2
-    if cap is not None:
-        keep &= F.size("ids") <= cap
-    return (
-        rows.groupBy(*bucket_cols)
-        .agg(F.collect_list(member).alias("ids"))
-        .where(keep)
-        .select(F.array_sort("ids").alias("ids"))
-    )
-
-
-def _distinct_pairs(units: DataFrame, pair_array: Column) -> DataFrame:
-    """Explode an array of pair structs into a duplicate-free pair table."""
-    return units.select(F.explode(pair_array).alias("p")).select("p.*").dropDuplicates()
+    A bucket of n yields n(n-1)/2 pairs. Hot buckets (boilerplate:
+    headers, templates) over the cap never reach a member list, and
+    ``dropped_buckets`` surfaces them, never silently."""
+    return bucket_pairs(bands, ["band_idx", "band_hash"], key_col, cfg.bucket_cap)
 
 
 def bucket_pairs(
@@ -229,56 +186,28 @@ def bucket_pairs(
 
     ONE shuffle groups each bucket's members into a list, native
     ``pairs_expr`` expands it, and a final distinct removes the copies of
-    pairs that share several buckets. Buckets over ``cap`` members are
-    dropped; each caller surfaces what its cap skipped. The cap filter runs
-    after the list is built, so a caller that must bound the
-    ``collect_list`` buffer itself (``candidate_pairs``) pre-filters hot
-    buckets. With the default (a, b) ``pair``, a < b."""
-    buckets = _sorted_buckets(rows, bucket_cols, member, cap)
-    return _distinct_pairs(buckets, pairs_expr("ids", pair))
+    pairs that share several buckets. With the default (a, b) ``pair``,
+    a < b.
 
-
-def _salted_pair_expansion(buckets: DataFrame, g: int) -> DataFrame:
-    """Fan each bucket's pair expansion over g(g+1)/2 (salt_i, salt_j)
-    units. Each member belongs to exactly one deterministic salt group
-    (xxhash64 mod g), so every unordered pair appears in exactly one unit:
-    within-group pairs when i == j, full cross product when i < j. The
-    repartition spreads units across executors — that IS the salted
-    repartitioning step."""
-    units = (
-        buckets.select(
-            "ids",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(g * g - 1))
-            ).alias("unit"),
-        )
-        .withColumn("si", (F.col("unit") / g).cast("int"))
-        .withColumn("sj", F.pmod(F.col("unit"), F.lit(g)))
-        .where(F.col("si") <= F.col("sj"))
-        .withColumn(
-            "gi", F.filter("ids", lambda x: F.pmod(F.xxhash64(x), F.lit(g)) == F.col("si"))
-        )
-        .withColumn(
-            "gj", F.filter("ids", lambda x: F.pmod(F.xxhash64(x), F.lit(g)) == F.col("sj"))
-        )
-        .where((F.size("gi") >= 1) & (F.size("gj") >= 1))
-        .select("si", "sj", "gi", "gj")
-        .repartition(F.col("si"), F.col("sj"), F.xxhash64("gi", "gj"))
+    The one bucket cap: rows of a bucket with more than ``cap`` rows are
+    dropped BEFORE the ``collect_list``, by a count over a window on
+    ``bucket_cols``. The window's Exchange also serves the groupBy (no
+    extra shuffle), and a hot bucket only passes through the window's
+    spillable row buffer, so no list ever holds more than ``cap`` members
+    (one 10M-member boilerplate bucket cannot OOM an aggregation buffer).
+    Each caller surfaces what its cap skipped."""
+    if cap is not None:
+        rows = rows.withColumn(
+            "_bucket_n", F.count(F.lit(1)).over(Window.partitionBy(*bucket_cols))
+        ).where(F.col("_bucket_n") <= cap)
+    buckets = (
+        rows.groupBy(*bucket_cols)
+        .agg(F.collect_list(member).alias("ids"))
+        .where(F.size("ids") >= 2)
+        .select(F.array_sort("ids").alias("ids"))
     )
-    within = pairs_expr("gi")
-    cross = F.flatten(
-        F.transform(
-            "gi",
-            lambda x: F.transform(
-                "gj",
-                lambda y: F.struct(
-                    F.least(x, y).alias("a"), F.greatest(x, y).alias("b")
-                ),
-            ),
-        )
-    )
-    pair_expr = F.when(F.col("si") == F.col("sj"), within).otherwise(cross)
-    return _distinct_pairs(units, pair_expr).where(F.col("a") != F.col("b"))
+    pairs = buckets.select(F.explode(pairs_expr("ids", pair)).alias("p"))
+    return pairs.select("p.*").dropDuplicates()
 
 
 def dropped_buckets(bands: DataFrame, cfg: DedupConfig) -> DataFrame:

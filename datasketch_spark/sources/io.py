@@ -187,9 +187,9 @@ def write_bucketed(
     This is the co-location primitive the LSH layer's scale story leans
     on: a bands table bucketed by ``band_hash`` hash-partitions every
     bucket's rows into one file group, so the downstream
-    ``groupBy(band_idx, band_hash)`` chains in ``candidate_pairs`` /
-    ``bucket_histogram`` are satisfied by the scan's existing
-    distribution — Catalyst drops their shuffles entirely (hash
+    ``(band_idx, band_hash)`` cap window and groupBy in ``candidate_pairs``
+    and the groupBy in ``bucket_histogram`` are satisfied by the scan's
+    existing distribution — Catalyst drops their shuffles entirely (hash
     partitioning on a SUBSET of the grouping keys satisfies the clustered
     distribution). At 100 TB that shuffle is ~9 rows per doc of the whole
     corpus; writing the table bucketed once amortizes it across every

@@ -85,26 +85,3 @@ def test_bucket_histogram_and_cap(spark):
     roomy = DedupConfig(threshold=0.5, bucket_cap=100)
     assert candidate_pairs(bands, roomy).count() == 190
 
-
-def test_salted_pair_expansion_equals_unsalted(spark):
-    # Salting must fan out the expansion WITHOUT changing the pair set.
-    from datasketch_spark.config import DedupConfig
-    from datasketch_spark.operators.lsh import bands_table, candidate_pairs, with_signature
-
-    boiler = "shared boilerplate header text for every page " * 4
-    rows = [
-        (i, boiler + f"unique tail {i % 7} " * 3) for i in range(40)
-    ] + [(100 + i, f"totally different doc {i} " * 10) for i in range(10)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    cfg = DedupConfig(threshold=0.5)
-    bands = bands_table(with_signature(df, cfg), cfg).localCheckpoint(eager=True)
-    base = {
-        (r["a"], r["b"]) for r in candidate_pairs(bands, cfg).collect()
-    }
-    assert base  # the boilerplate cluster collides
-    for g in (2, 3, 5):
-        salted = {
-            (r["a"], r["b"])
-            for r in candidate_pairs(bands, cfg, salt_groups=g).collect()
-        }
-        assert salted == base, g

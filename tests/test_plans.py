@@ -32,6 +32,19 @@ def test_signature_stage_single_python_boundary(spark):
     assert shuffle_count(bands) == 0
 
 
+def _assert_cap_filters_before_collect(df):
+    # The bucket cap is a Filter directly over the window count, and every
+    # collect_list aggregate sits above it: an over-cap bucket never
+    # reaches a member list.
+    lines = plan_str(df, "simple").splitlines()
+    windows = [i for i, line in enumerate(lines) if "Window [count(1)" in line]
+    assert len(windows) == 1, "no cap window in the plan"
+    window = windows[0]
+    assert "Filter" in lines[window - 1] and "<=" in lines[window - 1], lines[window - 1]
+    collects = [i for i, line in enumerate(lines) if "collect_list" in line]
+    assert collects and max(collects) < window - 1
+
+
 def test_candidate_pairs_shuffle_budget(spark):
     df = spark.createDataFrame(
         [(i, f"text number {i} " * 10) for i in range(10)], ["doc_id", "text"]
@@ -39,10 +52,11 @@ def test_candidate_pairs_shuffle_budget(spark):
     cfg = DedupConfig(threshold=0.8)
     bands = lsh.bands_table(lsh.with_signature(df, cfg), cfg)
     pairs = lsh.candidate_pairs(bands, cfg)
-    # Hot-bucket count pre-pass + bucket groupBy + final distinct; the
-    # anti-join side is broadcast (no extra exchange on the big side).
-    assert shuffle_count(pairs) <= 3
-    assert "BroadcastExchange" in plan_str(pairs, "simple") or shuffle_count(pairs) <= 2
+    # The bucket Exchange (shared by the cap's window count and the
+    # collect_list groupBy) and the final distinct; no pre-pass, no join.
+    assert shuffle_count(pairs) == 2
+    assert "BroadcastExchange" not in plan_str(pairs, "simple")
+    _assert_cap_filters_before_collect(pairs)
 
 
 def test_parquet_pushdown_and_pruning(spark, tmp_path):
@@ -235,9 +249,9 @@ def test_dedup_pipeline_job_budget(spark):
     pages = local_checkpoint(synth_pages(spark, 200, seed=3))
     pages.count()  # the input's own job stays out of the budget
     cfg = DedupConfig(threshold=0.8)
-    assert jobs_run(spark, lambda: dedup_pipeline(pages, cfg)["clusters"].collect()) == 11
+    assert jobs_run(spark, lambda: dedup_pipeline(pages, cfg)["clusters"].collect()) == 9
     exact = DedupConfig(threshold=0.8, verify_mode="exact")
-    assert jobs_run(spark, lambda: dedup_pipeline(pages, exact)["clusters"].collect()) == 12
+    assert jobs_run(spark, lambda: dedup_pipeline(pages, exact)["clusters"].collect()) == 10
 
 
 def test_signature_table_evaluates_udf_once_for_every_consumer(spark):
@@ -375,3 +389,17 @@ def test_pair_operator_shuffle_budgets(spark):
     # Each: the bucket groupBy and the pair distinct; setjoin and simhash
     # add two exchanges per join-back side.
     assert counts == (6, 2, 6)
+
+
+def test_capped_callers_filter_before_collect_list(spark):
+    from datasketch_spark.operators.setjoin import prefix_filtered_jaccard_pairs
+    from datasketch_spark.operators.suffix import substring_candidates
+
+    toks = spark.createDataFrame(
+        [(i, [i % 3, i % 5, 7, 8]) for i in range(12)], "doc_id long, toks array<bigint>"
+    )
+    fps = spark.createDataFrame(
+        [(i % 4, i % 3, i) for i in range(12)], "doc_id long, fp long, pos long"
+    )
+    _assert_cap_filters_before_collect(prefix_filtered_jaccard_pairs(toks, "toks", 0.5))
+    _assert_cap_filters_before_collect(substring_candidates(fps))

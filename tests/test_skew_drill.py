@@ -10,9 +10,11 @@ Contract under skew:
   3. the rest of the corpus is unaffected: the same near-dup pairs come
      out with and without the boilerplate flood;
   4. identical-text floods are the EXACT-dedup stage's job
-     (hash-groupBy), which handles them in one map-side-combined agg;
-  5. salted pair expansion produces the identical pair set while
-     splitting a cap-sized bucket's n^2 work across g(g+1)/2 tasks.
+     (hash-groupBy), which handles them in one map-side-combined agg.
+
+Contracts 1-3 hold for every capped caller of ``lsh.bucket_pairs``: the
+LSH bands, the exact-substring fingerprints (``dropped_fingerprints``)
+and the set-join prefix tokens (``dropped_prefix_buckets``).
 """
 
 import numpy as np
@@ -26,6 +28,15 @@ from datasketch_spark.operators.lsh import (
     candidate_pairs,
     dropped_buckets,
     with_signature,
+)
+from datasketch_spark.operators.setjoin import (
+    dropped_prefix_buckets,
+    prefix_filtered_jaccard_pairs,
+)
+from datasketch_spark.operators.suffix import (
+    dropped_fingerprints,
+    fingerprints_table,
+    substring_dedup_edges,
 )
 
 N_BOILER = 30_000
@@ -103,20 +114,50 @@ def test_exact_stage_owns_identical_floods(spark, skew_corpus):
     assert groups[0]["canonical_id"] == 1_000_000
 
 
-def test_salted_expansion_identical_pairs(spark):
-    # A bucket AT the cap expands: salted and unsalted pair sets match
-    # exactly (the salt only re-partitions the n^2 work).
+def test_bucket_at_cap_expands_all_pairs(spark):
+    # The cap is inclusive: a bucket of exactly bucket_cap members expands.
     cfg = DedupConfig(threshold=0.8, bucket_cap=300)
     docs = spark.range(300).select(
         F.col("id").alias("doc_id"), F.lit(BOILER_TEXT).alias("text")
     )
     bands = bands_table(with_signature(docs, cfg), cfg)
-    plain = {
-        (r["a"], r["b"]) for r in candidate_pairs(bands, cfg).collect()
-    }
-    salted = {
-        (r["a"], r["b"])
-        for r in candidate_pairs(bands, cfg, salt_groups=8).collect()
-    }
-    assert len(plain) == 300 * 299 // 2
-    assert plain == salted
+    assert candidate_pairs(bands, cfg).count() == 300 * 299 // 2
+
+
+def _leaks(pairs):
+    return [p for p in pairs if p[0] >= 1_000_000 or p[1] >= 1_000_000]
+
+
+def test_substring_pass_unaffected_by_flood(spark, skew_corpus):
+    normal, union = skew_corpus
+    base = {tuple(r) for r in substring_dedup_edges(normal).collect()}
+    flooded = {tuple(r) for r in substring_dedup_edges(union).collect()}
+    assert base and base == flooded
+    assert not _leaks(flooded)
+    # The hot buckets are exactly the boilerplate text's fingerprints.
+    boiler = fingerprints_table(union.where("doc_id = 1000000"))
+    boiler_fps = {r["fp"] for r in boiler.collect()}
+    dropped = dropped_fingerprints(fingerprints_table(union)).collect()
+    assert boiler_fps and {r["fp"] for r in dropped} == boiler_fps
+    assert all(r["n_members"] >= N_BOILER for r in dropped)
+
+
+def test_prefix_join_unaffected_by_flood(spark, skew_corpus):
+    normal, union = skew_corpus
+    words = F.array_distinct(F.transform(F.split("text", " "), lambda w: F.xxhash64(w)))
+
+    def toks(df):
+        return df.select("doc_id", words.alias("toks"))
+
+    def pairs(df):
+        joined = prefix_filtered_jaccard_pairs(toks(df), "toks", 0.8, bucket_cap=1_000)
+        return {tuple(r) for r in joined.collect()}
+
+    base, flooded = pairs(normal), pairs(union)
+    assert base and base == flooded
+    assert not _leaks(flooded)
+    # The hot buckets are boilerplate prefix tokens, one member per copy.
+    boiler_toks = set(toks(union.where("doc_id = 1000000")).first()["toks"])
+    dropped = dropped_prefix_buckets(toks(union), "toks", 0.8, bucket_cap=1_000).collect()
+    assert dropped and {r["_tok"] for r in dropped} <= boiler_toks
+    assert all(r["n_members"] == N_BOILER for r in dropped)
